@@ -366,27 +366,6 @@ def _banded_candidate_pairs(
     )
 
 
-def minhash_lsh_candidates(
-    signatures: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    bands: int = 32,
-) -> DataFrame:
-    """LSH banding over ``minhash_signatures`` output (named ``mh_i``
-    columns): docs sharing any band bucket become candidate pairs.
-
-    Each band of r = num_hashes/bands signature slots hashes to one
-    bucket key; a pair with Jaccard j collides with prob 1-(1-j^r)^b —
-    with (64, 32, r=2) the curve passes 99.97% at j=0.5.
-    """
-    sig_arr = "array(" + ",".join(
-        f"mh_{i}" for i in range(num_hashes)
-    ) + ")"
-    return _banded_candidate_pairs(
-        signatures, id_col, sig_arr, num_hashes, bands
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",

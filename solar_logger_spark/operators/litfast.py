@@ -90,8 +90,8 @@ def cd_s(a: str) -> str:
 
 
 def fold_sum_s(arr: str) -> str:
-    """Left-to-right fold sum of a double array — the text twin of
-    ``pq._fold_sum``."""
+    """Left-to-right fold sum of a double array (the pinned association
+    DuckDB's list_sum shares)."""
     return f"aggregate({arr}, 0.0D, (_ac, _fx) -> _ac + _fx)"
 
 
@@ -101,9 +101,8 @@ def dot_s(a: str, b: str) -> str:
 
 
 def cosd_s(a: str, b: str) -> str:
-    """Cosine over already-double arrays — the text twin of
-    ``similarity._cos_d`` (dot / (sqrt(dot)·sqrt(dot)), each fold
-    left-to-right)."""
+    """Cosine over already-double arrays: dot / (sqrt(dot)·sqrt(dot)),
+    each fold left-to-right."""
     return (
         f"({dot_s(a, b)} / "
         f"(SQRT({dot_s(a, a)}) * SQRT({dot_s(b, b)})))"
@@ -112,7 +111,7 @@ def cosd_s(a: str, b: str) -> str:
 
 def d2_s(a: str, b: str) -> str:
     """Squared L2 between two double arrays, accumulated in dimension
-    order — the text twin of ``pq._d2``."""
+    order — cross-engine bit-reproducible."""
     return fold_sum_s(
         f"zip_with({a}, {b}, (_zx, _zy) -> (_zx - _zy) * (_zx - _zy))"
     )

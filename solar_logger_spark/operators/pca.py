@@ -200,10 +200,6 @@ def jl_project(
     return df.selectExpr(*cols)
 
 
-def _zip_add(acc, arr):
-    return F.zip_with(acc, arr, lambda a, b: a + b)
-
-
 def pca_fit_deterministic(
     df: DataFrame,
     k: int = 8,

@@ -26,6 +26,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from solar_logger_spark.operators.litfast import d2_s
+
 
 def _normalize(mat: "np.ndarray") -> "np.ndarray":
     norms = np.sqrt((mat * mat).sum(axis=1))
@@ -641,25 +643,6 @@ def load_ivfpq(
     return encoded, cents, books
 
 
-def _fold_sum(arr):
-    """Left-to-right fold sum of a double array column (the pinned
-    association DuckDB's list_sum shares)."""
-    return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _d2(a, b):
-    """Squared L2 between two double arrays, accumulated in dimension
-    order — cross-engine bit-reproducible."""
-    return _fold_sum(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)))
-
-
-def _d2_s(a: str, b: str) -> str:
-    """SQL-text twin of :func:`_d2` (litfast)."""
-    from solar_logger_spark.operators.litfast import d2_s
-
-    return d2_s(a, b)
-
-
 # -- shared deterministic-codebook machinery ---------------------------------
 # ONE copy of every determinism-critical construction (md5-seeded init
 # window, argmin tie-break, pinned member-order mean fold, ADC tail) so
@@ -766,11 +749,6 @@ def _books_lit_s(books) -> str:
     ])
 
 
-def _books_lit(books):
-    """Column form of :func:`_books_lit_s`."""
-    return F.expr(_books_lit_s(books))
-
-
 def _encode(subs, books, keep):
     """Nearest-code assignment per (vid, ms): pinned-fold squared L2,
     ties to the lowest code. Map-only: per row, fold the d2 against
@@ -780,8 +758,6 @@ def _encode(subs, books, keep):
     row inflation or the window shuffle (measured ~2x on the bench
     registry). The SQL twins' join+row_number shape selects the same
     rows from the same bits, so they stay untouched."""
-    from solar_logger_spark.operators.litfast import d2_s
-
     d2s = (
         f"transform(element_at({_books_lit_s(books)}, ms + 1), "
         f"_bc -> {d2_s('sub', '_bc')})"
@@ -921,7 +897,7 @@ def _adc_rank_tail(codes, dtab, qn, vn, rerank, k, join_cols):
         .join(F.broadcast(qn), "query_id")
         .selectExpr(
             "query_id", "neighbor_id",
-            f"{_d2_s('qv', 'cv')} AS approx_dist",
+            f"{d2_s('qv', 'cv')} AS approx_dist",
         )
     )
     w2 = Window.partitionBy("query_id").orderBy(
@@ -1003,7 +979,7 @@ def topk_pq_deterministic(
     # ADC tables: |queries| * m * ks exact subspace distances
     dtab = qsubs.join(_books_bdf(spark, books), "ms").selectExpr(
         "query_id", "ms", "code",
-        f"{_d2_s('qsub', 'c')} AS d2",
+        f"{d2_s('qsub', 'c')} AS d2",
     )
     return _adc_rank_tail(codes, dtab, qn, vn, rerank, k, ["ms", "code"])
 
@@ -1095,7 +1071,7 @@ def topk_ivfpq_deterministic(
         # the term is identically zero.
         d2s = (
             f"transform({_cents_lit_s(cs)}, "
-            f"_cc -> {_d2_s('v', '_cc')})"
+            f"_cc -> {d2_s('v', '_cc')})"
         )
         return vn.selectExpr(
             "vid", "v",
@@ -1150,7 +1126,7 @@ def topk_ivfpq_deterministic(
     qn = _unit_rows(queries, id_col, vec_col, "query_id", "qv")
     cl_s = _cents_lit_s(cents)
     pairs = (
-        f"zip_with(transform({cl_s}, _cc -> {_d2_s('qv', '_cc')}), "
+        f"zip_with(transform({cl_s}, _cc -> {d2_s('qv', '_cc')}), "
         f"sequence(0, {len(cents) - 1}), "
         "(_pd, _pi) -> struct(_pd AS d2, _pi AS cell))"
     )
@@ -1172,7 +1148,7 @@ def topk_ivfpq_deterministic(
     )
     dtab = qrsubs.join(_books_bdf(spark, books), "ms").selectExpr(
         "query_id", "cell", "ms", "code",
-        f"{_d2_s('qsub', 'c')} AS d2",
+        f"{d2_s('qsub', 'c')} AS d2",
     )
     return _adc_rank_tail(
         codes, dtab, qn, vn, rerank, k, ["cell", "ms", "code"]

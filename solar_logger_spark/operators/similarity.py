@@ -822,24 +822,6 @@ def topk_ivf(
     )
 
 
-def _cos_d(a: Column, b: Column) -> Column:
-    """cosine over ALREADY-double arrays: the same dot/(norm·norm)
-    shape as :func:`cosine` without the redundant per-element cast."""
-    d = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    na = F.sqrt(F.aggregate(
-        F.zip_with(a, a, lambda x, y: x * y), F.lit(0.0),
-        lambda acc, x: acc + x,
-    ))
-    nb = F.sqrt(F.aggregate(
-        F.zip_with(b, b, lambda x, y: x * y), F.lit(0.0),
-        lambda acc, x: acc + x,
-    ))
-    return d / (na * nb)
-
-
 def topk_ivf_deterministic(
     corpus: DataFrame,
     queries: DataFrame,

@@ -23,9 +23,12 @@ from pyspark.sql import DataFrame
 
 def spread_small(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     """Round-robin ``df`` across ``min_parts`` (default: the session's
-    ``defaultParallelism``) partitions iff it currently has fewer."""
+    ``defaultParallelism``) partitions iff it currently has fewer.
+    Raises ``ValueError`` when ``min_parts`` is below 1."""
+    if min_parts is not None and min_parts < 1:
+        raise ValueError(f"min_parts must be >= 1, got {min_parts}")
     sc = df.sparkSession.sparkContext
-    target = int(min_parts) if min_parts else sc.defaultParallelism
+    target = int(min_parts) if min_parts is not None else sc.defaultParallelism
     try:
         n = df.rdd.getNumPartitions()
     except Exception:  # pragma: no cover - planning quirk: spread anyway

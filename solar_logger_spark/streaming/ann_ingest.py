@@ -393,12 +393,6 @@ def _det_train(corpus, n_cells, m, ks, lloyd_rounds, id_col, vec_col):
     return cents, books, rsubs, seeds
 
 
-def _cents_lit(cents):
-    from solar_logger_spark.operators.litfast import dlit
-
-    return dlit(list(cents))
-
-
 def _det_residual_subs(vn, cents, m, dsub):
     """(vid, cell, sub) residual subvectors with pinned-L2 cell
     assignment — map-only (r12): fold the pinned d2 against each

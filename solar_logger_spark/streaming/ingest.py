@@ -13,9 +13,14 @@ and backpressure/batching/restart-recovery come from the micro-batch
 engine + checkpointing (T3/T6 — strictly stronger than the reference's
 lossy in-memory queue; divergence documented in SURVEY §2.9).
 
+The status table is a maintained latest-per-device dimension in the
+io/merge snapshot store (``<out>/_status_dim``): each micro-batch folds
+its status messages in with a ts-guarded MERGE and an atomic pointer
+swap, then gates its points against the result.
+
 Scale notes: topic parsing, time extraction and the unpivot are
 codegen'd column ops; the only Python is the Arrow-batched payload
-decode. The status gate broadcasts a per-device latest-status table —
+decode. The status gate broadcasts the per-device status dimension —
 at 1000 executors the data stream never shuffles for the gate. Sink
 files are partitioned by (measurement, date) so downstream time-range +
 measurement queries prune partitions instead of scanning.
@@ -32,7 +37,10 @@ from pyspark.sql.types import (
     BinaryType, StringType, StructField, StructType, TimestampType,
 )
 
-from solar_logger_spark.operators.asof import latest_per_key, status_gate
+from solar_logger_spark.io import merge as M
+# status_gate stays importable from here: perfbench's traced ingest run
+# hooks both operators by this module's names
+from solar_logger_spark.operators.asof import latest_per_key, status_gate  # noqa: F401
 from solar_logger_spark.streaming.decode import decode_packets
 
 # Raw message schema — what any transport (MQTT source, file replay,
@@ -92,20 +100,24 @@ def data_points(df: DataFrame) -> DataFrame:
 
 
 def gated_batch(raw: DataFrame) -> DataFrame:
-    """Batch/foreachBatch form of the reference's online gate (J1/T5):
-    decode data messages, keep only devices whose *latest* status says
-    online. The latest-status reduction is tiny and broadcast — the
-    point stream itself never shuffles."""
-    status = status_updates(raw)
-    points = data_points(raw)
-    return status_gate(
-        points.withColumnRenamed("measurement", "device"), status, keys=["device"]
-    ).withColumnRenamed("device", "measurement")
+    """Batch form of the online gate: the same broadcast semi-join as
+    :func:`gated_batch_from_dimension`, against the latest status per
+    device reduced from ``raw``'s own status messages."""
+    latest = latest_per_key(status_updates(raw), ["device"], payload_cols=["status"])
+    return gated_batch_from_dimension(raw, latest)
 
 
 class IngestBatchProcessor:
     """foreachBatch body for the ingest sink — pulled into a class so
     idempotency and gating are unit-testable without a live stream.
+
+    Status (S3, the reference's ``self._status`` dict,
+    ``mqtt_classes.py:114-119``): each batch's status messages fold
+    into the maintained dimension at ``<out>/_status_dim``
+    (:func:`status_dimension_sink`), and the batch's points are then
+    gated against it (:func:`gated_batch_from_dimension`). Until the
+    first status message arrives nothing is gated; after that, a device
+    without an ``online`` row is.
 
     Effectively-once (T6): foreachBatch is at-least-once — after a crash
     between sink write and checkpoint commit, the same ``epoch_id``
@@ -113,25 +125,23 @@ class IngestBatchProcessor:
     epoch, written *after* the points append) lets the replay detect the
     duplicate and skip the append, upgrading the plain-parquet sink to
     effectively-once. (A transactional table format gets this from its
-    commit protocol; this is the same idea scaled down.)
+    commit protocol; this is the same idea scaled down.) A crash inside
+    the status fold leaves no points and no marker, and the ts-guarded
+    MERGE makes the replayed fold a no-op for rows already folded.
+
+    Upgrade: sink directories written before the dimension existed keep
+    their learned statuses in a ``<out>/_status`` parquet table. An
+    absent dimension is seeded once from it, so a device last seen
+    offline stays gated.
     """
 
-    def __init__(
-        self,
-        output_dir: str,
-        gate_online: bool = True,
-        gate_mode: str = "batch",
-    ) -> None:
-        if gate_mode not in ("batch", "dimension"):
-            raise ValueError(
-                f"gate_mode must be 'batch' or 'dimension', got {gate_mode!r}"
-            )
-        self.status_path = os.path.join(output_dir, "_status")
+    def __init__(self, output_dir: str, gate_online: bool = True) -> None:
+        self.legacy_status_path = os.path.join(output_dir, "_status")
         self.dim_path = os.path.join(output_dir, "_status_dim")
         self.points_path = os.path.join(output_dir, "points")
         self.commits_path = os.path.join(output_dir, "_commits")
         self.gate_online = gate_online
-        self.gate_mode = gate_mode
+        self._fold_status = status_dimension_sink(self.dim_path)
 
     def _commit_marker(self, epoch_id: int) -> str:
         return os.path.join(self.commits_path, f"epoch-{epoch_id}")
@@ -139,12 +149,9 @@ class IngestBatchProcessor:
     def __call__(self, batch: DataFrame, epoch_id: int) -> None:
         if os.path.exists(self._commit_marker(epoch_id)):
             return  # crash-replay of an already-committed batch
-        if self.gate_mode == "dimension":
-            points = self._dimension_gated_points(batch, epoch_id)
-        else:
-            points = self._batch_gated_points(batch)
         (
-            points.withColumn("date", F.to_date("ts"))
+            self._gated_points(batch, epoch_id)
+            .withColumn("date", F.to_date("ts"))
             # time-sorted within each written file → tight per-row-group
             # ts min/max stats, so time-range scans skip row groups even
             # inside a partition
@@ -157,70 +164,18 @@ class IngestBatchProcessor:
         with open(self._commit_marker(epoch_id), "w"):
             pass
 
-    def _batch_gated_points(self, batch: DataFrame) -> DataFrame:
+    def _gated_points(self, batch: DataFrame, epoch_id: int) -> DataFrame:
         spark_b = batch.sparkSession
-        # 1. fold this batch's status updates into the persisted
-        #    latest-per-device table (the reference's ``self._status``
-        #    dict, mqtt_classes.py:114-119 — bounded: one row per device)
-        status = status_updates(batch)
-        try:
-            status = spark_b.read.parquet(self.status_path).unionByName(status)
-        except Exception:
-            pass  # first batch: no persisted status yet
-        latest = latest_per_key(status, ["device"], payload_cols=["status"])
-        # tiny by construction (≤ #devices rows) — safe to materialize on
-        # the driver, which also breaks the read-then-overwrite cycle
-        latest_rows = latest.collect()
-        # 2. decode + gate against the merged status
-        points = data_points(batch)
-        if self.gate_online and latest_rows:
-            latest_df = spark_b.createDataFrame(latest_rows, latest.schema)
-            points = status_gate(
-                points.withColumnRenamed("measurement", "device"),
-                latest_df,
-                keys=["device"],
-            ).withColumnRenamed("device", "measurement")
-        if latest_rows:
-            spark_b.createDataFrame(latest_rows, latest.schema).write.mode(
-                "overwrite"
-            ).parquet(self.status_path)
-        return points
-
-    def _dimension_gated_points(
-        self, batch: DataFrame, epoch_id: int
-    ) -> DataFrame:
-        """The composed dimension path: fold the batch's status
-        messages into the MAINTAINED snapshot-store dimension
-        (:func:`status_dimension_sink` — ts-guarded MERGE, so a crash
-        replay re-upserting the same rows is a no-op), then gate the
-        batch's points against the refreshed dimension. The per-batch
-        latest-status reduction of the default path disappears: the
-        dimension already IS that reduction, maintained incrementally.
-
-        Mode migration: a deployment switching from ``gate_mode=
-        'batch'`` (state in ``_status``) must not forget its learned
-        statuses, so an absent dimension is seeded ONCE from the
-        persisted ``_status`` table before the first fold —
-        previously-offline devices stay gated across the switch. (The
-        reverse switch needs no seed: batch mode re-reduces from its
-        own ``_status``, which dimension mode never modifies.)"""
-        from solar_logger_spark.io import merge as M
-
-        if (
-            M.current_snapshot(self.dim_path) is None
-            and os.path.exists(self.status_path)
+        if M.current_snapshot(self.dim_path) is None and os.path.exists(
+            self.legacy_status_path
         ):
-            M.init_table(
-                batch.sparkSession.read.parquet(self.status_path),
-                self.dim_path,
-            )
-        status_dimension_sink(self.dim_path)(batch, epoch_id)
-        if not self.gate_online:
+            M.init_table(spark_b.read.parquet(self.legacy_status_path), self.dim_path)
+        self._fold_status(batch, epoch_id)
+        if not self.gate_online or M.current_snapshot(self.dim_path) is None:
             return data_points(batch)
-        if M.current_snapshot(self.dim_path) is None:
-            return data_points(batch)  # no status seen yet: ungated
-        dim = M.read_table_snapshot(batch.sparkSession, self.dim_path)
-        return gated_batch_from_dimension(batch, dim)
+        return gated_batch_from_dimension(
+            batch, M.read_table_snapshot(spark_b, self.dim_path)
+        )
 
 
 def ingest_query(
@@ -230,24 +185,17 @@ def ingest_query(
     checkpoint_dir: str,
     gate_online: bool = True,
     available_now: bool = True,
-    gate_mode: str = "batch",
 ) -> StreamingQuery:
     """End-to-end ingest: parquet-file message stream → decoded gated
     points → parquet append sink partitioned by (measurement, date).
 
-    ``foreachBatch`` is used so the online gate sees each micro-batch's
-    status updates merged with the persisted status table — the same
-    read-your-latest-status semantics as the reference's in-memory
-    ``self._status`` dict, but restart-safe (status survives in the sink
-    directory's ``_status`` subtable).
-
-    ``gate_mode``: ``"batch"`` re-reduces latest-per-device from the
-    raw status history each delivery (the original path);
-    ``"dimension"`` maintains the :func:`status_dimension_sink`
-    snapshot-store dimension incrementally (ts-guarded MERGE) and
-    gates via :func:`gated_batch_from_dimension` — same gate
-    semantics, but the status reduction is table state instead of a
-    per-batch recompute, and the dimension is independently queryable.
+    ``foreachBatch`` runs :class:`IngestBatchProcessor`, so the online
+    gate sees each micro-batch's status updates folded into the
+    persisted latest-status dimension (``<out>/_status_dim``) — the
+    same read-your-latest-status semantics as the reference's
+    in-memory ``self._status`` dict, but restart- and crash-safe.
+    ``gate_online=False`` still maintains the dimension but lets every
+    device's points through.
     """
     raw = (
         spark.readStream.schema(RAW_SCHEMA)
@@ -255,9 +203,7 @@ def ingest_query(
         .parquet(input_dir)
     )
     writer = raw.writeStream.foreachBatch(
-        IngestBatchProcessor(
-            output_dir, gate_online=gate_online, gate_mode=gate_mode
-        )
+        IngestBatchProcessor(output_dir, gate_online=gate_online)
     ).option("checkpointLocation", checkpoint_dir)
     if available_now:
         writer = writer.trigger(availableNow=True)
@@ -275,8 +221,11 @@ def status_dimension_sink(table_dir: str, keep_snapshots: int = 2):
     snapshot store: ``status_gate`` recomputes latest-per-key per query
     (fine at any scale — the status side broadcasts), while this sink
     materializes the same reduction once as queryable table state,
-    which is what a fleet dashboard or an external gate consumer reads.
-    Differential-pinned in tests: streamed upserts == batch
+    which is what the ingest sink's gate, a fleet dashboard or an
+    external gate consumer reads. Each fold commits a new snapshot and
+    then swaps ``_CURRENT`` atomically, so a crash at any step leaves
+    the previous snapshot live, and replaying the batch re-applies the
+    same upsert. Differential-pinned in tests: streamed upserts == batch
     ``latest_per_key`` over the full status history.
 
     Usage::
@@ -285,9 +234,7 @@ def status_dimension_sink(table_dir: str, keep_snapshots: int = 2):
              .foreachBatch(status_dimension_sink(dim_dir))
              .option("checkpointLocation", ckpt).start())
     """
-    from solar_logger_spark.io.merge import upsert_sink
-
-    inner = upsert_sink(
+    inner = M.upsert_sink(
         table_dir, keys=["device"], order_col="ts",
         keep_snapshots=keep_snapshots,
     )
@@ -306,7 +253,7 @@ def gated_batch_from_dimension(
     status stream: decode the batch's data messages and keep devices
     whose dimension row says online. The dimension is one row per
     device — always broadcastable, so the point stream never shuffles
-    (same plan shape as :func:`gated_batch`)."""
+    (:func:`gated_batch` runs this same semi-join)."""
     online = dimension.filter(F.col("status") == "online").select("device")
     points = data_points(raw).withColumnRenamed("measurement", "device")
     return (

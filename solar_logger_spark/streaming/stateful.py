@@ -3,8 +3,8 @@
 The reference consults an in-memory last-status dict per message
 (``src/classes/mqtt_classes.py:114-119,187-198,229-233``): a data packet
 is processed only if its device's most recent status message said
-``online``. ``ingest.py`` emulates that per micro-batch with a persisted
-status table; this module is the *streaming-native* form (SURVEY §2.9
+``online``. ``ingest.py`` emulates that per micro-batch with a maintained
+status dimension; this module is the *streaming-native* form (SURVEY §2.9
 T5): ``applyInPandasWithState`` holding one tiny state row per device in
 Spark's checkpointed state store.
 
@@ -23,7 +23,7 @@ grows with throughput.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Generator, Iterator
 from typing import Any
 
 import pandas as pd
@@ -44,12 +44,13 @@ GATED_SCHEMA = StructType([
 _STATE_SCHEMA = StructType([StructField("status", StringType())])
 
 
-def _gate_group(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
+def _replay(
+    status: str, pdfs: Iterator[pd.DataFrame]
+) -> Generator[pd.DataFrame, None, str]:
     """Replay one device's batch in arrival order against its last
-    status (reference ``_on_message`` semantics, serialized per device)."""
-    (status,) = state.get if state.exists else ("offline",)
+    status (reference ``_on_message`` semantics, serialized per device):
+    yields the data messages that arrive while the device is online and
+    returns the status after the last message."""
     for pdf in pdfs:
         pdf = pdf.sort_values("arrival_ts", kind="mergesort")
         keep: list[dict[str, Any]] = []
@@ -66,6 +67,16 @@ def _gate_group(
                 )
         if keep:
             yield pd.DataFrame(keep)
+    return status
+
+
+def _gate_group(
+    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    """``applyInPandasWithState`` body: :func:`_replay` against the
+    device's stored status."""
+    (status,) = state.get if state.exists else ("offline",)
+    status = yield from _replay(status, pdfs)
     state.update((status,))
 
 
@@ -107,22 +118,7 @@ class _GateProcessor(StatefulProcessor):
 
     def handleInputRows(self, key, rows, timer_values) -> Iterator[pd.DataFrame]:
         status = self._status.get()[0] if self._status.exists() else "offline"
-        for pdf in rows:
-            pdf = pdf.sort_values("arrival_ts", kind="mergesort")
-            keep: list[dict[str, Any]] = []
-            for row in pdf.itertuples(index=False):
-                if row.kind == "status":
-                    status = bytes(row.payload).decode("ascii", errors="replace")
-                elif row.kind == "data" and status == "online":
-                    keep.append(
-                        {
-                            "device": row.device,
-                            "payload": row.payload,
-                            "arrival_ts": row.arrival_ts,
-                        }
-                    )
-            if keep:
-                yield pd.DataFrame(keep)
+        status = yield from _replay(status, rows)
         self._status.update((status,))
 
     def handleInitialState(self, key, initial_state, timer_values) -> None:

@@ -40,7 +40,7 @@ def test_plans_match_golden(spark, sf_dir):
         "change is intentional, regenerate with tools/plan_audit.py "
         f"--write-golden. Diffs: {json.dumps(diffs, indent=1)}"
     )
-    # the flag set itself stays pinned to the 9 documented-intentional
+    # the flag set itself stays pinned to the 10 documented-intentional
     # shapes — any NEW flagged query is a regression even if golden
     # were regenerated without review
     flagged = {n for n, r in got.items() if r["flags"]}
@@ -49,5 +49,5 @@ def test_plans_match_golden(spark, sf_dir):
         "similarity_cosine_topk", "contrastive_hard_negatives",
         "text_tfidf_top_terms", "corpus_mix_weights",
         "basket_affinity_parts", "profile_columns_exact",
-        "events_rfm_segments",
+        "events_rfm_segments", "text_trigram_lm_quality",
     }

@@ -6,6 +6,7 @@ the decode path, status transitions, topic routing."""
 
 from __future__ import annotations
 
+import os
 import struct
 from datetime import datetime
 
@@ -163,6 +164,13 @@ def test_gated_batch_drops_offline_device(spark):
 # end-to-end streaming: file replay → decode → gate → partitioned sink
 # ---------------------------------------------------------------------------
 
+def _dim_status(spark, out_dir):
+    from solar_logger_spark.io import merge as M
+
+    snap = M.read_table_snapshot(spark, out_dir + "/_status_dim")
+    return {r.device: r.status for r in snap.collect()}
+
+
 def test_ingest_query_end_to_end(spark, tmp_path):
     input_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "out")
@@ -190,11 +198,11 @@ def test_ingest_query_end_to_end(spark, tmp_path):
     got = {r.field: r.value for r in rows}
     for f, v in dc_values.items():
         assert got[f] == pytest.approx(v)
-    # restart-safe status table persisted, latest per device
-    status = {r.device: r.status for r in spark.read.parquet(out_dir + "/_status").collect()}
-    assert status == {"dc-1": "online", "mx-1": "offline"}
+    # restart-safe latest-status dimension, queryable table state
+    assert _dim_status(spark, out_dir) == {"dc-1": "online", "mx-1": "offline"}
 
-    # second run: mx-1 comes online, its packets now pass the gate
+    # second run: mx-1 comes online — the ts-guarded MERGE advances the
+    # dimension and its packets now pass the gate
     _raw_df(
         spark,
         [
@@ -207,16 +215,17 @@ def test_ingest_query_end_to_end(spark, tmp_path):
     rows2 = spark.read.parquet(out_dir + "/points").collect()
     assert {r.measurement for r in rows2} == {"dc-1", "mx-1"}
     assert len(rows2) == len(D.DC_FIELDS) + len(D.MX_FIELDS)
+    assert _dim_status(spark, out_dir) == {"dc-1": "online", "mx-1": "online"}
 
 
 def test_ingest_query_dimension_gate_end_to_end(spark, tmp_path):
-    """The composed loop (VERDICT r6 #7): status sink → maintained
-    snapshot-store dimension → dimension-gated points → parquet. Same
-    scenario as the batch-mode e2e, so the two gate modes must agree:
-    offline devices gated out, later online status re-admits them, and
-    the dimension itself is a queryable latest-per-device table."""
-    from solar_logger_spark.io import merge as M
-
+    """The composed loop: status sink → maintained snapshot-store
+    dimension → dimension-gated points → parquet, delivered in a single
+    file so status and packets share one micro-batch. Offline devices
+    are gated out, later online status re-admits them, and the
+    dimension itself is a queryable latest-per-device table. The
+    dimension is the only gate, so the removed ``gate_mode`` switch is
+    rejected."""
     input_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
@@ -232,10 +241,9 @@ def test_ingest_query_dimension_gate_end_to_end(spark, tmp_path):
             ("mate/dc-1/dc-status", dc_pkt, ts),
             ("mate/mx-1/mx-status", mx_pkt, ts),
         ],
-    ).write.parquet(input_dir)
+    ).coalesce(1).write.parquet(input_dir)
 
-    q = I.ingest_query(spark, input_dir, out_dir, ckpt,
-                       gate_mode="dimension")
+    q = I.ingest_query(spark, input_dir, out_dir, ckpt)
     q.awaitTermination(120)
 
     rows = spark.read.parquet(out_dir + "/points").collect()
@@ -245,13 +253,7 @@ def test_ingest_query_dimension_gate_end_to_end(spark, tmp_path):
     for f, v in dc_values.items():
         assert got[f] == pytest.approx(v)
     # the maintained dimension is independently queryable table state
-    dim = {
-        r.device: r.status
-        for r in M.read_table_snapshot(
-            spark, out_dir + "/_status_dim"
-        ).collect()
-    }
-    assert dim == {"dc-1": "online", "mx-1": "offline"}
+    assert _dim_status(spark, out_dir) == {"dc-1": "online", "mx-1": "offline"}
 
     # second delivery: mx-1 comes online — the ts-guarded MERGE
     # advances the dimension and its packets now pass the gate
@@ -261,22 +263,15 @@ def test_ingest_query_dimension_gate_end_to_end(spark, tmp_path):
             ("mate/mx-1/status", b"online", datetime(2024, 1, 2)),
             ("mate/mx-1/mx-status", mx_pkt, datetime(2024, 1, 2)),
         ],
-    ).write.mode("append").parquet(input_dir)
-    q2 = I.ingest_query(spark, input_dir, out_dir, ckpt,
-                        gate_mode="dimension")
+    ).coalesce(1).write.mode("append").parquet(input_dir)
+    q2 = I.ingest_query(spark, input_dir, out_dir, ckpt)
     q2.awaitTermination(120)
     rows2 = spark.read.parquet(out_dir + "/points").collect()
     assert {r.measurement for r in rows2} == {"dc-1", "mx-1"}
     assert len(rows2) == len(D.DC_FIELDS) + len(D.MX_FIELDS)
-    dim2 = {
-        r.device: r.status
-        for r in M.read_table_snapshot(
-            spark, out_dir + "/_status_dim"
-        ).collect()
-    }
-    assert dim2 == {"dc-1": "online", "mx-1": "online"}
+    assert _dim_status(spark, out_dir) == {"dc-1": "online", "mx-1": "online"}
 
-    with pytest.raises(ValueError, match="gate_mode"):
+    with pytest.raises(TypeError, match="gate_mode"):
         I.IngestBatchProcessor(out_dir, gate_mode="nope")
 
 
@@ -1123,31 +1118,83 @@ def test_status_dimension_stream_equals_batch_latest(spark, tmp_path):
     assert {r.measurement for r in gated.collect()} <= {"mx-1"}
 
 
-def test_gate_mode_switch_seeds_dimension_from_status(spark, tmp_path):
-    """Switching a deployment from gate_mode='batch' to 'dimension'
-    must not forget learned statuses: the first dimension-mode batch
-    seeds the dimension from the persisted _status table, so a device
-    the batch-mode run learned was offline stays gated even when the
-    new delivery carries no status messages at all."""
+def test_legacy_status_table_seeds_dimension(spark, tmp_path):
+    """A sink directory written before the status dimension existed
+    holds its learned statuses in a ``_status`` parquet table. The
+    first batch seeds the dimension from it, so a device last seen
+    offline stays gated even when the new delivery carries no status
+    messages at all."""
     out_dir = str(tmp_path / "out")
     ts = datetime(2024, 1, 1)
     dc_pkt, _ = _packet("dc-1", 1704067200, 7.0)
     mx_pkt, _ = _packet("mx-1", 1704153600, 8.0)
-    batch_proc = I.IngestBatchProcessor(out_dir, gate_mode="batch")
-    batch_proc(
-        _raw_df(spark, [
-            ("mate/dc-1/status", b"online", ts),
-            ("mate/mx-1/status", b"offline", ts),
-        ]),
-        0,
-    )
-    dim_proc = I.IngestBatchProcessor(out_dir, gate_mode="dimension")
-    dim_proc(
+    # the legacy layout: latest_per_key's (device, ts, status)
+    spark.createDataFrame(
+        [("dc-1", ts, "online"), ("mx-1", ts, "offline")],
+        "device string, ts timestamp, status string",
+    ).write.parquet(out_dir + "/_status")
+    I.IngestBatchProcessor(out_dir)(
         _raw_df(spark, [
             ("mate/dc-1/dc-status", dc_pkt, ts),
             ("mate/mx-1/mx-status", mx_pkt, ts),  # no status rows here
         ]),
-        1,
+        0,
     )
+    assert _dim_status(spark, out_dir) == {"dc-1": "online", "mx-1": "offline"}
     rows = spark.read.parquet(out_dir + "/points").collect()
     assert {r.measurement for r in rows} == {"dc-1"}  # mx-1 stayed gated
+
+
+def test_status_fold_crash_replays_exactly_once(spark, tmp_path, monkeypatch):
+    """A crash inside the status fold — here the ``_CURRENT`` swap, at
+    the dimension's bootstrap and at a later MERGE — fails the batch
+    before any point is written; replaying the same epoch leaves the
+    sink with exactly the online devices' points, none twice."""
+    from solar_logger_spark.io import merge as M
+
+    out_dir = str(tmp_path / "out")
+    swap = M._swap_pointer
+    armed = []
+
+    def crash_once(table_dir, name):
+        if armed:
+            armed.pop()
+            raise OSError("injected crash before the _CURRENT swap")
+        swap(table_dir, name)
+
+    monkeypatch.setattr(M, "_swap_pointer", crash_once)
+    t = lambda d: datetime(2024, 1, d)  # noqa: E731
+    dc_pkt, _ = _packet("dc-1", 1704067200, 7.0)
+    mx_pkt, _ = _packet("mx-1", 1704153600, 8.0)
+    fx_pkt, _ = _packet("fx-1", 1704240000, 9.0)
+    epochs = [
+        [
+            ("mate/dc-1/status", b"online", t(1)),
+            ("mate/mx-1/status", b"offline", t(1)),
+            ("mate/dc-1/dc-status", dc_pkt, t(1)),
+            ("mate/mx-1/mx-status", mx_pkt, t(1)),
+        ],
+        [
+            ("mate/fx-1/status", b"online", t(2)),
+            ("mate/dc-1/status", b"offline", t(2)),
+            ("mate/fx-1/fx-status", fx_pkt, t(2)),
+            ("mate/dc-1/dc-status", dc_pkt, t(2)),
+            ("mate/mx-1/mx-status", mx_pkt, t(2)),
+        ],
+    ]
+    proc = I.IngestBatchProcessor(out_dir)
+    for epoch_id, rows in enumerate(epochs):
+        batch = _raw_df(spark, rows)
+        armed.append(True)
+        with pytest.raises(OSError, match="injected crash"):
+            proc(batch, epoch_id)
+        assert not os.path.exists(proc._commit_marker(epoch_id))
+        proc(batch, epoch_id)  # the at-least-once replay
+
+    points = spark.read.parquet(out_dir + "/points")
+    assert points.count() == points.dropDuplicates(["measurement", "ts", "field"]).count()
+    per_device = {r.measurement: r["count"] for r in points.groupBy("measurement").count().collect()}
+    assert per_device == {"dc-1": len(D.DC_FIELDS), "fx-1": len(D.FX_FIELDS)}
+    assert _dim_status(spark, out_dir) == {
+        "dc-1": "offline", "fx-1": "online", "mx-1": "offline",
+    }

@@ -8,14 +8,16 @@ Flags plan smells that matter at 100 TB:
   * a Window directly over an Exchange SinglePartition — a global
     analytic that moves the whole dataset to one task
 
-Queries that intentionally trip the join flag (9 at r8 HEAD):
+Queries that intentionally trip the join flag (10):
 similarity_cosine_topk and contrastive_hard_negatives (brute-force
 scorer: corpus × broadcast query set IS the algorithm);
 text_tfidf_top_terms, tpch_q22_dormant_customers,
-tpch_q11_important_stock, corpus_mix_weights, basket_affinity_parts
-and events_rfm_segments (cross join against a broadcast 1-row scalar
-— the plan Spark itself produces for an uncorrelated scalar
-subquery); profile_columns_exact (crossJoin of its two 1-row
+tpch_q11_important_stock, corpus_mix_weights, basket_affinity_parts,
+events_rfm_segments and text_trigram_lm_quality (cross join against a
+broadcast 1-row scalar — the plan Spark itself produces for an
+uncorrelated scalar subquery; for the trigram LM it is the training
+vocabulary size, which as a driver collect cost a whole job per
+build); profile_columns_exact (crossJoin of its two 1-row
 aggregate frames — plain metrics x exact distincts). The
 similarity_ann_* family stopped flagging in r8: the localCheckpoint
 barrier ahead of the recall join cuts the ann-side plan.
