@@ -1711,43 +1711,36 @@ def _registry_order(
             if isinstance(rec, dict):
                 records[int(m.group(1))] = rec
 
-    ever_green: dict[str, bool] = {}
+    def _is_green(row) -> bool:
+        return (
+            isinstance(row, dict)
+            and bool(row.get("rows_match"))
+            and bool(row.get("schema_match"))
+            and row.get("hash_match") is not False
+            and row.get("err") in (None, "")
+        )
+
+    # one pass: each query's latest (round, green) and latest row, and
+    # the latest round it was green in (present iff ever green)
     latest: dict[str, tuple[int, bool]] = {}
     latest_row: dict[str, dict] = {}
-    for rnd in sorted(records):
-        for name, row in records[rnd].items():
-            ok = (
-                isinstance(row, dict)
-                and bool(row.get("rows_match"))
-                and bool(row.get("schema_match"))
-                and row.get("hash_match") is not False
-                and row.get("err") in (None, "")
-            )
-            ever_green[name] = ever_green.get(name, False) or ok
-            latest[name] = (rnd, ok)
-            latest_row[name] = row if isinstance(row, dict) else {}
-
-    oracle_backed = set(oracle_sql())
-
-    changed_in_round = CHANGED_IN_ROUND
     latest_green_round: dict[str, int] = {}
     for rnd in sorted(records):
         for name, row in records[rnd].items():
-            ok = (
-                isinstance(row, dict)
-                and bool(row.get("rows_match"))
-                and bool(row.get("schema_match"))
-                and row.get("hash_match") is not False
-                and row.get("err") in (None, "")
-            )
+            ok = _is_green(row)
+            latest[name] = (rnd, ok)
+            latest_row[name] = row if isinstance(row, dict) else {}
             if ok:
                 latest_green_round[name] = rnd
 
+    oracle_backed = set(oracle_sql())
+    changed_in_round = CHANGED_IN_ROUND
+
     def _stale_green(name: str) -> bool:
         rnd = changed_in_round.get(name)
-        if rnd is None or not ever_green.get(name, False):
+        if rnd is None or name not in latest_green_round:
             return False
-        return latest_green_round.get(name, -1) < rnd
+        return latest_green_round[name] < rnd
 
     def _settled_rows_only(name: str) -> bool:
         # A rows-only-BY-DESIGN query (absent from oracle_sql()) whose
@@ -1791,7 +1784,7 @@ def _registry_order(
             return 4 if _settled_rows_only(name) else 0
         if _stale_green(name):
             return 1
-        if not ever_green.get(name, False):
+        if name not in latest_green_round:
             return 2 if name in oracle_backed else 3
         return 4
 

@@ -5,17 +5,25 @@ A d-dim float vector (4d bytes) becomes m uint8 codes (m bytes,
 d/m-dim subspace each): 32× compression at m = d/2. Queries score
 compressed codes with ADC (asymmetric distance computation): per query,
 one m×ks lookup table of exact subspace distances, then each corpus
-vector costs m table lookups instead of d multiplies. Combined with the
-IVF coarse quantizer (`similarity.topk_ivf`) this is the standard
-billion-scale layout (Jégou et al., "Product Quantization for Nearest
-Neighbor Search", TPAMI 2011 — public).
+vector costs m table lookups instead of d multiplies. Composed with an
+IVF coarse quantizer this is the standard billion-scale layout (Jégou
+et al., "Product Quantization for Nearest Neighbor Search", TPAMI 2011
+— public).
 
-Spark shape: codebooks are tiny (m × ks × d/m floats) and train on a
-deterministic hash-sampled subset driver-side (standard practice — the
-codebook is a model artifact, not data). Encoding and ADC scoring are
-Arrow-batched ``mapInPandas`` kernels over broadcast codebooks — pure
-numpy inner loops, embarrassingly parallel, no shuffle except the final
-top-k.
+Two trainer stacks, one per use:
+
+* numpy IVF-PQ — :func:`build_ivfpq` / :func:`encode_ivfpq` /
+  :func:`topk_ivfpq`: coarse cells from ``similarity.seeded_centroids``
+  + ``kmeans_refine``, residual codebooks trained on a deterministic
+  hash-sampled subset driver-side (the codebook is a model artifact,
+  not data); encoding and ADC scoring are Arrow-batched
+  ``mapInPandas`` kernels over broadcast arrays. The maintained index's
+  ``array`` layout (``streaming.ann_ingest``) runs on it.
+* deterministic — :func:`topk_pq_deterministic` /
+  :func:`topk_ivfpq_deterministic`: md5-seeded inits and pinned-fold
+  Lloyd sweeps, every float re-derivable by the DuckDB twins. The
+  registry queries and the maintained index's ``rows`` layout run on
+  it.
 
 Vectors are L2-normalized before quantization so L2 ranking ≡ cosine
 ranking (1 − cos = ‖a−b‖²/2 on the unit sphere).
@@ -24,7 +32,7 @@ ranking (1 − cos = ‖a−b‖²/2 on the unit sphere).
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from solar_logger_spark.operators.litfast import d2_s
 
@@ -33,23 +41,6 @@ def _normalize(mat: "np.ndarray") -> "np.ndarray":
     norms = np.sqrt((mat * mat).sum(axis=1))
     norms[norms == 0] = 1.0
     return mat / norms[:, None]
-
-
-def _collect_sample(
-    df: DataFrame, n: int, id_col: str, vec_col: str
-) -> "np.ndarray":
-    """Deterministic training sample: the n rows with smallest id hash
-    (partition-independent, same sample at any scale)."""
-    rows = (
-        df.select(id_col, vec_col)
-        .withColumn("_h", F.xxhash64(F.col(id_col)))
-        .orderBy("_h", id_col)
-        .limit(n)
-        .collect()
-    )
-    return _normalize(
-        np.array([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
-    )
 
 
 def _lloyd(data: "np.ndarray", k: int, iters: int) -> "np.ndarray":
@@ -66,227 +57,6 @@ def _lloyd(data: "np.ndarray", k: int, iters: int) -> "np.ndarray":
             if len(members):
                 cents[j] = members.mean(axis=0)
     return cents
-
-
-def train_codebooks(
-    df: DataFrame,
-    m: int = 8,
-    ks: int = 16,
-    sample_size: int = 2048,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> "np.ndarray":
-    """Train the m per-subspace codebooks → array (m, ks, d/m)."""
-    sample = _collect_sample(df, sample_size, id_col, vec_col)
-    d = sample.shape[1]
-    if d % m:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    dsub = d // m
-    books = np.zeros((m, ks, dsub))
-    for j in range(m):
-        sub = sample[:, j * dsub : (j + 1) * dsub]
-        got = _lloyd(sub, ks, iters)
-        books[j, : len(got)] = got
-        if len(got) < ks:  # degenerate tiny corpus: repeat last centroid
-            books[j, len(got):] = got[-1]
-    return books
-
-
-def encode(
-    df: DataFrame,
-    codebooks: "np.ndarray",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Quantize vectors to PQ codes: ``(id, codes array<int>)`` with one
-    uint8-range code per subspace. One map-only pass."""
-    import pandas as pd
-
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(np.asarray(codebooks))
-
-    def _enc(batches):
-        books = bc.value
-        m, ks, dsub = books.shape
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            a = _normalize(
-                np.array(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-                )
-            )
-            codes = np.empty((len(a), m), dtype=np.int32)
-            for j in range(m):
-                sub = a[:, j * dsub : (j + 1) * dsub]
-                d2 = (
-                    (sub[:, None, :] - books[j][None, :, :]) ** 2
-                ).sum(axis=2)
-                codes[:, j] = d2.argmin(axis=1)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy(), "codes": list(codes)}
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(
-        _enc, f"{id_col} long, codes array<int>"
-    )
-
-
-def topk_adc(
-    encoded: DataFrame,
-    queries: DataFrame,
-    codebooks: "np.ndarray",
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    rerank: int = 0,
-    raw: DataFrame | None = None,
-) -> DataFrame:
-    """Approximate top-k neighbors by ADC over PQ codes: exact query ↔
-    reconstructed-corpus L2 on the unit sphere (≡ cosine ranking).
-
-    ``rerank > 0`` enables the standard production two-stage retrieval:
-    ADC produces a ``rerank``-deep candidate shortlist from the
-    compressed codes, then the shortlist alone is re-scored exactly
-    against ``raw`` (the uncompressed vectors) — full-precision math on
-    k·O(10) candidates per query instead of the whole corpus, which is
-    what makes PQ usable when quantization distortion is comparable to
-    the neighbor gaps (e.g. near-uniform embeddings).
-
-    Output matches the other ANN operators: (query_id, neighbor_id,
-    approx_dist, rank) — smaller distance is nearer (with re-ranking,
-    ``approx_dist`` is the exact unit-sphere squared L2). The per-batch
-    ADC cost is a numpy table gather, m adds per corpus code.
-
-    Scale shape: only the raw query batch (n_q × d doubles) is
-    broadcast; the ADC lookup tables are derived from it once per task,
-    executor-side. The kernel keeps a ``cut``-deep running top-k per
-    query across its partition's batches, so the |queries| × |corpus|
-    score matrix is never materialized — per partition, at most
-    n_q × cut rows survive to the final exact top-k shuffle
-    (partitions × n_q × cut rows total, vs n_q × |corpus| for the naive
-    global-window shape). For very large query batches, chunk the
-    ``queries`` frame caller-side; each chunk is an independent scan."""
-    import pandas as pd
-
-    spark = encoded.sparkSession
-    books = np.asarray(codebooks)
-    qrows = queries.select(id_col, vec_col).collect()  # bounded query batch
-    qids = np.array([r[id_col] for r in qrows])
-    qmat = _normalize(
-        np.array([np.asarray(r[vec_col], dtype=np.float64) for r in qrows])
-    )
-    m, ks, dsub = books.shape
-    cut = rerank if rerank > 0 else k
-    bc = spark.sparkContext.broadcast((qids, qmat, books))
-
-    def _score(batches):
-        ids, qm, bks = bc.value
-        n_q = len(ids)
-        if n_q == 0:
-            return
-        # per-query distance tables: (n_q, m, ks) exact subspace
-        # distances, computed from the broadcast raw queries
-        tabs = np.empty((n_q, m, ks))
-        for j in range(m):
-            qsub = qm[:, j * dsub : (j + 1) * dsub]
-            tabs[:, j, :] = (
-                (qsub[:, None, :] - bks[j][None, :, :]) ** 2
-            ).sum(axis=2)
-        best_d = best_i = None  # running (n_q, <=cut) top-k
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.array(list(pdf["codes"]), dtype=np.int64)  # (n, m)
-            n = len(codes)
-            # gather: dist[q, i] = Σ_j tabs[q, j, codes[i, j]]
-            dist = np.zeros((n_q, n))
-            for j in range(m):
-                dist += tabs[:, j, :][:, codes[:, j]]
-            nids = np.broadcast_to(
-                pdf[id_col].to_numpy(), (n_q, n)
-            ).copy()
-            dist[nids == ids[:, None]] = np.inf  # self-pairs drop out
-            if best_d is not None:
-                dist = np.concatenate([best_d, dist], axis=1)
-                nids = np.concatenate([best_i, nids], axis=1)
-            # row-wise selection in the final window's total order:
-            # (approx_dist asc, neighbor_id asc)
-            order = np.lexsort((nids, dist), axis=-1)[:, :cut]
-            best_d = np.take_along_axis(dist, order, axis=1)
-            best_i = np.take_along_axis(nids, order, axis=1)
-        if best_d is None:
-            return
-        flat_d = best_d.ravel()
-        flat_i = best_i.ravel()
-        keep = np.isfinite(flat_d)
-        yield pd.DataFrame(
-            {
-                "query_id": np.repeat(ids, best_d.shape[1])[keep],
-                "neighbor_id": flat_i[keep],
-                "approx_dist": flat_d[keep],
-            }
-        )
-
-    scored = encoded.mapInPandas(
-        _score, "query_id long, neighbor_id long, approx_dist double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_dist").asc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= cut)
-        .select("query_id", "neighbor_id", "approx_dist", "rank")
-    )
-    if rerank <= 0:
-        return shortlist
-    if raw is None:
-        raise ValueError("rerank > 0 requires the raw vector DataFrame")
-
-    # exact re-scoring of the shortlist: per-query numpy against the
-    # candidates' raw vectors (|shortlist| = n_q × rerank rows)
-    cand = shortlist.join(
-        raw.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v")
-        ),
-        "neighbor_id",
-    )
-    bcq = encoded.sparkSession.sparkContext.broadcast((qids, qmat))
-
-    def _exact(batches):
-        import pandas as pd
-
-        ids_, qm = bcq.value
-        pos = {int(i): p for p, i in enumerate(ids_)}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            a = _normalize(
-                np.array([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
-            )
-            qv = qm[[pos[int(q)] for q in pdf["query_id"]]]
-            d = ((a - qv) ** 2).sum(axis=1)
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy(),
-                    "neighbor_id": pdf["neighbor_id"].to_numpy(),
-                    "approx_dist": d,
-                }
-            )
-
-    exact = cand.select("query_id", "neighbor_id", "_v").mapInPandas(
-        _exact, "query_id long, neighbor_id long, approx_dist double"
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("approx_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "approx_dist", "rank")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -312,13 +82,13 @@ def build_ivfpq(
 
     Returns ``(encoded, centroids, codebooks)`` where ``encoded`` is the
     one-layout index DataFrame ``(id, cell, codes)``. At cluster scale
-    the encoded frame is written ``partitionBy("cell")`` (see
-    ``save_ivfpq``) so a probe touches only its cells' files.
+    the encoded frame is written ``partitionBy("cell")`` (the
+    maintained index, ``streaming.ann_ingest``, commits it that way) so
+    a probe touches only its cells' files.
 
     Deterministic end to end: seeded centroids + hash-sampled PQ
     training, so the same corpus always yields the same index.
     """
-    import pandas as pd
     from solar_logger_spark.operators.similarity import (
         ivf_assign, kmeans_refine, seeded_centroids,
     )
@@ -434,8 +204,13 @@ def topk_ivfpq(
     The probed-cell filter is pushed into the scan: the kernel sees only
     rows whose ``cell`` is probed by ≥1 query (``isin`` on a literal
     list → parquet row-group / partition pruning on a cell-partitioned
-    index from ``save_ivfpq``). Output and ``rerank`` semantics match
-    ``topk_adc``."""
+    index). Output: (query_id, neighbor_id, approx_dist, rank), smaller
+    distance nearer. ``rerank > 0`` is two-stage retrieval: ADC picks a
+    ``rerank``-deep shortlist per query from the codes, then only the
+    shortlist is re-scored exactly against ``raw`` (the uncompressed
+    vectors), and ``approx_dist`` is the exact unit-sphere squared L2.
+    The running top-cut per query is kept across a partition's batches,
+    so the |queries| × |corpus| score matrix never materializes."""
     import pandas as pd
 
     spark = encoded.sparkSession
@@ -574,73 +349,6 @@ def topk_ivfpq(
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "approx_dist", "rank")
     )
-
-
-# ---------------------------------------------------------------------------
-# index persistence: codes partitioned by cell + model arrays as parquet
-# ---------------------------------------------------------------------------
-
-def save_ivfpq(
-    encoded: DataFrame,
-    centroids: "np.ndarray",
-    codebooks: "np.ndarray",
-    path: str,
-    id_col: str = "vec_id",
-) -> None:
-    """Persist the composed index: ``path/codes`` parquet
-    ``partitionBy("cell")`` (so a search's probed-cell ``isin`` filter
-    becomes directory-level partition pruning — only n_probe/n_cells of
-    the bytes are read), ``path/centroids`` and ``path/codebooks`` as
-    tiny parquet model tables. Everything round-trips bit-exactly:
-    float64 arrays stored as array<double> rows keyed for deterministic
-    reassembly."""
-    spark = encoded.sparkSession
-    encoded.select(id_col, "cell", "codes").write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(f"{path}/codes")
-    cents = np.asarray(centroids, dtype=np.float64)
-    spark.createDataFrame(
-        [(int(i), [float(x) for x in cents[i]]) for i in range(len(cents))],
-        "cell int, vec array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    books = np.asarray(codebooks, dtype=np.float64)
-    m, ks, _ = books.shape
-    spark.createDataFrame(
-        [
-            (int(j), int(c), [float(x) for x in books[j, c]])
-            for j in range(m)
-            for c in range(ks)
-        ],
-        "subspace int, code int, vec array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
-
-
-def load_ivfpq(
-    spark: SparkSession, path: str, id_col: str = "vec_id"
-) -> tuple[DataFrame, "np.ndarray", "np.ndarray"]:
-    """Load a persisted IVF-PQ index → ``(encoded, centroids,
-    codebooks)`` ready for ``topk_ivfpq``. The codes scan stays lazy and
-    cell-partitioned; only the small model tables are collected."""
-    encoded = spark.read.parquet(f"{path}/codes").select(
-        id_col, F.col("cell").cast("int"), "codes"
-    )
-    crows = spark.read.parquet(f"{path}/centroids").collect()
-    cents = np.array(
-        [
-            np.asarray(r["vec"], dtype=np.float64)
-            for r in sorted(crows, key=lambda r: r["cell"])
-        ]
-    )
-    brows = spark.read.parquet(f"{path}/codebooks").collect()
-    m = 1 + max(r["subspace"] for r in brows)
-    ks = 1 + max(r["code"] for r in brows)
-    dsub = len(brows[0]["vec"])
-    books = np.zeros((m, ks, dsub))
-    for r in brows:
-        books[r["subspace"], r["code"]] = np.asarray(
-            r["vec"], dtype=np.float64
-        )
-    return encoded, cents, books
 
 
 # -- shared deterministic-codebook machinery ---------------------------------
@@ -922,29 +630,28 @@ def topk_pq_deterministic(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """PQ/ADC top-k whose codebook training, encoding, and scoring are
-    all deterministic and cross-engine re-derivable — the
-    hash-verifiable sibling of :func:`train_codebooks` +
-    :func:`topk_adc` (the same JL-vs-PCA split as
-    ``similarity.topk_ivf_deterministic``): per-subspace centroid INIT
+    all deterministic and cross-engine re-derivable — the one flat-PQ
+    retriever (the ``similarity_ann_pq`` registry query and its DuckDB
+    twin): per-subspace centroid INIT
     is the ``ks`` subvectors with the smallest ``md5('pq|'||m||'|'||id)``
     (code = hash order), each of the fixed ``lloyd_rounds`` sweeps
     assigns by dimension-order-folded squared L2 (ties to the lowest
     code) and recomputes means with the addition order pinned to
     member-id order, and ADC sums the per-subspace distances in
     subspace order. Vectors are L2-normalized first (exact divisions),
-    so L2 ranking ≡ cosine ranking, matching the numpy path's
+    so L2 ranking ≡ cosine ranking, matching the numpy IVF-PQ path's
     contract. Queries are normalized from their OWN vectors — they
     need not exist in the corpus. Output: (query_id, neighbor_id,
     approx_dist, rank) with ``approx_dist`` the EXACT unit-sphere
     squared L2 after the ``rerank``-deep shortlist re-rank — same
-    shape as :func:`topk_adc`.
+    shape as :func:`topk_ivfpq`. ``rerank=k`` re-ranks exactly the
+    ADC top-k, so the returned id set is the ADC shortlist.
 
     Scale: the codebook is ≤ m·ks rows (two bounded collects); ADC is
     a broadcast of the |queries|·m·ks distance table against the
     encoded corpus; the pinned per-(m,code) means fold hierarchically
     over bounded 256-id blocks (:func:`_pinned_hier_mean` — no full
-    member list in any task; :func:`train_codebooks`'s sampled numpy
-    Lloyd remains the throughput trainer)."""
+    member list in any task)."""
     from solar_logger_spark.operators.spread import spread_small
 
     spark = corpus.sparkSession
@@ -1013,8 +720,8 @@ def topk_ivfpq_deterministic(
     shortlist re-rank, same shape as :func:`topk_ivfpq`.
 
     The numpy :func:`build_ivfpq`/:func:`topk_ivfpq` pair remains the
-    throughput path; this is the reproducible-build/oracle trainer
-    (same split as ``topk_pq_deterministic``). The coarse stage shares
+    faster trainer (the maintained index's ``array`` layout); this is
+    the reproducible-build/oracle trainer. The coarse stage shares
     its SHAPE with ``similarity.topk_ivf_deterministic`` but not code:
     that operator ranks by pinned-fold cosine over raw vectors, this
     one by pinned-fold L2 over unit vectors — the metrics diverge on

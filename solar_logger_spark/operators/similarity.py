@@ -11,6 +11,10 @@
   probe only their own bucket (optionally multi-probe). The scale path:
   turns per-query cost from O(N) into O(N / 2^bits) with approximate
   recall.
+* ``topk_ivf_deterministic`` — IVF top-k over md5-seeded, pinned-fold
+  cells (every float re-derivable by its DuckDB twin).
+* ``seeded_centroids`` / ``kmeans_refine`` / ``ivf_assign`` — the numpy
+  IVF coarse quantizer under ``pq.build_ivfpq``.
 """
 
 from __future__ import annotations
@@ -747,81 +751,6 @@ def ivf_inertia(
     return float(row["inertia"])
 
 
-def topk_ivf(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_cells: int = 16,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    refine_iters: int = 0,
-) -> DataFrame:
-    """IVF approximate top-k: corpus vectors live in their nearest-
-    centroid cell; each query scores only its ``n_probe`` closest cells.
-    Per-query work drops from O(N) to O(N·n_probe/n_cells); recall is
-    controlled by n_probe. Same output shape as ``topk_bruteforce``.
-    ``refine_iters`` > 0 runs that many distributed k-means sweeps over
-    the seeded codebook (better-balanced cells → better recall per
-    probe), at one extra corpus scan per sweep.
-
-    The probe join is an equi-join on ``cell`` (queries exploded n_probe
-    ways), so Catalyst broadcasts the (small) query side and the corpus
-    partition-prunes by cell on a cell-partitioned layout."""
-    import pandas as pd
-    from pyspark.sql import Window, functions as F
-
-    cents = seeded_centroids(corpus, n_cells, id_col, vec_col)
-    if refine_iters > 0:
-        cents = kmeans_refine(corpus, cents, refine_iters, id_col, vec_col)
-    c_assigned = ivf_assign(corpus, cents, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"), "cell"
-    )
-
-    spark = corpus.sparkSession
-    cnorm = _ltr_norms(cents)
-    bc = spark.sparkContext.broadcast((cents, cnorm))
-
-    def _probes(batches):
-        mat, norms = bc.value
-        for pdf in batches:
-            a = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            if len(a) == 0:
-                continue
-            an = _ltr_norms(a)
-            sims = (a @ mat.T) / (an[:, None] * norms[None, :])
-            order = np.argsort(-sims, axis=1)[:, :n_probe]
-            out = pd.DataFrame(
-                {
-                    "query_id": pdf[id_col].to_numpy().repeat(n_probe),
-                    "q_vec": [v for v in pdf[vec_col] for _ in range(n_probe)],
-                    "cell": order.ravel().astype("int32"),
-                }
-            )
-            yield out
-
-    q_probed = queries.select(id_col, vec_col).mapInPandas(
-        _probes, "query_id long, q_vec array<float>, cell int"
-    )
-    scored = (
-        c_assigned.join(F.broadcast(q_probed), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            _cosine_expr("q_vec", "c_vec").alias("cos_sim"),
-        )
-    )
-    win = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
-
-
 def topk_ivf_deterministic(
     corpus: DataFrame,
     queries: DataFrame,
@@ -833,9 +762,9 @@ def topk_ivf_deterministic(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF top-k whose ENTIRE training pipeline is deterministic and
-    cross-engine re-derivable — the hash-verifiable sibling of
-    :func:`topk_ivf` (the JL-projection-vs-PCA precedent applied to
-    ANN): centroid INIT is the ``n_cells`` corpus vectors with the
+    cross-engine re-derivable — the one IVF-only retriever (the
+    ``similarity_ann_ivf`` registry query and its DuckDB twin):
+    centroid INIT is the ``n_cells`` corpus vectors with the
     lexicographically smallest ``md5('cent|' || id)`` (cell = hash
     order), and each of the FIXED ``lloyd_rounds`` k-means sweeps
     assigns by bit-pinned cosine (left-to-right folds) and recomputes
@@ -849,9 +778,9 @@ def topk_ivf_deterministic(
     members WITHIN 256-id blocks, block partials within 256-block
     superblocks, then superblock partials in order
     (``pq._pinned_hier_mean``) — every task array bounded, no per-cell
-    member list anywhere. :func:`kmeans_refine` (partition-ordered
-    numpy partial sums) remains the throughput trainer at corpus
-    scale; this is the reproducible-build/oracle trainer. Probing
+    member list anywhere. (:func:`kmeans_refine`, partition-ordered
+    numpy partial sums, trains the coarse cells of the numpy IVF-PQ
+    index, ``pq.build_ivfpq``.) Probing
     broadcasts |queries|·n_probe rows; candidates re-score with the
     same pinned cosine.
 

@@ -276,11 +276,16 @@ def bloom_might_contain(
             "bit",
             "left",
         )
-        .groupBy(key_col)
+        .groupBy(F.col(key_col).alias("_bloom_key"))
         .agg((F.count("_set") == F.lit(k)).alias("might_contain"))
     )
-    return probe.join(hits, [probe[key_col].eqNullSafe(hits[key_col])],
-                      "left").drop(hits[key_col]).select(
+    # the hits key is renamed: hits derives from probe, so joining on
+    # probe[key_col] == hits[key_col] would name one attribute twice
+    # (a trivially true condition that only Spark's self-join rewrite
+    # turns back into a key join)
+    return probe.join(
+        hits, probe[key_col].eqNullSafe(F.col("_bloom_key")), "left"
+    ).select(
         *probe.columns,
         F.coalesce(F.col("might_contain"), F.lit(False))
         .alias("might_contain"),

@@ -585,10 +585,9 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-to-right folds and whose cell means pin the addition order to
     member-id order — so DuckDB re-derives the identical codebook,
     cells, candidates, cosines, ranks, and recall column, and the
-    driver's value-hash gate applies. ``similarity.topk_ivf`` /
-    ``kmeans_refine`` (numpy partial-sum trainer) remain the
-    throughput path at corpus scale; this is the reproducible-build
-    trainer (the JL-vs-PCA precedent)."""
+    driver's value-hash gate applies. It is the one IVF-only
+    retriever; the numpy ``kmeans_refine`` trainer survives only as
+    the coarse stage of ``pq.build_ivfpq``."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     ann = similarity.topk_ivf_deterministic(
@@ -1356,9 +1355,8 @@ def similarity_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from md5-seeded init + one pinned-fold Lloyd sweep and scores with
     dimension-/subspace-order folds, so the DuckDB twin re-derives the
     identical codes, ADC tables, shortlists, and exact re-ranked
-    distances. ``pq.train_codebooks``/``topk_adc`` (numpy) stay as the
-    throughput path; recall vs brute force remains pinned in
-    tests/test_pq.py and tests/test_ann_recall.py."""
+    distances. It is the one flat-PQ retriever; recall vs brute force
+    is pinned in tests/test_ann_recall.py."""
     from solar_logger_spark.operators import pq
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1556,9 +1554,9 @@ def similarity_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned-fold Lloyd sweeps and dimension-/subspace-order distance
     folds, so the DuckDB twin re-derives the identical cells,
     residuals, codes, ADC sums, and re-ranked distances.
-    ``pq.build_ivfpq``/``topk_ivfpq`` (numpy) stay as the throughput
-    path; recall + persistence round-trip remain pinned in
-    tests/test_pq.py."""
+    ``pq.build_ivfpq``/``topk_ivfpq`` (numpy) stay as the faster
+    trainer of the maintained index's ``array`` layout; recall is
+    pinned in tests/test_pq.py and tests/test_ann_recall.py."""
     from solar_logger_spark.operators import pq
 
     emb = load_table(spark, sf_dir, "embeddings")

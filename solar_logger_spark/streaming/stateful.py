@@ -23,7 +23,7 @@ grows with throughput.
 
 from __future__ import annotations
 
-from collections.abc import Generator, Iterator
+from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
@@ -44,13 +44,15 @@ GATED_SCHEMA = StructType([
 _STATE_SCHEMA = StructType([StructField("status", StringType())])
 
 
-def _replay(
-    status: str, pdfs: Iterator[pd.DataFrame]
-) -> Generator[pd.DataFrame, None, str]:
-    """Replay one device's batch in arrival order against its last
-    status (reference ``_on_message`` semantics, serialized per device):
-    yields the data messages that arrive while the device is online and
-    returns the status after the last message."""
+def _gate_group(
+    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    """``applyInPandasWithState`` body: replay one device's batch in
+    arrival order against its stored status (reference ``_on_message``
+    semantics, serialized per device), yield the data messages that
+    arrive while the device is online, and store the status after the
+    last message."""
+    (status,) = state.get if state.exists else ("offline",)
     for pdf in pdfs:
         pdf = pdf.sort_values("arrival_ts", kind="mergesort")
         keep: list[dict[str, Any]] = []
@@ -67,16 +69,6 @@ def _replay(
                 )
         if keep:
             yield pd.DataFrame(keep)
-    return status
-
-
-def _gate_group(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """``applyInPandasWithState`` body: :func:`_replay` against the
-    device's stored status."""
-    (status,) = state.get if state.exists else ("offline",)
-    status = yield from _replay(status, pdfs)
     state.update((status,))
 
 
@@ -99,60 +91,6 @@ def stateful_gated_stream(raw: DataFrame) -> DataFrame:
             stateStructType=_STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    StatefulProcessor,
-)
-
-
-class _GateProcessor(StatefulProcessor):
-    """``StatefulProcessor`` for the online gate — same semantics as
-    ``_gate_group`` on Spark 4's ``transformWithState`` API (typed state
-    variables, RocksDB-backed, evolvable schema)."""
-
-    def init(self, handle) -> None:
-        self._status = handle.getValueState("status", _STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timer_values) -> Iterator[pd.DataFrame]:
-        status = self._status.get()[0] if self._status.exists() else "offline"
-        status = yield from _replay(status, rows)
-        self._status.update((status,))
-
-    def handleInitialState(self, key, initial_state, timer_values) -> None:
-        self._status.update((initial_state["status"].iloc[0],))
-
-    def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-        return iter(())
-
-    def close(self) -> None:
-        pass
-
-
-def stateful_gated_stream_tws(raw: DataFrame) -> DataFrame:
-    """The online gate on ``transformWithStateInPandas`` — Spark 4's
-    successor state API (arbitrary typed state variables, TTL, timers,
-    state-schema evolution). Functionally identical to
-    ``stateful_gated_stream``; requires the RocksDB state store
-    provider (``spark.sql.streaming.stateStore.providerClass`` →
-    ``...RocksDBStateStoreProvider``), which is also the provider you
-    want at scale: incremental checkpointing + changelog uploads instead
-    of full HDFS snapshots of executor state. The Python side of the
-    transformWithState protocol additionally needs ``protobuf``
-    (import-time optional here; the processor logic itself is tested
-    without it)."""
-    proc = _GateProcessor()
-    tagged = split_topic(raw).filter(F.col("kind").isin("status", "data"))
-    return (
-        tagged.select("device", "kind", "payload", "arrival_ts")
-        .groupBy("device")
-        .transformWithStateInPandas(
-            statefulProcessor=proc,
-            outputStructType=GATED_SCHEMA,
-            outputMode="append",
-            timeMode="none",
         )
     )
 

@@ -198,6 +198,41 @@ def test_deterministic_layout_roundtrip_bit_exact(spark, sf_dir, tmp_path):
     )) == persisted2
 
 
+def test_recenter_keeps_deterministic_layout(spark, sf_dir, tmp_path):
+    """Recenter retrains with the trainer of the index's own layout: a
+    deterministic index stays ``rows`` (SQL-replayable, exactly
+    rescored search), and recentering it on the full corpus equals a
+    fresh deterministic bootstrap of that corpus — model and resolved
+    codes, bit for bit."""
+    emb, initial, delivery, _q = _load(spark, sf_dir)
+    idx = str(tmp_path / "ann")
+    AI.bootstrap_ann_index_deterministic(initial, idx, n_cells=8, m=8, ks=16)
+    AI.ann_ingest_sink(idx)(delivery, 1)
+    AI.recenter_ann_index(spark, idx, emb)
+    fresh = str(tmp_path / "fresh")
+    AI.bootstrap_ann_index_deterministic(emb, fresh, n_cells=8, m=8, ks=16)
+
+    def model(d):
+        mdl = AI.read_model(d)
+        return (
+            mdl["layout"], mdl["m"], mdl["ks"], mdl["seeds"],
+            mdl["string_ids"],
+            [[x.hex() for x in c] for c in mdl["centroids"]],
+            [(b["ms"], b["code"], [x.hex() for x in b["c"]])
+             for b in mdl["codebooks"]],
+        )
+
+    def codes(d):
+        return sorted(
+            tuple(r) for r in AI.resolved_codes(spark, d)
+            .select("vid", "cell", "ms", "code").collect()
+        )
+
+    assert AI.read_model(idx)["layout"] == AI._ROWS
+    assert model(idx) == model(fresh)
+    assert codes(idx) == codes(fresh)
+
+
 def test_changed_vector_redelivery_wins(spark, tmp_path):
     """A re-delivered id with a CHANGED vector supersedes its old
     encoding — including across a cell move — both before and after

@@ -103,27 +103,6 @@ def test_dot_is_left_to_right_double(spark):
     assert out[0].d == 0.0
 
 
-def test_ivf_topk_shape_and_recall(spark, sf_dir):
-    from solar_logger_spark.io.tables import load_table
-    from solar_logger_spark.operators.similarity import topk_bruteforce, topk_ivf
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.limit(10)
-    exact = topk_bruteforce(emb, queries, k=5)
-    approx = topk_ivf(emb, queries, k=5, n_cells=8, n_probe=4)
-
-    ex = {(r.query_id, r.neighbor_id) for r in exact.collect()}
-    ap_rows = approx.collect()
-    ap = {(r.query_id, r.neighbor_id) for r in ap_rows}
-    # shape: k results per query, ranked
-    per_query = {}
-    for r in ap_rows:
-        per_query.setdefault(r.query_id, []).append(r.rank)
-    assert all(sorted(v) == list(range(1, len(v) + 1)) for v in per_query.values())
-    # recall with half the cells probed should be well above chance
-    assert len(ap & ex) / len(ex) >= 0.5
-
-
 def test_kmeans_refine_improves_codebook(spark, sf_dir):
     from solar_logger_spark.io.tables import load_table
     from solar_logger_spark.operators import similarity as S
@@ -154,19 +133,6 @@ def test_kmeans_refine_deterministic(spark, sf_dir):
     a = S.kmeans_refine(emb, seeded, n_iter=1)
     b = S.kmeans_refine(emb, seeded, n_iter=1)
     assert np.array_equal(a, b)
-
-
-def test_ivf_refined_recall_not_worse_than_chance(spark, sf_dir):
-    from solar_logger_spark.io.tables import load_table
-    from solar_logger_spark.operators.similarity import topk_bruteforce, topk_ivf
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.limit(10)
-    exact = topk_bruteforce(emb, queries, k=5)
-    approx = topk_ivf(emb, queries, k=5, n_cells=8, n_probe=4, refine_iters=1)
-    ex = {(r.query_id, r.neighbor_id) for r in exact.collect()}
-    ap = {(r.query_id, r.neighbor_id) for r in approx.collect()}
-    assert len(ap & ex) / len(ex) >= 0.5
 
 
 def test_neardup_blocked_matches_broadcast(spark):

@@ -738,126 +738,6 @@ def test_stream_stream_gate_interval_join(spark, tmp_path):
     assert out[0].arrival_ts == datetime(2024, 1, 1, 0, 30)
 
 
-def test_tws_gate_processor_logic():
-    """The transformWithState processor's gating logic, driven directly
-    with a stub handle (the streaming e2e below needs protobuf, which
-    this container lacks): in-batch ordering respected, state read on
-    entry and persisted on exit."""
-    import pandas as pd
-
-    from solar_logger_spark.streaming.stateful import _GateProcessor
-
-    class _StubValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = tuple(v)
-
-    class _StubHandle:
-        def __init__(self):
-            self.state = _StubValueState()
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return self.state
-
-    proc = _GateProcessor()
-    handle = _StubHandle()
-    proc.init(handle)
-
-    batch = pd.DataFrame(
-        {
-            "device": ["fx-1"] * 4,
-            "kind": ["status", "data", "status", "data"],
-            "payload": [b"online", b"pkt1", b"offline", b"pkt2"],
-            "arrival_ts": pd.to_datetime(
-                ["2024-01-01 00:00", "2024-01-01 00:01",
-                 "2024-01-01 00:02", "2024-01-01 00:03"]
-            ),
-        }
-    )
-    out = list(proc.handleInputRows(("fx-1",), iter([batch]), None))
-    kept = pd.concat(out) if out else pd.DataFrame()
-    assert list(kept["payload"]) == [b"pkt1"]  # only the while-online row
-    assert handle.state.get() == ("offline",)  # final status persisted
-
-    # next batch with no status rows: carried offline state gates all
-    batch2 = batch.iloc[[1]].assign(kind="data")
-    out2 = list(proc.handleInputRows(("fx-1",), iter([batch2]), None))
-    assert not out2
-
-
-def test_tws_gate_across_batches(spark, tmp_path):
-    """transformWithStateInPandas form of the online gate: same
-    semantics as the applyInPandasWithState test — in-batch status
-    ordering respected, state carried across micro-batches — on the
-    Spark 4 state API (requires the RocksDB state store provider and
-    protobuf for the state-server protocol)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState's Python protocol needs protobuf",
-    )
-    from solar_logger_spark.streaming.stateful import stateful_gated_stream_tws
-    from solar_logger_spark.streaming.ingest import RAW_SCHEMA
-
-    input_dir = tmp_path / "in"
-    input_dir.mkdir()
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    fx_pkt, _ = _packet("fx-1", 1704067200, 1.0)
-    b1 = [
-        ("mate/fx-1/status", b"online", datetime(2024, 1, 1, 0, 0)),
-        ("mate/fx-1/fx-status", fx_pkt, datetime(2024, 1, 1, 0, 1)),
-        ("mate/fx-1/status", b"offline", datetime(2024, 1, 1, 0, 2)),
-        ("mate/fx-1/fx-status", fx_pkt, datetime(2024, 1, 1, 0, 3)),
-    ]
-    b2 = [("mate/fx-1/fx-status", fx_pkt, datetime(2024, 1, 1, 0, 4))]
-    spark.createDataFrame(b1, RAW_SCHEMA).coalesce(1).write.parquet(
-        str(input_dir / "f1")
-    )
-    spark.createDataFrame(b2, RAW_SCHEMA).coalesce(1).write.parquet(
-        str(input_dir / "f2")
-    )
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        raw = (
-            spark.readStream.schema(RAW_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(input_dir) + "/*")
-        )
-        q = (
-            stateful_gated_stream_tws(raw)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
-
-    rows = spark.read.parquet(out_dir).collect()
-    assert len(rows) == 1
-    assert rows[0].arrival_ts == datetime(2024, 1, 1, 0, 1)
-
-
 def test_windowed_rollup_streaming_approx_distinct(spark, tmp_path):
     """Distinct-ish aggregation on the live stream: exact COUNT DISTINCT
     is not streamable in append mode, approx_count_distinct (HLL) is —
