@@ -145,34 +145,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> list[str]:
         df.createOrReplaceTempView(name)
         registered.append(name)
     return registered
-
-
-def spread(df: DataFrame, factor: int = 1) -> DataFrame:
-    """Repartition a narrow input up to cluster parallelism before a
-    fan-out or Python stage, IF the source collapsed to few partitions.
-    On a multi-thousand-partition production table the guard makes this
-    a no-op. Measured tradeoff: below ~10M rows the shuffle + per-task
-    Arrow worker overhead exceeds the parallelism win (the engine's hot
-    paths therefore do NOT call it by default); it pays off for
-    CPU-heavy per-row work (real media codecs, heavyweight UDFs) on
-    narrow single-file inputs.
-
-    Caller contract: the width probe is ``df.inputFiles()``, so only
-    FILE-BACKED frames are ever repartitioned — in-memory or
-    post-shuffle frames (``createDataFrame``, anything downstream of an
-    exchange) return unchanged even when narrow, and one huge splittable
-    file (many scan partitions, one file) can still trigger a redundant
-    repartition. Both are accepted: the probe stays free (no
-    ``df.rdd.getNumPartitions()``, which would force an RDD conversion
-    and disable AQE on the branch), and the cost of a wrong guess is one
-    bounded extra shuffle, not a wrong result."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * factor
-    # estimate input width WITHOUT df.rdd (which forces a full
-    # DataFrame→RDD conversion and disables AQE on the branch):
-    # file-backed frames expose their file list cheaply; anything else
-    # (in-memory, post-shuffle) is assumed already spread
-    files = df.inputFiles()
-    if files and len(files) < max(target // 2, 1):
-        return df.repartition(target)
-    return df

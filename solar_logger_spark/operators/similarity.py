@@ -333,7 +333,7 @@ def _blocked_neardup_pairs(
     )
     both = a_rep.unionByName(b_rep)
 
-    def _score_block(key, pdf: "pd.DataFrame"):
+    def _score_block(key, pdf):
         empty = pd.DataFrame({"a_id": [], "b_id": [], "cos_sim": []})
         if len(pdf) == 0:
             return empty

@@ -1585,3 +1585,48 @@ RETENTION_SQL = """
     GROUP BY 1, 2
     ORDER BY 1, 2
 """
+
+
+# registry rows: (name, builder, oracle SQL), in registry order
+QUERIES = (
+    ("tpch_q1_pricing_summary", tpch_q1, TPCH_Q1_SQL),
+    ("tpch_q3_shipping_priority", tpch_q3, TPCH_Q3_SQL),
+    ("tpch_q5_nation_revenue", tpch_q5, TPCH_Q5_SQL),
+    ("join_part_brand_volume", join_part_brand_volume, JOIN_PART_BRAND_SQL),
+    ("topk_orders_per_customer", topk_orders_per_customer, TOPK_ORDERS_SQL),
+    ("distinct_users_per_type", distinct_users_per_type, DISTINCT_USERS_SQL),
+    ("set_purchase_days_without_errors", set_purchase_days_without_errors,
+     SET_EXCEPT_SQL),
+    ("rollup_event_counts", rollup_event_counts, ROLLUP_SQL),
+    ("sessionize_events", sessionize_events, SESSIONIZE_SQL),
+    ("asof_purchase_attribution", asof_purchase_attribution,
+     ASOF_ATTRIBUTION_SQL),
+    ("tpch_q6_forecast_revenue", tpch_q6, TPCH_Q6_SQL),
+    ("tpch_q4_order_priority", tpch_q4_shape, TPCH_Q4_SQL),
+    ("tpch_q10_returned_items", tpch_q10, TPCH_Q10_SQL),
+    ("tpch_q18_large_orders", tpch_q18_shape, TPCH_Q18_SQL),
+    ("tpch_q17_small_qty_revenue", tpch_q17_shape, TPCH_Q17_SQL),
+    ("anti_join_never_ordered_parts", anti_join_never_ordered_parts,
+     ANTI_JOIN_SQL),
+    ("window_running_totals", window_running_totals, WINDOW_RUNNING_SQL),
+    ("window_moving_avg", window_moving_avg, WINDOW_MOVING_AVG_SQL),
+    ("tpch_q7_bination_volume", tpch_q7_shape, TPCH_Q7_SQL),
+    ("tpch_q9_product_profit", tpch_q9_shape, TPCH_Q9_SQL),
+    ("tpch_q19_discounted_revenue", tpch_q19_shape, TPCH_Q19_SQL),
+    ("cube_returnflag_status", cube_returnflag_status, CUBE_SQL),
+    ("tpch_q8_market_share", tpch_q8_shape, TPCH_Q8_SQL),
+    ("tpch_q12_late_priority", tpch_q12_shape, TPCH_Q12_SQL),
+    ("tpch_q13_order_distribution", tpch_q13_shape, TPCH_Q13_SQL),
+    ("tpch_q14_promo_share", tpch_q14_shape, TPCH_Q14_SQL),
+    ("tpch_q15_top_supplier", tpch_q15_shape, TPCH_Q15_SQL),
+    ("tpch_q16_supplier_counts", tpch_q16_shape, TPCH_Q16_SQL),
+    ("tpch_q22_dormant_customers", tpch_q22_shape, TPCH_Q22_SQL),
+    ("tpch_q2_min_cost_supplier", tpch_q2_shape, TPCH_Q2_SQL),
+    ("tpch_q11_important_stock", tpch_q11_shape, TPCH_Q11_SQL),
+    ("tpch_q20_part_promotion", tpch_q20_shape, TPCH_Q20_SQL),
+    ("tpch_q21_waiting_suppliers", tpch_q21_shape, TPCH_Q21_SQL),
+    ("funnel_conversion_events", funnel_conversion_events, FUNNEL_SQL),
+    ("retention_cohorts_events", retention_cohorts_events, RETENTION_SQL),
+    ("interval_click_attribution", interval_click_attribution,
+     INTERVAL_ATTRIBUTION_SQL),
+)

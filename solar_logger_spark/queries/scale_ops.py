@@ -6468,3 +6468,163 @@ SELECT a.query_id, a.neighbor_id, a.approx_dist, a.rank,
        coalesce(r.recall_at_k, 0.0) AS recall_at_k
 FROM ann a LEFT JOIN recall r ON a.query_id = r.query_id
 """
+
+
+# registry rows: (name, builder, oracle SQL), in registry order
+QUERIES = (
+    ("dedup_exact_docs", dedup_exact_docs, DEDUP_EXACT_SQL),
+    ("dedup_ngram_jaccard_docs", dedup_ngram_jaccard_docs, NGRAM_JACCARD_SQL),
+    # exact-jaccard oracle is valid for the LSH query: candidates are
+    # exact-verified (no FPs) and the collision curve is ~1.0 at the
+    # corpus's observed similarity gap (no FNs)
+    ("dedup_minhash_lsh_docs", dedup_minhash_lsh_docs, NGRAM_JACCARD_SQL),
+    ("dedup_simhash_docs", dedup_simhash_docs, dedup.simhash_oracle_sql()),
+    ("text_fingerprint_docs", text_fingerprint_docs, FINGERPRINT_SQL),
+    ("text_token_stats_docs", text_token_stats_docs, TOKEN_STATS_SQL),
+    ("text_quality_score_docs", text_quality_score_docs, QUALITY_SCORE_SQL),
+    ("text_lang_id_docs", text_lang_id_docs, text.lang_id_oracle_sql()),
+    ("similarity_cosine_topk", similarity_cosine_topk, COSINE_TOPK_SQL),
+    ("contrastive_hard_negatives", contrastive_hard_negatives,
+     HARD_NEGATIVES_SQL),
+    ("embedding_neardup_pairs", embedding_neardup_pairs, NEARDUP_PAIRS_SQL),
+    ("similarity_ann_lsh", similarity_ann_lsh, ANN_LSH_SQL),
+    ("similarity_ann_ivf", similarity_ann_ivf, ANN_IVF_SQL),
+    ("multimodal_blob_meta", multimodal_blob_meta, BLOB_META_SQL),
+    ("multimodal_decode_features", multimodal_decode_features,
+     MULTIMODAL_FEATURES_SQL),
+    ("multimodal_frame_sample", multimodal_frame_sample, FRAME_SAMPLE_SQL),
+    ("text_tfidf_top_terms", text_tfidf_top_terms, TFIDF_SQL),
+    ("value_percentiles", value_percentiles, PERCENTILES_SQL),
+    ("ts_difference_events", ts_difference_events, TS_DIFFERENCE_SQL),
+    ("ts_derivative_events", ts_derivative_events, TS_DERIVATIVE_SQL),
+    ("ts_cumulative_sum_events", ts_cumulative_sum_events, TS_CUMSUM_SQL),
+    ("ts_forward_fill_events", ts_forward_fill_events, TS_FILL_SQL),
+    ("ts_increase_events", ts_increase_events, TS_INCREASE_SQL),
+    ("text_bpe_token_count", text_bpe_token_count, BPE_TOKEN_SQL),
+    ("value_histogram", value_histogram, VALUE_HISTOGRAM_SQL),
+    ("dedup_cluster_assignments", dedup_cluster_assignments, CLUSTER_SQL),
+    ("sample_hash_fraction", sample_hash_fraction, SAMPLE_FRACTION_SQL),
+    ("sample_split_counts", sample_split_counts, SPLIT_COUNTS_SQL),
+    ("sample_stratified_docs", sample_stratified_docs, SAMPLE_STRATIFIED_SQL),
+    ("text_chunk_docs", text_chunk_docs, CHUNK_SQL),
+    ("ts_elapsed_events", ts_elapsed_events, ELAPSED_SQL),
+    ("ts_moving_average_events", ts_moving_average_events, MOVING_AVERAGE_SQL),
+    ("sketch_distinct_users_daily", sketch_distinct_users_daily,
+     SKETCH_DISTINCT_SQL),
+    ("sketch_heavy_hitters", sketch_heavy_hitters, HEAVY_HITTERS_SQL),
+    ("text_bm25_topk_docs", text_bm25_topk_docs, BM25_SQL),
+    ("similarity_ann_pq", similarity_ann_pq, ANN_PQ_SQL),
+    ("similarity_ann_ivfpq", similarity_ann_ivfpq, ANN_IVFPQ_SQL),
+    ("ann_maintained_build", ann_maintained_build, ANN_MAINTAINED_BUILD_SQL),
+    ("ann_maintained_search", ann_maintained_search, ANN_MAINTAINED_SQL),
+    ("ts_ema_events", ts_ema_events, EMA_SQL),
+    ("ts_state_count_events", ts_state_count_events, STATE_COUNT_SQL),
+    ("ts_state_duration_events", ts_state_duration_events, STATE_DURATION_SQL),
+    ("ts_state_changes_events", ts_state_changes_events, STATE_CHANGES_SQL),
+    ("ts_event_duration_events", ts_event_duration_events, EVENT_DURATION_SQL),
+    ("dedup_ngram_span_coverage", dedup_ngram_span_coverage, NGRAM_SPAN_SQL),
+    ("text_unigram_rarity_docs", text_unigram_rarity_docs, UNIGRAM_RARITY_SQL),
+    ("ts_derivative_nonneg_events", ts_derivative_nonneg_events,
+     TS_DERIVATIVE_NONNEG_SQL),
+    ("text_repetition_signals_docs", text_repetition_signals_docs,
+     REPETITION_SIGNALS_SQL),
+    ("embedding_label_centroids", embedding_label_centroids,
+     LABEL_CENTROIDS_SQL),
+    ("embedding_semantic_dedup", embedding_semantic_dedup,
+     SEMANTIC_DEDUP_SQL.format(neardup=NEARDUP_PAIRS_SQL)),
+    ("dedup_benchmark_contamination", dedup_benchmark_contamination,
+     BENCHMARK_CONTAMINATION_SQL),
+    ("corpus_stats_by_source", corpus_stats_by_source, CORPUS_STATS_SQL),
+    ("text_word_freq_spectrum", text_word_freq_spectrum, WORD_FREQ_SQL),
+    ("text_pack_sequences_docs", text_pack_sequences_docs, PACK_SEQUENCES_SQL),
+    ("text_pii_scrub_docs", text_pii_scrub_docs, PII_SCRUB_SQL),
+    ("corpus_mix_weights", corpus_mix_weights, MIX_WEIGHTS_SQL),
+    ("text_training_order", text_training_order, TRAINING_ORDER_SQL),
+    ("corpus_length_quantiles", corpus_length_quantiles, LENGTH_QUANTILES_SQL),
+    ("text_bpe_merge_candidates", text_bpe_merge_candidates, BPE_MERGE_SQL),
+    ("text_bpe_encode_docs", text_bpe_encode_docs, BPE_ENCODE_SQL),
+    ("basket_affinity_parts", basket_affinity_parts, BASKET_AFFINITY_SQL),
+    ("multimodal_decode_ppm", multimodal_decode_ppm, DECODE_PPM_SQL),
+    ("embedding_pca_project", embedding_pca_project, PCA_PROJECT_SQL),
+    ("embedding_jl_project", embedding_jl_project, JL_PROJECT_SQL),
+    ("text_length_bucketed_batches", text_length_bucketed_batches,
+     LENGTH_BUCKETED_SQL),
+    ("corpus_content_fingerprints", corpus_content_fingerprints,
+     CORPUS_FINGERPRINTS_SQL),
+    ("join_salted_brand_volume", join_salted_brand_volume,
+     JOIN_SALTED_BRAND_SQL),
+    ("agg_two_phase_event_value", agg_two_phase_event_value,
+     AGG_TWO_PHASE_SQL),
+    ("quality_expectation_suite", quality_expectation_suite,
+     EXPECTATION_SUITE_SQL),
+    ("text_trigram_lm_quality", text_trigram_lm_quality, TRIGRAM_LM_SQL),
+    ("er_fuzzy_match_parts", er_fuzzy_match_parts, ER_FUZZY_MATCH_SQL),
+    ("ts_anomaly_zscore_events", ts_anomaly_zscore_events, ANOMALY_ZSCORE_SQL),
+    ("ts_interpolate_linear_events", ts_interpolate_linear_events,
+     INTERPOLATE_SQL),
+    ("flux_correlation_click_view", flux_correlation_click_view,
+     CORRELATION_SQL),
+    ("ts_anomaly_mad_events", ts_anomaly_mad_events, ANOMALY_MAD_SQL),
+    ("embedding_quantize_int8", embedding_quantize_int8, QUANTIZE_INT8_SQL),
+    ("embedding_cluster_balance", embedding_cluster_balance,
+     CLUSTER_BALANCE_SQL),
+    ("text_dsir_weights", text_dsir_weights, DSIR_WEIGHTS_SQL),
+    ("pipeline_corpus_build", pipeline_corpus_build,
+     PIPELINE_CORPUS_BUILD_SQL),
+    ("text_classifier_score_docs", text_classifier_score_docs,
+     CLASSIFIER_SCORE_SQL),
+    ("ts_cusum_events", ts_cusum_events, CUSUM_SQL),
+    ("ts_holt_smoothing_events", ts_holt_smoothing_events, HOLT_SMOOTHING_SQL),
+    ("ts_holtwinters_events", ts_holtwinters_events, HOLT_WINTERS_SQL),
+    ("dedup_scrub_duplicate_spans", dedup_scrub_duplicate_spans,
+     SCRUB_SPANS_SQL),
+    ("ts_rsi_events", ts_rsi_events, RSI_SQL),
+    ("ts_cmo_events", ts_cmo_events, CMO_SQL),
+    ("ts_dema_events", ts_dema_events, DEMA_SQL),
+    ("ts_tema_events", ts_tema_events, TEMA_SQL),
+    ("ts_kaufmans_er_events", ts_kaufmans_er_events, KAUFMANS_ER_SQL),
+    ("ts_kama_events", ts_kama_events, KAMA_SQL),
+    ("ts_trix_events", ts_trix_events, TRIX_SQL),
+    ("ts_covariance_click_view", ts_covariance_click_view, COVARIANCE_SQL),
+    ("corpus_token_budget_select", corpus_token_budget_select,
+     TOKEN_BUDGET_SQL),
+    ("dedup_editdistance_docs", dedup_editdistance_docs,
+     DEDUP_EDITDISTANCE_SQL),
+    ("profile_columns_lineitem", profile_columns_lineitem,
+     PROFILE_COLUMNS_SQL),
+    ("profile_columns_exact", profile_columns_exact,
+     PROFILE_COLUMNS_EXACT_SQL),
+    ("text_clean_boilerplate_docs", text_clean_boilerplate_docs,
+     CLEAN_BOILERPLATE_SQL),
+    ("corpus_url_dedup", corpus_url_dedup, CORPUS_URL_DEDUP_SQL),
+    ("text_lang_confidence_cutoff", text_lang_confidence_cutoff,
+     LANG_CONFIDENCE_SQL),
+    ("corpus_mix_rate_sample", corpus_mix_rate_sample,
+     STRATIFIED_RATE_SAMPLE_SQL),
+    ("dedup_incremental_batch", dedup_incremental_batch,
+     DEDUP_INCREMENTAL_SQL),
+    ("dedup_leakage_matrix", dedup_leakage_matrix, DEDUP_LEAKAGE_SQL),
+    ("corpus_quality_histogram", corpus_quality_histogram,
+     QUALITY_HISTOGRAM_SQL),
+    ("text_winnow_fingerprints", text_winnow_fingerprints, WINNOW_SQL),
+    ("text_vocab_encode_docs", text_vocab_encode_docs, VOCAB_ENCODE_SQL),
+    ("sketch_bloom_user_filter", sketch_bloom_user_filter, BLOOM_FILTER_SQL),
+    ("ts_autocorrelation_events", ts_autocorrelation_events, ACF_SQL),
+    ("corpus_drift_chisquare", corpus_drift_chisquare, CORPUS_DRIFT_SQL),
+    ("events_transition_matrix", events_transition_matrix,
+     TRANSITION_MATRIX_SQL),
+    ("join_bloom_prefilter_lineitem", join_bloom_prefilter_lineitem,
+     JOIN_BLOOM_PREFILTER_SQL),
+    ("funnel_windowed_events", funnel_windowed_events, FUNNEL_WINDOWED_SQL),
+    ("events_rfm_segments", events_rfm_segments, RFM_SEGMENTS_SQL),
+    ("ts_rolling_median_events", ts_rolling_median_events, ROLLING_MEDIAN_SQL),
+    ("layout_zorder_events", layout_zorder_events, ZORDER_SQL),
+    ("ab_welch_value_click_view", ab_welch_value_click_view, AB_WELCH_SQL),
+    ("dedup_containment_docs", dedup_containment_docs, DEDUP_CONTAINMENT_SQL),
+    ("sketch_quantiles_events", sketch_quantiles_events, SKETCH_QUANTILES_SQL),
+    ("dedup_keep_best_quality", dedup_keep_best_quality, DEDUP_KEEP_BEST_SQL),
+    ("dedup_scrub_benchmark_spans", dedup_scrub_benchmark_spans,
+     SCRUB_BENCH_SQL),
+    ("ts_seasonal_decompose_events", ts_seasonal_decompose_events,
+     SEASONAL_DECOMPOSE_SQL),
+)

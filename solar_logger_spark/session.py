@@ -56,16 +56,18 @@ def get_spark(
     """Create (or fetch) a SparkSession tuned for this engine.
 
     Defaults are env-overridable so the driver's bench harness can pin
-    cores via ``SPARK_GRAFT_CPUS``.
+    cores via ``SPARK_GRAFT_CPUS``; unset, it is the number of CPUs this
+    process may run on (what ``nproc`` reports).
     """
     _enable_py4j_nodelay()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    host_cpus = len(os.sched_getaffinity(0))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(host_cpus))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         try:
             shuffle_partitions = max(int(cpus), 8)
         except ValueError:
-            shuffle_partitions = 32
+            shuffle_partitions = max(host_cpus, 8)
 
     builder = (
         SparkSession.builder.appName(app_name)

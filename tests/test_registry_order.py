@@ -173,3 +173,24 @@ def test_rows_only_record_for_oracle_backed_query_rechecks():
     # oracle_sql(), and none are
     got = _order(out, {8: {"similarity_ann_ivf": NO_ORACLE}})
     assert got == ["similarity_ann_ivf", "fresh"]
+
+
+def test_registry_pins_names_order_and_oracles():
+    """The registry is assembled from the query modules' tables: the
+    same 210 names, the same oracle SQL text and the same order as the
+    two hand-kept dicts it replaced (``flux_agg_sliding`` moved into
+    the Flux block, so the order pin leaves it out)."""
+    import hashlib
+    import json
+
+    def md5(s: str) -> str:
+        return hashlib.md5(s.encode()).hexdigest()
+
+    q, o = em.queries(), em.oracle_sql()
+    assert md5("\n".join(sorted(q))) == "446195b09c084b290570dc4f8689b888"
+    assert md5(json.dumps(o, sort_keys=True)) == "866a1f08aaa4af64642f4fe237dc2857"
+    assert md5(
+        "\n".join(n for n in q if n != "flux_agg_sliding")
+    ) == "587b768f953f5e90de9a2d32186a77e4"
+    assert set(em.CHANGED_IN_ROUND) <= set(q)
+    assert set(o) == set(q)

@@ -1,6 +1,7 @@
 """Similarity-search semantics with known geometry."""
 
 import math
+import warnings
 
 import pytest
 from pyspark.sql import Row
@@ -161,12 +162,17 @@ def test_neardup_blocked_matches_broadcast(spark):
             df, threshold=0.5, method="broadcast"
         ).collect()
     }
-    blocked = {
-        (r.a_id, r.b_id): r.cos_sim
-        for r in similarity.neardup_pairs(
+    # the blocked kernel's applyInPandas must build without PySpark
+    # failing to infer its eval type from partial type hints
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        blocked_df = similarity.neardup_pairs(
             df, threshold=0.5, method="blocked", n_blocks=5
-        ).collect()
-    }
+        )
+    assert not [
+        w for w in caught if "Cannot infer the eval type" in str(w.message)
+    ]
+    blocked = {(r.a_id, r.b_id): r.cos_sim for r in blocked_df.collect()}
     assert blocked == exact
     assert len(exact) > 0
 
