@@ -201,7 +201,6 @@ def upsert(
     updates: DataFrame,
     keys: list[str],
     delete_filter: Column | None = None,
-    order_col: str | None = None,
     keep_snapshots: int = 2,
     partition_by: Sequence[str] | None = None,
     partition_scoped: bool = False,
@@ -250,11 +249,10 @@ def upsert(
     total coverage; content-hashed layouts whose updates fan out wide
     (one doc → rows in many partitions) should set it lower.
 
-    ``order_col``: a monotonic version/event-time column. When given, an
-    update only replaces a base row if its ``order_col`` is >= the base
-    row's — a redelivered STALE row (at-least-once sources, late
-    re-sends) cannot regress newer table state. Without it, updates win
-    unconditionally (last-writer-wins by arrival).
+    Updates win unconditionally (last-writer-wins by arrival); a caller
+    that must not let a redelivered STALE row regress newer state
+    filters its updates first (the ingest status fold does so on the
+    driver, ``streaming.ingest.status_dimension_sink``).
 
     The base side anti-joins the distinct update-key set (no hint —
     Catalyst/AQE broadcast it when it is small, which it usually is;
@@ -339,21 +337,6 @@ def upsert(
         # NULL predicate means "not deleted" — coalesce before negating,
         # else three-valued logic silently drops NULL-predicate rows
         base = base.filter(~F.coalesce(delete_filter, F.lit(False)))
-    if order_col is not None:
-        # drop stale updates: keep only rows at/above the base version.
-        # matched_base is |matched keys| rows — small like upd_keys.
-        upd_keys0 = updates.select(*keys).distinct()
-        matched = base.join(upd_keys0, keys, "left_semi").select(
-            *keys, F.col(order_col).alias("_base_order")
-        )
-        updates = (
-            updates.join(matched, keys, "left")
-            .filter(
-                F.col("_base_order").isNull()
-                | (F.col(order_col) >= F.col("_base_order"))
-            )
-            .drop("_base_order")
-        )
     upd_keys = updates.select(*keys).distinct()
     kept = base.join(upd_keys, keys, "left_anti")
     merged = kept.unionByName(updates.select(*base.columns))
@@ -640,61 +623,6 @@ def replace_table(
     return _write_next_snapshot(
         df, table_dir, snap, keep_snapshots, partition_by, sidecar
     )
-
-
-def upsert_sink(
-    table_dir: str,
-    keys: list[str],
-    order_col: str | None = None,
-    keep_snapshots: int = 2,
-):
-    """``foreachBatch`` function for a streaming MERGE sink: every
-    micro-batch upserts by key, so redelivered rows (at-least-once
-    sources, batch replays) overwrite instead of duplicating —
-    key-idempotent table state from an at-least-once stream.
-    Initializes the table on the first non-empty batch.
-
-    ``order_col`` picks the within-batch winner per key (max wins,
-    e.g. an event timestamp) — deterministic across batch replays —
-    AND is forwarded to :func:`upsert` so a LATER batch redelivering an
-    older row cannot regress newer table state. Without it, an
-    arbitrary row per key survives (dropDuplicates) and updates win
-    unconditionally; fine when upstream already emits one fresh row
-    per key per batch.
-
-    Usage::
-
-        q = (stream.writeStream
-             .foreachBatch(upsert_sink(path, ["device_id"], "ts"))
-             .option("checkpointLocation", ckpt).start())
-    """
-
-    def _write(batch_df: DataFrame, _batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        if order_col is not None:
-            others = [c for c in batch_df.columns if c not in keys]
-            dedup = batch_df.groupBy(*keys).agg(
-                *[
-                    F.max_by(c, F.col(order_col)).alias(c)
-                    for c in others
-                ]
-            )
-        else:
-            dedup = batch_df.dropDuplicates(keys)
-        if current_snapshot(table_dir) is None:
-            init_table(dedup, table_dir)
-        else:
-            upsert(
-                batch_df.sparkSession,
-                table_dir,
-                dedup,
-                keys,
-                order_col=order_col,
-                keep_snapshots=keep_snapshots,
-            )
-
-    return _write
 
 
 def _swap_pointer(table_dir: str, name: str) -> None:

@@ -14,21 +14,26 @@ engine + checkpointing (T3/T6 — strictly stronger than the reference's
 lossy in-memory queue; divergence documented in SURVEY §2.9).
 
 The status table is a maintained latest-per-device dimension in the
-io/merge snapshot store (``<out>/_status_dim``): each micro-batch folds
-its status messages in with a ts-guarded MERGE and an atomic pointer
-swap, then gates its points against the result.
+io/merge snapshot store (``<out>/_status_dim``). The driver holds it as
+a dict, the way the reference holds ``self._status``: each micro-batch
+collects its status messages, folds them in with the MERGE's
+ts-guarded rule, commits a new snapshot with an atomic pointer swap
+only when a row changed, then gates its points against the result.
 
 Scale notes: topic parsing, time extraction and the unpivot are
 codegen'd column ops; the only Python is the Arrow-batched payload
-decode. The status gate broadcasts the per-device status dimension —
-at 1000 executors the data stream never shuffles for the gate. Sink
-files are partitioned by (measurement, date) so downstream time-range +
-measurement queries prune partitions instead of scanning.
+decode. The status gate is an IN-list over the driver-held dimension,
+one row per device: a filter on the data scan, so the data stream never
+shuffles or joins for the gate and offline devices' packets are dropped
+before decode. Sink files are partitioned by (measurement, date) so
+downstream time-range + measurement queries prune partitions instead of
+scanning.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -38,8 +43,8 @@ from pyspark.sql.types import (
 )
 
 from solar_logger_spark.io import merge as M
-# status_gate stays importable from here: perfbench's traced ingest run
-# hooks both operators by this module's names
+# latest_per_key stays importable from here: perfbench's traced ingest
+# run hooks it by this module's name
 from solar_logger_spark.operators.asof import latest_per_key, status_gate  # noqa: F401
 from solar_logger_spark.streaming.decode import decode_packets
 
@@ -100,11 +105,14 @@ def data_points(df: DataFrame) -> DataFrame:
 
 
 def gated_batch(raw: DataFrame) -> DataFrame:
-    """Batch form of the online gate: the same broadcast semi-join as
-    :func:`gated_batch_from_dimension`, against the latest status per
-    device reduced from ``raw``'s own status messages."""
-    latest = latest_per_key(status_updates(raw), ["device"], payload_cols=["status"])
-    return gated_batch_from_dimension(raw, latest)
+    """Batch form of the online gate: decode ``raw``'s data messages
+    and keep the devices whose latest status among ``raw``'s own status
+    messages is online (:func:`status_gate`, a broadcast semi-join)."""
+    return status_gate(
+        data_points(raw),
+        status_updates(raw).withColumnRenamed("device", "measurement"),
+        ["measurement"],
+    )
 
 
 class IngestBatchProcessor:
@@ -113,21 +121,23 @@ class IngestBatchProcessor:
 
     Status (S3, the reference's ``self._status`` dict,
     ``mqtt_classes.py:114-119``): each batch's status messages fold
-    into the maintained dimension at ``<out>/_status_dim``
-    (:func:`status_dimension_sink`), and the batch's points are then
-    gated against it (:func:`gated_batch_from_dimension`). Until the
-    first status message arrives nothing is gated; after that, a device
-    without an ``online`` row is.
+    into the dimension at ``<out>/_status_dim``, held on the driver by
+    :func:`status_dimension_sink`, and the batch's points are filtered
+    to the devices it holds as ``online``. Until the first status
+    message arrives nothing is gated. A batch runs three Spark jobs:
+    collect its status rows, commit the dimension (skipped when no row
+    changed), write the points.
 
-    Effectively-once (T6): foreachBatch is at-least-once — after a crash
-    between sink write and checkpoint commit, the same ``epoch_id``
-    replays. A committed-batch marker directory (one empty file per
-    epoch, written *after* the points append) lets the replay detect the
-    duplicate and skip the append, upgrading the plain-parquet sink to
-    effectively-once. (A transactional table format gets this from its
-    commit protocol; this is the same idea scaled down.) A crash inside
-    the status fold leaves no points and no marker, and the ts-guarded
-    MERGE makes the replayed fold a no-op for rows already folded.
+    Effectively-once (T6): foreachBatch is at-least-once, so a crashed
+    ``epoch_id`` replays. The points are written to
+    ``<out>/_staging/epoch-<id>`` and their files renamed into
+    ``points/``; only then is the epoch's marker (an empty file under
+    ``<out>/_commits``) written and the stage removed. A replay skips an
+    epoch with a marker, finishes the renames of a stage Spark committed
+    (``_SUCCESS``) without a job, and rewrites a stage without one — no
+    crash point appends an epoch's points twice. A crash inside the
+    status fold leaves no points and no marker, and replaying the fold
+    changes nothing already folded.
 
     Upgrade: sink directories written before the dimension existed keep
     their learned statuses in a ``<out>/_status`` parquet table. An
@@ -140,6 +150,7 @@ class IngestBatchProcessor:
         self.dim_path = os.path.join(output_dir, "_status_dim")
         self.points_path = os.path.join(output_dir, "points")
         self.commits_path = os.path.join(output_dir, "_commits")
+        self.staging_path = os.path.join(output_dir, "_staging")
         self.gate_online = gate_online
         self._fold_status = status_dimension_sink(self.dim_path)
 
@@ -147,35 +158,56 @@ class IngestBatchProcessor:
         return os.path.join(self.commits_path, f"epoch-{epoch_id}")
 
     def __call__(self, batch: DataFrame, epoch_id: int) -> None:
+        stage = os.path.join(self.staging_path, f"epoch-{epoch_id}")
         if os.path.exists(self._commit_marker(epoch_id)):
+            shutil.rmtree(stage, ignore_errors=True)  # crashed before cleanup
             return  # crash-replay of an already-committed batch
-        (
-            self._gated_points(batch, epoch_id)
-            .withColumn("date", F.to_date("ts"))
-            # time-sorted within each written file → tight per-row-group
-            # ts min/max stats, so time-range scans skip row groups even
-            # inside a partition
-            .sortWithinPartitions("measurement", "date", "ts")
-            .write.mode("append")
-            .partitionBy("measurement", "date")
-            .parquet(self.points_path)
-        )
+        if not os.path.exists(os.path.join(stage, "_SUCCESS")):
+            shutil.rmtree(stage, ignore_errors=True)  # a half-written stage
+            (
+                self._gated_points(batch, epoch_id)
+                .withColumn("date", F.to_date("ts"))
+                # time-sorted within each written file → tight
+                # per-row-group ts min/max stats, so time-range scans
+                # skip row groups even inside a partition
+                .sortWithinPartitions("measurement", "date", "ts")
+                .write.partitionBy("measurement", "date")
+                .parquet(stage)
+            )
+        _move_files(stage, self.points_path)
         os.makedirs(self.commits_path, exist_ok=True)
         with open(self._commit_marker(epoch_id), "w"):
             pass
+        shutil.rmtree(stage)
 
     def _gated_points(self, batch: DataFrame, epoch_id: int) -> DataFrame:
-        spark_b = batch.sparkSession
         if M.current_snapshot(self.dim_path) is None and os.path.exists(
             self.legacy_status_path
         ):
-            M.init_table(spark_b.read.parquet(self.legacy_status_path), self.dim_path)
-        self._fold_status(batch, epoch_id)
-        if not self.gate_online or M.current_snapshot(self.dim_path) is None:
-            return data_points(batch)
-        return gated_batch_from_dimension(
-            batch, M.read_table_snapshot(spark_b, self.dim_path)
-        )
+            M.init_table(
+                batch.sparkSession.read.parquet(self.legacy_status_path),
+                self.dim_path,
+            )
+        dim = self._fold_status(batch, epoch_id)
+        points = data_points(batch)
+        if not self.gate_online or dim is None:
+            return points
+        online = [d for d, (_, status) in dim.items() if status == "online"]
+        return points.filter(F.col("measurement").isin(online))
+
+
+def _move_files(src: str, dst: str) -> None:
+    """Rename every file below ``src``'s subdirectories to the same
+    path under ``dst``. Spark's part-file names are unique per write
+    job, and a moved file leaves ``src``: a re-run moves what is left."""
+    os.makedirs(dst, exist_ok=True)
+    for root, _, files in os.walk(src):
+        rel = os.path.relpath(root, src)
+        if rel == os.curdir:
+            continue
+        os.makedirs(os.path.join(dst, rel), exist_ok=True)
+        for f in files:
+            os.replace(os.path.join(root, f), os.path.join(dst, rel, f))
 
 
 def ingest_query(
@@ -213,20 +245,24 @@ def ingest_query(
 def status_dimension_sink(table_dir: str, keep_snapshots: int = 2):
     """S3 as a MAINTAINED dimension: a ``foreachBatch`` function that
     folds each micro-batch's status messages into a latest-per-device
-    table in the io/merge snapshot store (MERGE keyed by device,
-    ``ts``-guarded so a late redelivery of an OLD status can never
-    regress a newer one — at-least-once transports redeliver, T6).
+    table ``(device, status, ts)`` in the io/merge snapshot store and
+    returns it as ``{device: (ts in epoch micros, status)}`` (``None``
+    while no snapshot exists).
 
-    This closes the loop between the streaming status branch and the
-    snapshot store: ``status_gate`` recomputes latest-per-key per query
-    (fine at any scale — the status side broadcasts), while this sink
-    materializes the same reduction once as queryable table state,
-    which is what the ingest sink's gate, a fleet dashboard or an
-    external gate consumer reads. Each fold commits a new snapshot and
-    then swaps ``_CURRENT`` atomically, so a crash at any step leaves
-    the previous snapshot live, and replaying the batch re-applies the
-    same upsert. Differential-pinned in tests: streamed upserts == batch
-    ``latest_per_key`` over the full status history.
+    The dimension is held on the driver, keyed by the ``_CURRENT``
+    snapshot name it was read or committed as; it is re-read (two jobs)
+    only when that name differs, e.g. after a restart or a crash inside
+    the swap. Each batch collects its status rows (one job) and folds
+    them in with the MERGE rule: a row replaces the held one when its
+    ts is >= the held ts, so the latest ts wins within a batch and a
+    late redelivery of an OLD status never regresses a newer one (T6).
+    A row without a ts never replaces a timed one and carries no status
+    (``max_by``'s null rule). Only a fold that changed a row commits:
+    ``io.merge.replace_table`` of a literal-row frame (one job) writes a
+    new snapshot and swaps ``_CURRENT`` atomically, so a crash at any
+    step leaves the previous snapshot live and the replay re-applies
+    the same fold. Differential-pinned in tests: streamed folds ==
+    batch ``latest_per_key`` over the full status history.
 
     Usage::
 
@@ -234,32 +270,48 @@ def status_dimension_sink(table_dir: str, keep_snapshots: int = 2):
              .foreachBatch(status_dimension_sink(dim_dir))
              .option("checkpointLocation", ckpt).start())
     """
-    inner = M.upsert_sink(
-        table_dir, keys=["device"], order_col="ts",
-        keep_snapshots=keep_snapshots,
-    )
+    snap: str | None = None
+    dim: dict[str, tuple[int | None, str | None]] = {}
 
-    def _write(batch: DataFrame, epoch_id: int) -> None:
-        inner(status_updates(batch), epoch_id)
+    def _write(batch: DataFrame, epoch_id: int) -> dict | None:
+        nonlocal snap, dim
+        spark = batch.sparkSession
+        micros = ["device", F.unix_micros("ts"), "status"]
+        rows = status_updates(batch).select(*micros).collect()
+        live = M.current_snapshot(table_dir)
+        if live != snap:
+            stored = [] if live is None else (
+                M.read_table_snapshot(spark, table_dir, at=live)
+                .select(*micros).collect()
+            )
+            snap, dim = live, {device: (ts, status) for device, ts, status in stored}
+        folded = dict(dim)
+        for device, ts, status in rows:
+            held = folded.get(device)
+            if held is None or held[0] is None or (ts is not None and ts >= held[0]):
+                folded[device] = (ts, status if ts is not None else None)
+        if folded != dim:
+            snap, dim = M.replace_table(
+                _dimension_frame(spark, folded), table_dir,
+                keep_snapshots=keep_snapshots,
+            ), folded
+        return None if snap is None else dim
 
     return _write
 
 
-def gated_batch_from_dimension(
-    raw: DataFrame, dimension: DataFrame
-) -> DataFrame:
-    """The online gate evaluated against a MAINTAINED status dimension
-    (see :func:`status_dimension_sink`) instead of re-reducing the raw
-    status stream: decode the batch's data messages and keep devices
-    whose dimension row says online. The dimension is one row per
-    device — always broadcastable, so the point stream never shuffles
-    (:func:`gated_batch` runs this same semi-join)."""
-    online = dimension.filter(F.col("status") == "online").select("device")
-    points = data_points(raw).withColumnRenamed("measurement", "device")
-    return (
-        points.join(F.broadcast(online), "device", "left_semi")
-        .withColumnRenamed("device", "measurement")
-    )
+def _dimension_frame(spark: SparkSession, dim: dict) -> DataFrame:
+    """``dim`` as a one-partition frame of literal rows: no Python RDD,
+    and no SQL text (device names come from MQTT topics)."""
+    rows = [
+        F.struct(
+            F.lit(device).alias("device"),
+            F.lit(status).cast("string").alias("status"),
+            F.timestamp_micros(F.lit(ts).cast("long")).alias("ts"),
+        )
+        for device, (ts, status) in sorted(dim.items())
+    ]
+    return spark.range(1, numPartitions=1).select(F.inline(F.array(*rows)))
 
 
 def dedup_stream(

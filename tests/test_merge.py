@@ -97,62 +97,6 @@ def test_time_travel_read(spark, table):
         M.read_table_snapshot(spark, table, at="snap-000099")
 
 
-def test_upsert_sink_batches_are_key_idempotent(spark, tmp_path):
-    """foreachBatch-contract test: redelivered keys overwrite, the
-    order_col picks the within-batch winner, replays don't duplicate."""
-    d = str(tmp_path / "stream_tbl")
-    sink = M.upsert_sink(d, keys=["device_id"], order_col="ts")
-
-    b0 = spark.createDataFrame(
-        [
-            Row(device_id=1, ts=10, status="online"),
-            Row(device_id=1, ts=11, status="offline"),  # later ts wins
-            Row(device_id=2, ts=10, status="online"),
-        ]
-    )
-    sink(b0, 0)
-    rows = {r.device_id: r for r in M.read_table_snapshot(spark, d).collect()}
-    assert rows[1].status == "offline" and rows[2].status == "online"
-
-    b1 = spark.createDataFrame(
-        [
-            Row(device_id=2, ts=20, status="offline"),  # update
-            Row(device_id=3, ts=20, status="online"),  # insert
-        ]
-    )
-    sink(b1, 1)
-    sink(b1, 1)  # replay of the same batch: no duplicates
-    rows = {r.device_id: r for r in M.read_table_snapshot(spark, d).collect()}
-    assert len(rows) == 3
-    assert rows[2].status == "offline" and rows[3].status == "online"
-
-    empty = spark.createDataFrame([], b1.schema)
-    sink(empty, 2)  # no-op, no new snapshot
-    assert M.read_table_snapshot(spark, d).count() == 3
-
-
-def test_upsert_stale_redelivery_cannot_regress(spark, tmp_path):
-    """order_col guards ACROSS batches: a later batch redelivering an
-    older row must not overwrite newer table state."""
-    d = str(tmp_path / "stale_tbl")
-    sink = M.upsert_sink(d, keys=["device_id"], order_col="ts")
-    sink(
-        spark.createDataFrame([Row(device_id=1, ts=100, status="online")]), 0
-    )
-    # late re-send of an older state in a LATER batch
-    sink(
-        spark.createDataFrame([Row(device_id=1, ts=50, status="offline")]), 1
-    )
-    rows = M.read_table_snapshot(spark, d).collect()
-    assert len(rows) == 1
-    assert (rows[0].ts, rows[0].status) == (100, "online")
-    # equal-or-newer still wins
-    sink(
-        spark.createDataFrame([Row(device_id=1, ts=100, status="maint")]), 2
-    )
-    assert M.read_table_snapshot(spark, d).collect()[0].status == "maint"
-
-
 def test_upsert_recovers_from_orphan_snapshot_dir(spark, table):
     """A crash between snapshot write and pointer swap leaves an orphan
     dir; the next upsert must clean it and proceed, not collide."""
@@ -285,21 +229,6 @@ def test_partition_scoped_upsert_links_untouched_partitions(spark, ptable):
     assert not os.path.isdir(os.path.join(ptable, old))
     got = {r.k for r in M.read_table_snapshot(spark, ptable).collect()}
     assert got == set(range(20))
-
-
-def test_partition_scoped_upsert_respects_order_col(spark, ptable):
-    # make rows versioned: add ts via a full replace first
-    base = M.read_table_snapshot(spark, ptable).withColumn(
-        "ts", F.lit(10)
-    )
-    M.replace_table(base, ptable, partition_by=["p"])
-    stale = spark.createDataFrame([Row(k=3, p=3, v="STALE", ts=5)])
-    fresh = spark.createDataFrame([Row(k=4, p=0, v="FRESH", ts=20)])
-    M.upsert(spark, ptable, stale.unionByName(fresh), keys=["k"],
-             order_col="ts", partition_by=["p"], partition_scoped=True)
-    got = {r.k: r.v for r in M.read_table_snapshot(spark, ptable).collect()}
-    assert got[3] == "v3"      # stale redelivery cannot regress
-    assert got[4] == "FRESH"
 
 
 def test_partition_scoped_upsert_validations(spark, ptable):

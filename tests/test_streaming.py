@@ -164,11 +164,18 @@ def test_gated_batch_drops_offline_device(spark):
 # end-to-end streaming: file replay → decode → gate → partitioned sink
 # ---------------------------------------------------------------------------
 
-def _dim_status(spark, out_dir):
+def _dim_rows(spark, dim_dir):
     from solar_logger_spark.io import merge as M
 
-    snap = M.read_table_snapshot(spark, out_dir + "/_status_dim")
-    return {r.device: r.status for r in snap.collect()}
+    return {
+        r.device: (r.status, r.ts)
+        for r in M.read_table_snapshot(spark, dim_dir).collect()
+    }
+
+
+def _dim_status(spark, out_dir):
+    rows = _dim_rows(spark, out_dir + "/_status_dim")
+    return {device: status for device, (status, _) in rows.items()}
 
 
 def test_ingest_query_end_to_end(spark, tmp_path):
@@ -928,11 +935,11 @@ def test_attribution_join_stream_equals_batch(spark, sf_dir, tmp_path):
 
 
 def test_status_dimension_stream_equals_batch_latest(spark, tmp_path):
-    """Streamed status upserts through status_dimension_sink == batch
+    """Streamed status folds through status_dimension_sink == batch
     latest_per_key over the full status history — including a later
     batch redelivering a STALE status, which must not regress the
-    dimension (the order_col guard)."""
-    from solar_logger_spark.io import merge as M
+    dimension (the fold's ts guard); the ingest sink's gate over that
+    dimension keeps the points ``gated_batch`` keeps."""
     from solar_logger_spark.operators.asof import latest_per_key
 
     t = lambda m: datetime(2024, 1, 1, 0, m)  # noqa: E731
@@ -955,7 +962,8 @@ def test_status_dimension_stream_equals_batch_latest(spark, tmp_path):
         ],
     ]
     input_dir = tmp_path / "in"
-    dim_dir = str(tmp_path / "dim")
+    out_dir = str(tmp_path / "out")
+    dim_dir = out_dir + "/_status_dim"  # where the ingest sink keeps it
     for i, rows in enumerate(batches):
         _raw_df(spark, rows).coalesce(1).write.parquet(
             str(input_dir / f"f{i}")
@@ -973,10 +981,7 @@ def test_status_dimension_stream_equals_batch_latest(spark, tmp_path):
     )
     q.awaitTermination(120)
 
-    got = {
-        r.device: (r.status, r.ts)
-        for r in M.read_table_snapshot(spark, dim_dir).collect()
-    }
+    got = _dim_rows(spark, dim_dir)
     all_raw = _raw_df(spark, [r for b in batches for r in b])
     want = {
         r.device: (r.status, r.ts)
@@ -988,14 +993,15 @@ def test_status_dimension_stream_equals_batch_latest(spark, tmp_path):
     assert got["dc-1"] == ("offline", t(3))  # the stale replay lost
 
     # the maintained dimension gates a batch exactly like gated_batch
-    data_raw = _raw_df(
-        spark,
-        [("mate/dc-1/1-data", b"x", t(20)), ("mate/mx-1/1-data", b"x", t(20))],
-    )
-    dim = M.read_table_snapshot(spark, dim_dir)
-    gated = I.gated_batch_from_dimension(data_raw, dim)
-    # dc-1 offline -> dropped before decode; mx-1 online -> decode path
-    assert {r.measurement for r in gated.collect()} <= {"mx-1"}
+    # over the whole status history: dc-1 offline, mx-1 online
+    dc_pkt, _ = _packet("dc-1", 1704067200, 7.0)
+    mx_pkt, _ = _packet("mx-1", 1704067200, 8.0)
+    data = [("mate/dc-1/dc-status", dc_pkt, t(20)), ("mate/mx-1/mx-status", mx_pkt, t(20))]
+    I.IngestBatchProcessor(out_dir)(_raw_df(spark, data), 0)
+    sunk = spark.read.parquet(out_dir + "/points").collect()
+    gated = I.gated_batch(_raw_df(spark, [r for b in batches for r in b] + data)).collect()
+    assert {r.measurement for r in sunk} == {r.measurement for r in gated} == {"mx-1"}
+    assert len(sunk) == len(gated) == len(D.MX_FIELDS)
 
 
 def test_legacy_status_table_seeds_dimension(spark, tmp_path):
@@ -1078,3 +1084,214 @@ def test_status_fold_crash_replays_exactly_once(spark, tmp_path, monkeypatch):
     assert _dim_status(spark, out_dir) == {
         "dc-1": "offline", "fx-1": "online", "mx-1": "offline",
     }
+
+
+# ---------------------------------------------------------------------------
+# the driver-held status fold (status_dimension_sink)
+
+
+def test_status_fold_batches_are_key_idempotent(spark, tmp_path):
+    """Within a batch the latest ts wins whatever the row order;
+    replaying a batch duplicates nothing; a batch that changes no row
+    (a replay, a restarted sink, an empty batch) commits no snapshot."""
+    from solar_logger_spark.io import merge as M
+
+    d = str(tmp_path / "dim")
+    fold = I.status_dimension_sink(d)
+    t = lambda m: datetime(2024, 1, 1, 0, m)  # noqa: E731
+    fold(_raw_df(spark, [
+        ("mate/dc-1/status", b"offline", t(11)),  # later ts wins
+        ("mate/dc-1/status", b"online", t(10)),
+        ("mate/fx-1/status", b"online", t(10)),
+    ]), 0)
+    assert _dim_rows(spark, d) == {"dc-1": ("offline", t(11)), "fx-1": ("online", t(10))}
+
+    b1 = _raw_df(spark, [
+        ("mate/fx-1/status", b"offline", t(20)),  # update
+        ("mate/mx-1/status", b"online", t(20)),  # insert
+    ])
+    fold(b1, 1)
+    snap = M.current_snapshot(d)
+    fold(b1, 1)  # replay of the same batch
+    I.status_dimension_sink(d)(b1, 1)  # ... by a restarted sink
+    fold(_raw_df(spark, []), 2)
+    assert M.current_snapshot(d) == snap
+    assert _dim_rows(spark, d) == {
+        "dc-1": ("offline", t(11)), "fx-1": ("offline", t(20)), "mx-1": ("online", t(20)),
+    }
+
+
+def test_status_fold_stale_redelivery_cannot_regress(spark, tmp_path):
+    """The ts guard holds ACROSS batches: a later batch redelivering an
+    older status leaves the newer row, and an equal ts replaces it
+    (the MERGE's ``>=``)."""
+    d = str(tmp_path / "dim")
+    fold = I.status_dimension_sink(d)
+    t = lambda m: datetime(2024, 1, 1, 0, m)  # noqa: E731
+    fold(_raw_df(spark, [("mate/dc-1/status", b"online", t(40))]), 0)
+    fold(_raw_df(spark, [("mate/dc-1/status", b"offline", t(20))]), 1)
+    assert _dim_rows(spark, d) == {"dc-1": ("online", t(40))}
+    got = fold(_raw_df(spark, [("mate/dc-1/status", b"maint", t(40))]), 2)
+    assert _dim_rows(spark, d) == {"dc-1": ("maint", t(40))}
+    assert got["dc-1"][1] == "maint"
+
+
+def test_status_fold_keeps_microseconds(spark, tmp_path):
+    """A status ts with non-zero microseconds round-trips exactly: the
+    committed row holds it, and a restarted sink that re-reads the
+    table sees the same row and commits nothing for a redelivery."""
+    from solar_logger_spark.io import merge as M
+
+    d = str(tmp_path / "dim")
+    ts = datetime(2024, 3, 9, 12, 34, 56, 123457)
+    batch = _raw_df(spark, [("mate/fx-1/status", b"online", ts)])
+    got = I.status_dimension_sink(d)(batch, 0)
+    assert _dim_rows(spark, d) == {"fx-1": ("online", ts)}
+    (want_us,) = spark.createDataFrame([(ts,)], "ts timestamp").select(
+        F.unix_micros("ts")
+    ).first()
+    assert want_us % 1_000_000 == 123457
+    assert got == {"fx-1": (want_us, "online")}
+    snap = M.current_snapshot(d)
+    assert I.status_dimension_sink(d)(batch, 0) == got
+    assert M.current_snapshot(d) == snap
+
+
+def test_status_fold_null_arrival_ts_matches_merge(spark, tmp_path):
+    """Status rows with a null ``arrival_ts`` fold as the MERGE folded
+    them: a row without a ts never replaces a timed one, a timed row
+    replaces an untimed one, and a device seen only without a ts gets a
+    row with neither status nor ts."""
+    d = str(tmp_path / "dim")
+    fold = I.status_dimension_sink(d)
+    t = lambda m: datetime(2024, 1, 1, 0, m)  # noqa: E731
+    fold(_raw_df(spark, [
+        ("mate/dc-1/status", b"online", None),
+        ("mate/dc-1/status", b"offline", t(1)),
+        ("mate/fx-1/status", b"online", None),
+    ]), 0)
+    assert _dim_rows(spark, d) == {"dc-1": ("offline", t(1)), "fx-1": (None, None)}
+    fold(_raw_df(spark, [
+        ("mate/dc-1/status", b"online", None),
+        ("mate/fx-1/status", b"online", t(2)),
+        ("mate/mx-1/status", b"online", None),
+    ]), 1)
+    assert _dim_rows(spark, d) == {
+        "dc-1": ("offline", t(1)), "fx-1": ("online", t(2)), "mx-1": (None, None),
+    }
+
+
+def test_dimension_with_no_device_online_drops_every_point(spark, tmp_path):
+    """Once the dimension exists, a device is let through only by an
+    ``online`` row; with none online the gate's IN-list is empty and
+    every point is dropped, in this batch and in a later one that
+    carries no status at all."""
+    out = str(tmp_path / "out")
+    ts = datetime(2024, 1, 1)
+    dc_pkt, _ = _packet("dc-1", 1704067200, 7.0)
+    mx_pkt, _ = _packet("mx-1", 1704067200, 8.0)
+    proc = I.IngestBatchProcessor(out)
+    proc(_raw_df(spark, [
+        ("mate/dc-1/status", b"offline", ts),
+        ("mate/mx-1/status", b"maint", ts),
+        ("mate/dc-1/dc-status", dc_pkt, ts),
+        ("mate/mx-1/mx-status", mx_pkt, ts),
+    ]), 0)
+    proc(_raw_df(spark, [("mate/dc-1/dc-status", dc_pkt, ts)]), 1)
+    assert _dim_status(spark, out) == {"dc-1": "offline", "mx-1": "maint"}
+    assert os.path.exists(proc._commit_marker(1))
+    written = [f for _, _, fs in os.walk(out + "/points") for f in fs if f.endswith(".parquet")]
+    assert written == []
+
+
+def test_ingest_batch_runs_three_jobs(spark, tmp_path):
+    """A warm micro-batch whose statuses change the dimension runs three
+    Spark jobs (collect the status rows, commit the dimension, write the
+    points); one whose statuses change nothing runs two."""
+    sc = spark.sparkContext
+    proc = I.IngestBatchProcessor(str(tmp_path / "out"))
+    t = lambda m: datetime(2024, 1, 1, 0, m)  # noqa: E731
+
+    def batch(epoch, status_ts):
+        pkt, _ = _packet("dc-1", 1704067200 + epoch, 1.0)
+        path = str(tmp_path / f"in-{epoch}")
+        _raw_df(spark, [
+            ("mate/dc-1/status", b"online", status_ts),
+            ("mate/mx-1/status", b"offline", status_ts),
+            ("mate/dc-1/dc-status", pkt, status_ts),
+        ]).coalesce(1).write.parquet(path)
+        return spark.read.schema(I.RAW_SCHEMA).parquet(path)
+
+    def jobs(df, epoch):
+        group = f"ingest-epoch-{epoch}"
+        sc.setJobGroup(group, group)
+        try:
+            proc(df, epoch)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    proc(batch(0, t(0)), 0)  # cold: bootstraps the dimension
+    assert jobs(batch(1, t(1)), 1) == 3
+    assert jobs(batch(2, t(1)), 2) == 2  # the same statuses again
+    points = spark.read.parquet(str(tmp_path / "out" / "points"))
+    assert points.count() == 3 * len(D.DC_FIELDS)
+
+
+def test_points_crash_before_marker_replays_exactly_once(spark, tmp_path, monkeypatch):
+    """A crash after the points reached ``points/`` but before the
+    epoch's ``_commits`` marker, or halfway through moving them there,
+    must not make the replay append them twice."""
+    out = str(tmp_path / "out")
+    proc = I.IngestBatchProcessor(out)
+    makedirs, replace = os.makedirs, os.replace
+    armed = {"marker": 1, "move": 0}
+
+    def crash_before_marker(path, *a, **kw):
+        if path == proc.commits_path and armed["marker"]:
+            armed["marker"] -= 1
+            raise OSError("injected crash before the _commits marker")
+        return makedirs(path, *a, **kw)
+
+    def crash_mid_move(src, dst):
+        if dst.startswith(out + "/points/") and armed["move"]:
+            armed["move"] -= 1
+            if armed["move"] == 0:
+                raise OSError("injected crash while moving points")
+        return replace(src, dst)
+
+    monkeypatch.setattr(I.os, "makedirs", crash_before_marker)
+    monkeypatch.setattr(I.os, "replace", crash_mid_move)
+    ts = datetime(2024, 1, 1)
+    dc_pkt, _ = _packet("dc-1", 1704067200, 7.0)
+    fx_pkt, _ = _packet("fx-1", 1704067200, 8.0)
+    mx_pkt, _ = _packet("mx-1", 1704153600, 9.0)
+    epochs = [
+        [
+            ("mate/dc-1/status", b"online", ts),
+            ("mate/fx-1/status", b"online", ts),
+            ("mate/dc-1/dc-status", dc_pkt, ts),
+            ("mate/fx-1/fx-status", fx_pkt, ts),
+        ],
+        [
+            ("mate/mx-1/status", b"online", ts),
+            ("mate/mx-1/mx-status", mx_pkt, ts),
+        ],
+    ]
+    keys = ["measurement", "ts", "field"]
+    for epoch_id, rows in enumerate(epochs):
+        batch = _raw_df(spark, rows)
+        with pytest.raises(OSError, match="injected crash"):
+            proc(batch, epoch_id)
+        assert not os.path.exists(proc._commit_marker(epoch_id))
+        proc(batch, epoch_id)  # the at-least-once replay
+        assert os.path.exists(proc._commit_marker(epoch_id))
+        points = spark.read.parquet(out + "/points")
+        assert points.count() == points.dropDuplicates(keys).count()
+        armed["move"] = 2  # the next epoch crashes on its second move
+
+    per_device = {r.measurement: r["count"] for r in points.groupBy("measurement").count().collect()}
+    assert per_device == {
+        "dc-1": len(D.DC_FIELDS), "fx-1": len(D.FX_FIELDS), "mx-1": len(D.MX_FIELDS),
+    }
+    assert not os.listdir(out + "/_staging")

@@ -1,11 +1,13 @@
 #!/usr/bin/env python
-"""Ingest-path throughput: synthetic wire packets → decode_packets →
+"""Decode throughput: synthetic wire packets → decode_packets →
 canonical points, fully materialized. Prints one JSON line with
-packets/s and points/s.
+packets/s and points/s. It runs no sink, no status fold and no
+micro-batch; for the ingest sink's wire-to-commit latency and
+throughput, run ``python3 perfbench/run.py --workload ingest``.
 
 Context (BASELINE.md): the reference's ingest tops out at O(10²)
 points/s by construction — per-point synchronous HTTP writes behind a
-150-deep in-memory queue. This measures our equivalent dataflow
+150-deep in-memory queue. This measures our equivalent decode dataflow
 (epoch/body extraction, bulk-numpy payload decode, JVM unpivot).
 
 Usage: python tools/bench_ingest.py [n_packets]
