@@ -1186,9 +1186,12 @@ def ngram_lm_score(
     # scheduler job per build — the crossJoin below carries the same
     # long count into the same integer adds, so every p is bit-equal
     # to the literal form (r13; the collect was the build's hot spot)
+    # Cut like c_full: a caller that runs several actions on the scores
+    # does not re-scan and re-explode the training corpus for V.
     vocab = (
         train_df.select(F.explode(ws).alias("w"))
         .agg(F.count_distinct("w").alias("_vsize"))
+        .localCheckpoint(eager=False)
     )
 
     model_full = F.broadcast(c_full) if broadcast_model else c_full

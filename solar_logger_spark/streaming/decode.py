@@ -14,19 +14,21 @@ Reference semantics (``src/classes/mqtt_classes.py``):
   **pluggable** here: a decoder is any ``Callable[[bytes], dict]``
   registered per measurement. A deterministic self-inverse codec with the
   exact reference field schemas (``tests/config/consts.py:60-138``) ships
-  as the default, so the Spark-side plumbing (binary columns, pandas-UDF
+  as the default, so the Spark-side plumbing (binary columns, Arrow
   batch shape, unpivot fan-out) is fully real and testable without pymate.
 * ``float(value)`` coercion (F6, :217): pymate values stringify as
   ``"27.4V"`` / ``"3.2kWh"`` / ``"100%"`` — only the leading numeric
   magnitude is stored. ``magnitude()`` implements that as a JVM-side
   regexp (codegen, no Python).
 
-Scale notes: the epoch extraction and payload slicing are pure built-in
-column expressions (whole-stage codegen); only the payload→fields decode
-crosses into Python, as an Arrow-batched pandas UDF — one Python call per
-~10k packets, not per packet (the reference pays one Python callback per
-message). The unpivot fan-out (one packet → N points, T2) is
-``explode(map)`` on the JVM.
+Scale notes: decode and unpivot are one ``mapInArrow`` pass over the
+``(measurement, payload)`` rows — one Python call per Arrow batch
+(~10k packets), not per packet (the reference pays one Python callback
+per message). For the default codec that call is a few numpy and Arrow
+kernels per measurement: one ``np.frombuffer`` over the payloads' data
+buffer yields every epoch and channel value, and the fan-out to one
+point per channel (T2) is a repeat and a tile. Only decoders registered
+with ``register_decoder`` run per packet.
 """
 
 from __future__ import annotations
@@ -35,10 +37,12 @@ import math
 import struct
 from collections.abc import Callable
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, DoubleType
 
 TIME_PACKET_SIZE = 4  # reference: src/helpers/consts.py:15
 
@@ -87,27 +91,6 @@ def detach_time(msg: bytes, padding_at_end: int = 0) -> tuple[int, bytes]:
     return epoch, bytes(msg[TIME_PACKET_SIZE:end])
 
 
-def epoch_expr(payload_col: str = "payload") -> Column:
-    """Column expr: little-endian epoch int32 from the packet's first 4
-    bytes, JVM-side. ``hex()`` renders the bytes in order; reordering the
-    four hex byte-pairs reverses endianness, then ``conv(base16, base10)``
-    yields the epoch. Stays inside whole-stage codegen — no Python."""
-    h = F.hex(F.substring(F.col(payload_col), 1, TIME_PACKET_SIZE))
-    le = F.concat(
-        F.substring(h, 7, 2), F.substring(h, 5, 2),
-        F.substring(h, 3, 2), F.substring(h, 1, 2),
-    )
-    return F.conv(le, 16, 10).cast("long")
-
-
-def body_expr(payload_col: str = "payload", padding_col: str = "padding") -> Column:
-    """Column expr: payload minus 4-byte time prefix and trailing padding."""
-    return F.expr(
-        f"substring({payload_col}, {TIME_PACKET_SIZE + 1}, "
-        f"length({payload_col}) - {TIME_PACKET_SIZE} - {padding_col})"
-    )
-
-
 # ---------------------------------------------------------------------------
 # Pluggable decoder registry (reference F2-F4)
 # ---------------------------------------------------------------------------
@@ -119,9 +102,9 @@ def _codec_decoder(fields: tuple[str, ...]) -> Decoder:
     """Default decoder: payload is the channels' float64 values packed
     little-endian in field order (the deterministic stand-in codec).
 
-    The ``codec_size`` attribute marks it bulk-decodable: the pandas UDF
-    below then decodes a whole Arrow batch with one ``np.frombuffer``
-    reshape instead of per-row ``struct.unpack`` calls."""
+    The ``codec_fields`` attribute marks it bulk-decodable:
+    ``decode_packets`` then decodes a whole Arrow batch with one
+    ``np.frombuffer`` instead of per-row ``struct.unpack`` calls."""
     fmt = f"<{len(fields)}d"
     size = struct.calcsize(fmt)
 
@@ -129,7 +112,7 @@ def _codec_decoder(fields: tuple[str, ...]) -> Decoder:
         values = struct.unpack(fmt, bytes(payload[:size]))
         return dict(zip(fields, values))
 
-    _decode.codec_size = size  # type: ignore[attr-defined]
+    _decode.codec_fields = fields  # type: ignore[attr-defined]
     return _decode
 
 
@@ -160,7 +143,6 @@ def synthetic_packet_udf(measurement: str):
     Encoding is one numpy structured-array write per batch (header +
     channels + zeroed padding laid out by dtype), not per-row
     ``struct.pack``."""
-    import numpy as np
     from pyspark.sql.types import BinaryType
 
     n = len(MEASUREMENT_FIELDS[measurement])
@@ -221,117 +203,119 @@ def _coerce(value) -> float | None:
         return None
 
 
-def make_decode_values_udf(decoders: dict[str, Decoder] | None = None):
-    """Build the Arrow-batched payload-decode UDF over a SNAPSHOT of the
-    decoder registry: (measurement, body bytes) → channel values in
-    ``MEASUREMENT_FIELDS`` order. Decode failures yield null (reference
-    T8: errors are isolated, the pipeline never dies —
-    ``mqtt_classes.py:289-296``).
-
-    The snapshot matters for distribution: Spark's Python workers import
-    this module themselves, so a UDF that read the module-level
-    ``DECODERS`` at execution time would see each worker's own pristine
-    copy — ``register_decoder`` calls on the driver would silently not
-    propagate (reused workers never re-import). Closing over a dict
-    value makes the active registry part of the serialized closure
-    instead.
-
-    Default-codec measurements take the bulk path: the batch's payloads
-    are concatenated and decoded with a single ``np.frombuffer`` reshape
-    — no per-row struct calls. Custom registered decoders fall back to
-    per-row dict decode + coercion."""
-    snapshot = dict(DECODERS if decoders is None else decoders)
-
-    @pandas_udf(ArrayType(DoubleType()))
-    def decode_values(measurement: pd.Series, body: pd.Series) -> pd.Series:
-        import numpy as np
-
-        out: list = [None] * len(measurement)
-        ms = measurement.to_numpy()
-        for m in pd.unique(ms):
-            dec, fields = snapshot.get(m), MEASUREMENT_FIELDS.get(m)
-            if dec is None:
-                continue
-            idx = np.nonzero(ms == m)[0]
-            size = getattr(dec, "codec_size", None)
-            if size is not None:
-                good = [
-                    i for i in idx
-                    if body.iat[i] is not None and len(body.iat[i]) == size
-                ]
-                if not good:
-                    continue
-                buf = b"".join(bytes(body.iat[i]) for i in good)
-                vals = np.frombuffer(buf, dtype="<f8").reshape(len(good), -1)
-                for j, i in enumerate(good):
-                    out[i] = vals[j]
-            else:
-                for i in idx:
-                    b = body.iat[i]
-                    if b is None:
-                        continue
-                    try:
-                        raw = dec(bytes(b))
-                    except Exception:
-                        continue
-                    keys = fields if fields is not None else tuple(raw)
-                    row = [_coerce(raw.get(k)) for k in keys]
-                    out[i] = [
-                        None if (v is not None and math.isnan(v)) else v
-                        for v in row
-                    ]
-        return pd.Series(out)
-
-    return decode_values
+_POINT_SCHEMA = "measurement string, ts timestamp, field string, value double"
 
 
-def field_names_map() -> Column:
-    """Literal measurement → channel-name-array map (JVM-side), so the
-    unpivot attaches field names without Python."""
-    entries = []
-    for m, fields in MEASUREMENT_FIELDS.items():
-        entries.append(F.lit(m))
-        entries.append(F.array(*[F.lit(f) for f in fields]))
-    return F.create_map(*entries)
+def _codec_points(payload: pa.Array, fields: tuple[str, ...], pad: int):
+    """Default codec: the payloads of the codec's exact width read as
+    one numpy record array over the binary array's data buffer —
+    ``<u4`` epoch, the channels' ``<f8`` values, pad bytes."""
+    layout = [("epoch", "<u4"), ("vals", "<f8", (len(fields),))]
+    if pad:
+        layout.append(("pad", f"V{pad}"))
+    dtype = np.dtype(layout)
+    payload = payload.filter(pc.equal(pc.binary_length(payload), dtype.itemsize))
+    n = len(payload)
+    if n == 0:
+        return None
+    _, offsets, data = payload.buffers()
+    wide = pa.types.is_large_binary(payload.type)
+    start = np.frombuffer(offsets, np.int64 if wide else np.int32)[payload.offset]
+    rec = np.frombuffer(data, dtype=dtype, count=n, offset=int(start))
+    k = len(fields)
+    ts = np.repeat(rec["epoch"].astype(np.int64) * 1_000_000, k)
+    field = pa.array(fields).take(np.tile(np.arange(k), n))
+    return ts, field, rec["vals"].reshape(-1)
+
+
+def _decoder_points(payload: pa.Array, decoder: Decoder, fields, pad: int):
+    """A registered decoder: per packet, payload → dict → ``_coerce``,
+    NaN → null; a packet whose decode raises is dropped (reference T8:
+    errors are isolated, the pipeline never dies —
+    ``mqtt_classes.py:289-296``)."""
+    ts, field, value = [], [], []
+    for p in payload.to_pylist():
+        if p is None:
+            continue
+        try:
+            raw = decoder(p[TIME_PACKET_SIZE:max(len(p) - pad, TIME_PACKET_SIZE)])
+            keys = fields if fields is not None else tuple(raw)
+            row = [_coerce(raw.get(k)) for k in keys]
+        except Exception:
+            continue
+        epoch = int.from_bytes(p[:TIME_PACKET_SIZE], "little") if p else None
+        ts += [None if epoch is None else epoch * 1_000_000] * len(keys)
+        field += keys
+        value += [None if v is not None and math.isnan(v) else v for v in row]
+    if not field:
+        return None
+    return ts, pa.array(field, pa.string()), value
+
+
+def _decode_batch(batch: pa.RecordBatch, decoders: dict[str, Decoder]):
+    """One Arrow batch of ``(measurement, payload)`` rows → one point
+    batch per decodable measurement in it."""
+    measurement, payload = batch.column(0), batch.column(1)
+    for m in pc.unique(measurement).to_pylist():
+        decoder = decoders.get(m)
+        if decoder is None:
+            continue
+        rows = payload.filter(pc.equal(measurement, m))
+        pad = PADDING_AT_END.get(m, 0)
+        fields = getattr(decoder, "codec_fields", None)
+        if fields is not None:
+            points = _codec_points(rows, fields, pad)
+        else:
+            points = _decoder_points(rows, decoder, MEASUREMENT_FIELDS.get(m), pad)
+        if points is None:
+            continue
+        ts, field, value = points
+        yield pa.RecordBatch.from_arrays(
+            [pa.repeat(m, len(field)), pa.array(ts, pa.timestamp("us", "UTC")),
+             field, pa.array(value, pa.float64())],
+            ["measurement", "ts", "field", "value"],
+        )
 
 
 def decode_packets(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Full decode pipeline over a (measurement, payload) DataFrame —
     batch or streaming identically.
 
-    epoch/body extraction is codegen'd JVM work; only the byte-level
-    field decode crosses to Python (Arrow batches, bulk numpy for the
-    default codec); the unpivot fan-out (T2: one packet → N single-field
-    points) is ``posexplode`` back on the JVM, with field names resolved
-    from a literal map. Output: ``(measurement, ts, field, value)`` —
-    the engine's canonical point schema (SURVEY §1.3).
+    One ``mapInArrow`` pass decodes and unpivots (T2: one packet → N
+    single-field points) each Arrow batch of ``(measurement, payload)``
+    rows. Output: ``(measurement, ts, field, value)`` — the engine's
+    canonical point schema (SURVEY §1.3). The first 4 bytes are the
+    epoch, read as an UNSIGNED little-endian int (``detach_time``
+    reads them signed, like the reference; the two differ only from
+    2³¹ s, in 2038). The payload is the bytes between the epoch and the
+    measurement's trailing padding. Packets of an unknown measurement
+    are dropped.
 
-    Custom decoders registered via ``register_decoder`` must emit the
-    measurement's registered field set (extra keys are ignored, missing
-    keys become null values).
+    Default-codec measurements decode in bulk: the packets of the
+    codec's exact width are one ``np.frombuffer`` record array, and a
+    packet of any other width is dropped. Decoders registered with
+    ``register_decoder`` run per packet; a packet whose decoder raises
+    is dropped, and NaN or a missing key gives a null value. They must
+    emit the measurement's registered field set (extra keys are
+    ignored); for a measurement without one, the dict's keys name the
+    fields.
+
+    The decoder registry is snapshotted into the pass's closure: Spark's
+    Python workers import this module themselves, so a pass that read
+    the module-level ``DECODERS`` at execution time would see each
+    worker's own pristine copy, and ``register_decoder`` calls on the
+    driver would silently not propagate.
+
+    The pass is opaque to the optimizer: a filter on its output is not
+    pushed below it, so filter the raw rows before calling this (as
+    ``ingest.data_points`` does with ``devices``).
     """
-    padding_map = F.create_map(
-        *[x for m, p in PADDING_AT_END.items() for x in (F.lit(m), F.lit(p))]
-    )
-    decoded = (
-        df.withColumn("_pad", F.coalesce(padding_map[F.col("measurement")], F.lit(0)))
-        .withColumn("ts", F.timestamp_seconds(epoch_expr(payload_col)))
-        .withColumn("_body", body_expr(payload_col, "_pad"))
-        .withColumn(
-            "_vals",
-            make_decode_values_udf()(F.col("measurement"), F.col("_body")),
-        )
-        .filter(F.col("_vals").isNotNull())  # T8: drop undecodable rows
-    )
-    return decoded.select(
-        "measurement",
-        "ts",
-        F.posexplode(F.col("_vals")).alias("_pos", "value"),
-    ).select(
-        "measurement",
-        "ts",
-        F.element_at(field_names_map()[F.col("measurement")], F.col("_pos") + 1).alias(
-            "field"
-        ),
-        "value",
+    decoders = dict(DECODERS)
+
+    def _points(batches):
+        for batch in batches:
+            yield from _decode_batch(batch, decoders)
+
+    return df.select("measurement", F.col(payload_col).alias("payload")).mapInArrow(
+        _points, _POINT_SCHEMA
     )

@@ -20,14 +20,14 @@ collects its status messages, folds them in with the MERGE's
 ts-guarded rule, commits a new snapshot with an atomic pointer swap
 only when a row changed, then gates its points against the result.
 
-Scale notes: topic parsing, time extraction and the unpivot are
-codegen'd column ops; the only Python is the Arrow-batched payload
-decode. The status gate is an IN-list over the driver-held dimension,
-one row per device: a filter on the data scan, so the data stream never
-shuffles or joins for the gate and offline devices' packets are dropped
-before decode. Sink files are partitioned by (measurement, date) so
-downstream time-range + measurement queries prune partitions instead of
-scanning.
+Scale notes: topic parsing is codegen'd column ops; the only Python is
+one Arrow pass that decodes each packet and unpivots it to points. The
+status gate is an IN-list over the driver-held dimension, one row per
+device, applied to the raw rows' topic device ahead of that pass: the
+data stream never shuffles or joins for the gate, and offline devices'
+packets are never decoded. Sink files are partitioned by (measurement,
+date) so downstream time-range + measurement queries prune partitions
+instead of scanning.
 """
 
 from __future__ import annotations
@@ -92,16 +92,19 @@ def status_updates(df: DataFrame) -> DataFrame:
     )
 
 
-def data_points(df: DataFrame) -> DataFrame:
+def data_points(df: DataFrame, devices: Sequence[str] | None = None) -> DataFrame:
     """P7 + F1-F5 + T2: the data branch — topic-routed decode to the
     canonical ``(measurement, ts, field, value)`` point stream. Event
-    time comes from the packet's embedded epoch (T1), not arrival."""
-    data = (
-        split_topic(df)
-        .filter(F.col("kind") == "data")
-        .withColumnRenamed("device", "measurement")
-    )
-    return decode_packets(data)
+    time comes from the packet's embedded epoch (T1), not arrival.
+
+    ``devices``, when given, keeps only the packets whose topic names one
+    of them. The filter runs on the raw rows, before the decode: the
+    decode pass is opaque to the optimizer, so a filter on its output
+    would decode every packet first."""
+    data = split_topic(df).filter(F.col("kind") == "data")
+    if devices is not None:
+        data = data.filter(F.col("device").isin(list(devices)))
+    return decode_packets(data.withColumnRenamed("device", "measurement"))
 
 
 def gated_batch(raw: DataFrame) -> DataFrame:
@@ -189,11 +192,10 @@ class IngestBatchProcessor:
                 self.dim_path,
             )
         dim = self._fold_status(batch, epoch_id)
-        points = data_points(batch)
         if not self.gate_online or dim is None:
-            return points
+            return data_points(batch)
         online = [d for d, (_, status) in dim.items() if status == "online"]
-        return points.filter(F.col("measurement").isin(online))
+        return data_points(batch, devices=online)
 
 
 def _move_files(src: str, dst: str) -> None:

@@ -43,18 +43,6 @@ def test_detach_time_zero_padding_keeps_payload():
     assert payload == b"abc"
 
 
-def test_epoch_expr_matches_struct_unpack(spark):
-    raws = [
-        b"\x00\x00\x00\x04xxxx",
-        struct.pack("<i", 1704067200) + b"body",
-        struct.pack("<i", 1) + b"p",
-    ]
-    df = spark.createDataFrame([Row(payload=r) for r in raws])
-    got = [r[0] for r in df.select(D.epoch_expr("payload")).collect()]
-    want = [struct.unpack("<i", r[:4])[0] for r in raws]
-    assert got == want
-
-
 def test_codec_roundtrip():
     for m in D.MEASUREMENT_FIELDS:
         pkt, values = _packet(m, 1704067200, 3.25)
@@ -110,6 +98,63 @@ def test_decode_packets_isolates_bad_rows(spark):
     assert len(out) == len(D.MX_FIELDS)  # bad rows dropped, stream alive
 
 
+def test_decode_packets_pins_decode_semantics(spark):
+    # The decode contract over both decoder kinds. Default codec: a
+    # payload of the wrong length and an unknown measurement are dropped,
+    # and the 4 epoch bytes read as UNSIGNED little-endian (detach_time
+    # reads them signed, like the reference). Registered decoder: a row
+    # whose decoder raises is dropped (T8); NaN and a missing key give a
+    # null value; "27.4V" coerces to 27.4.
+    mx, mx_values = _packet("mx-1", 1704070000, 5.0)
+    # 67108864 is the reference's golden epoch bytes (\x00\x00\x00\x04);
+    # 2**31 + 12345 has the top bit set
+    epochs = (1704070000, 1, 67108864, 2**31 + 12345)
+    pad = b"\x00" * D.PADDING_AT_END["fx-1"]
+
+    def fx_decoder(body: bytes) -> dict:
+        if body == b"raise":
+            raise ValueError("undecodable")
+        out = {f: str(i) for i, f in enumerate(D.FX_FIELDS)}
+        out["battery_voltage"] = "27.4V"
+        out["chg_current"] = float("nan")
+        del out["misc"]
+        return out
+
+    rows = [("mx-1", struct.pack("<I", e) + mx[4:]) for e in epochs] + [
+        ("mx-1", mx[:-1]),
+        ("mx-1", mx + b"\x00"),
+        ("unknown", mx),
+        ("fx-1", struct.pack("<i", 1704070001) + b"raise" + pad),
+        ("fx-1", struct.pack("<i", 1704070002) + b"ok" + pad),
+    ]
+    orig = D.DECODERS["fx-1"]
+    large_var_types = "spark.sql.execution.arrow.useLargeVarTypes"
+    got = []
+    try:
+        D.register_decoder("fx-1", fx_decoder)
+        points = D.decode_packets(spark.createDataFrame(rows, ["measurement", "payload"]))
+        # binary columns reach Python with 32-bit offsets, or 64-bit ones
+        # under this setting
+        for large in ("false", "true"):
+            spark.conf.set(large_var_types, large)
+            got.append({
+                (r.measurement, r.epoch, r.field): r.value
+                for r in points.select(
+                    "measurement", F.unix_seconds("ts").alias("epoch"), "field", "value"
+                ).collect()
+            })
+    finally:
+        spark.conf.unset(large_var_types)
+        D.register_decoder("fx-1", orig)
+    want = {("mx-1", e, f): v for e in epochs for f, v in mx_values.items()}
+    want |= {("fx-1", 1704070002, f): float(i) for i, f in enumerate(D.FX_FIELDS)}
+    want[("fx-1", 1704070002, "battery_voltage")] = 27.4
+    want[("fx-1", 1704070002, "chg_current")] = None
+    want[("fx-1", 1704070002, "misc")] = None
+    assert points.count() == len(want) == 4 * 10 + 14
+    assert got == [want, want]
+
+
 # ---------------------------------------------------------------------------
 # topic routing + status branch
 # ---------------------------------------------------------------------------
@@ -158,6 +203,31 @@ def test_gated_batch_drops_offline_device(spark):
     out = I.gated_batch(raw).collect()
     assert {r.measurement for r in out} == {"fx-1"}
     assert len(out) == len(D.FX_FIELDS)
+
+
+def test_data_points_decodes_once_below_device_gate(spark, tmp_path):
+    # One Python pass decodes and unpivots each packet, and the device
+    # gate filters the raw rows below it, so a gated-out packet is never
+    # decoded. Read from parquet: a local relation would fold the filter
+    # away before the plan is built.
+    ts = datetime(2024, 1, 1)
+    rows = [
+        (f"mate/{m}/{m[:2]}-status", _packet(m, 1704067200, 1.0)[0], ts)
+        for m in D.MEASUREMENT_FIELDS
+    ]
+    _raw_df(spark, rows).write.parquet(str(tmp_path / "raw"))
+    points = I.data_points(
+        spark.read.parquet(str(tmp_path / "raw")), devices=["dc-1", "fx-1"]
+    )
+    out = points.collect()
+    assert sorted({r.measurement for r in out}) == ["dc-1", "fx-1"]
+    assert len(out) == len(D.DC_FIELDS) + len(D.FX_FIELDS)
+    plan = points._jdf.queryExecution().executedPlan().toString().splitlines()
+    python_nodes = [i for i, line in enumerate(plan) if "Python" in line or "MapInArrow" in line]
+    assert len(python_nodes) == 1 and "MapInArrow" in plan[python_nodes[0]], plan
+    assert not any("ArrowEvalPython" in line or "Generate" in line for line in plan), plan
+    gate = [i for i, line in enumerate(plan) if "Filter" in line and "IN (dc-1,fx-1)" in line]
+    assert gate and gate[0] > python_nodes[0], plan
 
 
 # ---------------------------------------------------------------------------

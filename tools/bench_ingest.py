@@ -7,8 +7,9 @@ throughput, run ``python3 perfbench/run.py --workload ingest``.
 
 Context (BASELINE.md): the reference's ingest tops out at O(10²)
 points/s by construction — per-point synchronous HTTP writes behind a
-150-deep in-memory queue. This measures our equivalent decode dataflow
-(epoch/body extraction, bulk-numpy payload decode, JVM unpivot).
+150-deep in-memory queue. This measures our equivalent decode dataflow:
+one ``mapInArrow`` pass per Arrow batch that reads each measurement's
+packets with one ``np.frombuffer`` and unpivots them to points.
 
 Usage: python tools/bench_ingest.py [n_packets]
 """

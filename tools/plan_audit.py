@@ -4,7 +4,7 @@
 Flags plan smells that matter at 100 TB:
   * CartesianProduct / BroadcastNestedLoopJoin — quadratic unless intended
   * BatchEvalPython — row-at-a-time Python in the plan (ArrowEvalPython /
-    MapInPandas are the sanctioned Python paths)
+    MapInPandas / MapInArrow are the sanctioned Python paths)
   * a Window directly over an Exchange SinglePartition — a global
     analytic that moves the whole dataset to one task
 
