@@ -60,11 +60,13 @@ chunk of a series the folded B equals the old step-by-step recursion
 bit-for-bit (IEEE + is commutative and the seed zeroes every entry
 term), which keeps hand-computed unit pins valid on short series.
 
-Plan shape: one exchange for the rank, one hash exchange into rank
-blocks, then block-count-sized frames only; every fold struct is
-consumed across an exchange boundary, so each grid is evaluated once
-per consuming branch and never per-field. All folds are Catalyst
-higher-order functions — no Python anywhere in the path.
+Plan shape: one exchange for the rank, then level 0 as one Arrow
+``mapInPandas`` pass (numpy kernels replaying the pinned op
+sequence) whose output is lineage-cut once for its two consumers,
+then block-count-sized frames only. The mid/top folds are Catalyst
+higher-order functions; every fold struct is consumed across an
+exchange boundary, so each grid is evaluated once per consuming
+branch and never per-field.
 
 (Reference scope: the reference delegates these transforms to
 InfluxDB (src/classes/influx_query.py); the scan form is this repo's
@@ -117,14 +119,6 @@ class AffineNSpec:
             f"a{i}{j}" for i in rng for j in rng
         ) + tuple(f"c{i}" for i in rng)
         self.STATE = tuple(f"v{i}" for i in rng)
-
-    def identity(self) -> dict[str, Column]:
-        out = {}
-        for i in range(1, self.d + 1):
-            for j in range(1, self.d + 1):
-                out[f"a{i}{j}"] = F.lit(1.0 if i == j else 0.0)
-            out[f"c{i}"] = F.lit(0.0)
-        return out
 
     def compose(self, acc: Callable[[str], Column],
                 item: Callable[[str], Column]) -> dict[str, Column]:
@@ -431,171 +425,21 @@ def _segmented_rank(
     )
 
 
-def _affine_scan_jvm(
-    df: DataFrame,
-    coeffs: dict[str, Column],
-    spec,
-    series: Sequence[str],
-    ts_col: str,
-    tiebreak: Sequence[str],
-    out: dict[str, str],
-    emit: Column | None = None,
-    rank: str = "window",
-    persist_blocks: bool = True,
-) -> DataFrame:
-    """The generic pinned-hierarchy scan (module docstring). ``coeffs``
-    maps each spec field to its per-row Column (may reference
-    ``F.col(RANK_COL)``); ``out`` maps each spec STATE field to its
-    output column name; ``emit`` masks rows whose output is null
-    (warm-up) — their coefficient rows still participate in the fold
-    (callers pass identity maps there).
-
-    ``persist_blocks``: a prefix scan is inherently TWO-pass — the
-    block frame feeds both the summary chain and the final entry
-    join, so without caching Spark recomputes its lineage (the plan
-    shows 3 source scans; each remains fully distributed — a
-    constant-factor recompute, not a scale ceiling). The default
-    True persists the block frame (MEMORY_AND_DISK — spill-backed,
-    LRU-evictable) so the source is scanned once; measured faster at
-    every bench rep (6.4 vs 13.7 s cold, 3.1 vs 3.5 warm at sf0.1).
-    Pass False for strict no-cache lineage; the RESULT is
-    bit-identical either way. Long-lived sessions that scan many
-    distinct inputs can reclaim via ``spark.catalog.clearCache()``."""
-    series = list(series)
-    for c in df.columns:
-        if c in _RESERVED or c.startswith("_e_") or c.startswith("_os_"):
-            raise ValueError(
-                f"column {c!r} collides with an affine-scan internal"
-            )
-    order_cols = [F.col(ts_col), *[F.col(c) for c in tiebreak]]
-    emit = F.lit(True) if emit is None else emit
-    ranker = _segmented_rank if rank == "segmented" else _window_rank
-
-    staged = (
-        ranker(df, series, order_cols)
-        .withColumn("_m", _map_struct(spec, coeffs))
-        .withColumn("_emit", emit)
-        .withColumn("_blk", F.expr(f"({RANK_COL} - 1) DIV {BLOCK}"))
-    )
-
-    payload = F.struct(*[F.col(c) for c in df.columns])
-    # level 0: rank blocks; the grid struct _g is consumed only across
-    # exchange boundaries (the mid groupBy / the entry join), so it is
-    # never re-evaluated per-field inside one stage
-    l0 = (
-        staged.groupBy(*series, "_blk")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col(RANK_COL).alias("k"),
-                        F.col("_m").alias("m"),
-                        F.col("_emit").alias("e"),
-                        payload.alias("row"),
-                    )
-                )
-            ).alias("_items")
-        )
-        .withColumn(
-            "_g",
-            _memo_expr(
-                ("grid", spec.d, CHUNK, "_items.m"),
-                lambda: _grid(
-                    "transform(_items, _t -> _t.m)", CHUNK, spec
-                ),
-            ),
-        )
-    )
-    if persist_blocks:
-        # localCheckpoint, not .persist(): the frame feeds both the
-        # block-entry branch and the final row join, so this computes
-        # it once — but unlike a cache-manager entry it is NEVER
-        # matched by logical plan across separate calls (a repeated
-        # identical query re-executes, keeping benchmarks honest) and
-        # needs no unpersist bookkeeping (freed with the DataFrame)
-        l0 = l0.localCheckpoint(eager=False)
-
-    # block summaries (O(n) tot-only fold — same pinned association
-    # as the grid tot) -> mid/top hierarchy + downward entries
-    s0 = l0.select(
-        *series, "_blk",
-        _memo_expr(
-            ("grid_tot", spec.d, CHUNK, "_items.m"),
-            lambda: _grid_tot(
-                "transform(_items, _t -> _t.m)", CHUNK, spec
-            ),
-        ).alias("_m"),
-    )
-    small = rank == "window"
-    eblk = _block_entries(s0, spec, series, small=small)
-
-    # final: per-row inclusive prefixes onto the block entries
-    la, ea = l0.alias("l"), eblk.alias("e")
-    if small:
-        ea = F.broadcast(ea)
-    cond = [F.col("l._blk") == F.col("e._ek")] + [
-        F.col(f"l.{c}").eqNullSafe(F.col(f"e.{c}")) for c in series
-    ]
-    rows = (
-        la.join(ea, cond, "inner")
-        .select(
-            F.explode(
-                F.arrays_zip(
-                    F.col("l._items").alias("it"),
-                    _memo_expr(
-                        ("zip_grid", spec.d, "incl", CHUNK,
-                         "l._items/l._g"),
-                        lambda: _zip_grid(
-                            F.transform("l._items", lambda t: t["k"]),
-                            F.col("l._g"), "incl", CHUNK,
-                        ),
-                    ).alias("p"),
-                )
-            ).alias("_z"),
-            *[F.col(f"e._e_{s}").alias(f"_p_{s}") for s in spec.STATE],
-        )
-    )
-    outs = spec.apply(
-        lambda f: F.col("_z.p.w")[f],
-        lambda s: _mid_state(spec, s),
-    )
-    return rows.select(
-        *[F.col("_z.it.row")[c].alias(c) for c in df.columns],
-        *[
-            F.when(F.col("_z.it.e"), outs[s].cast("double"))
-            .alias(out[s])
-            for s in spec.STATE
-            if s in out
-        ],
-    )
-
-
-def _mid_state(spec, s: str) -> Column:
-    """The chunk-exclusive application for the final row evaluation:
-    apply(chunk_excl, e_block) — one state field."""
-    vals = spec.apply(lambda f: F.col("_z.p.c")[f],
-                      lambda t: F.col(f"_p_{t}"))
-    return vals[s]
-
-
 def _np_ident(spec):
+    """The identity map's values in FIELDS order (0.0 / 1.0)."""
     import numpy as np
 
-    ident = spec.identity()
-    # literal identity values in FIELDS order (0.0 / 1.0)
-    vals = []
-    for f in spec.FIELDS:
-        # Column literals were built from python floats; re-derive
-        vals.append(1.0 if f in {f"a{i}{i}" for i in range(1, 10)}
-                    else 0.0)
-    return np.asarray(vals, dtype=np.float64)
+    diag = {f"a{i}{i}" for i in range(1, spec.d + 1)}
+    return np.asarray([1.0 if f in diag else 0.0 for f in spec.FIELDS],
+                      dtype=np.float64)
 
 
 def _np_compose(acc, it, d):
     """Vectorized map composition (item∘acc) over (m, nf) float64
     arrays — each numpy binary op is one IEEE rounding, sequenced
     left-to-right exactly like ``AffineNSpec.compose``'s expression
-    tree, so the result is bit-identical to the JVM fold."""
+    tree, so the result is bit-identical to the HOF folds of the
+    mid/top levels and to the DuckDB oracle."""
     import numpy as np
 
     dd = d * d
@@ -792,24 +636,71 @@ def _block_entries(s0, spec, series, small: bool = False):
     )
 
 
-def _affine_scan_arrow(
-    df, coeffs, spec, series, ts_col, tiebreak, out,
-    emit, rank, persist_blocks,
-):
-    """The throughput execution of the pinned scan: level 0 runs as
-    ONE Arrow-batched ``mapInPandas`` pass whose numpy kernels
-    evaluate the identical IEEE op sequence as the JVM HOF fold
-    (``engine="jvm"``) — bit-equality is test-pinned — vectorized
-    across chunks and groups (the only Python loops are over the ≤64
-    chunk positions / chunk indexes). Each row leaves the pass
-    carrying its within-chunk inclusive prefix and its chunk's
-    exclusive prefix as plain DOUBLE columns, so the final evaluation
-    ``y = apply(w, apply(c, e_blk))`` is whole-stage-codegen JVM and
-    there is no array explode anywhere."""
+def _auto_big(df: DataFrame) -> bool:
+    """True when the optimizer's size estimate for ``df`` exceeds
+    :data:`AUTO_RANK_BYTES`. Unavailable stats (connect mode, exotic
+    plans) resolve True — the segmented rank is the scale-safe side
+    of the crossover, the window rank only the small-input fast
+    path."""
+    try:
+        raw = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        # py4j hands back a plain int for BigInt values that fit; only
+        # an actual scala.math.BigInt object needs the string hop
+        size = raw if isinstance(raw, int) else int(raw.toString())
+    except Exception:
+        return True
+    return size > AUTO_RANK_BYTES
+
+
+def _affine_scan(
+    df: DataFrame,
+    coeffs: dict[str, Column],
+    spec,
+    series: Sequence[str],
+    ts_col: str,
+    tiebreak: Sequence[str],
+    out: dict[str, str],
+    emit: Column | None = None,
+    rank: str = "auto",
+) -> DataFrame:
+    """The generic pinned-hierarchy scan (module docstring). ``coeffs``
+    maps each spec field to its per-row Column (may reference
+    ``F.col(RANK_COL)``); ``out`` maps each spec STATE field to its
+    output column name; ``emit`` masks rows whose output is null
+    (warm-up) — their coefficient rows still participate in the fold
+    (callers pass identity maps there).
+
+    Level 0 runs as ONE Arrow-batched ``mapInPandas`` pass whose numpy
+    kernels evaluate the pinned IEEE op sequence, vectorized across
+    chunks and groups (the only Python loops are over the ≤64 chunk
+    positions / chunk indexes); the result is pinned bitwise against
+    the generated DuckDB oracle (``queries/affine_scan_sql.py``). Each
+    row leaves the pass carrying its within-chunk inclusive prefix and
+    its chunk's exclusive prefix as plain DOUBLE columns, so the final
+    evaluation ``y = apply(w, apply(c, e_blk))`` is whole-stage-codegen
+    JVM and there is no array explode anywhere.
+
+    ``rank="auto"`` (default) resolves per input: the keyed-window
+    rank below :data:`AUTO_RANK_BYTES` of optimizer-estimated input
+    (fewest stage-jobs), the segmented rank above it (no single-task
+    per-series sort — the 100×-scale form). Rank VALUES are identical
+    either way, so the choice never changes output bits."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
+    from pyspark.sql.types import (
+        BooleanType, DoubleType, StructField, StructType,
+    )
 
+    series = list(series)
+    if rank == "auto":
+        rank = "segmented" if _auto_big(df) else "window"
+    for c in df.columns:
+        if (c in _RESERVED or c.startswith("_e_")
+                or c.startswith("_os_") or c.startswith("_f_")
+                or c.startswith("_w_") or c.startswith("_c_")):
+            raise ValueError(
+                f"column {c!r} collides with an affine-scan internal"
+            )
     order_cols = [F.col(ts_col), *[F.col(c) for c in tiebreak]]
     emit = F.lit(True) if emit is None else emit
     ranker = _segmented_rank if rank == "segmented" else _window_rank
@@ -846,8 +737,6 @@ def _affine_scan_arrow(
         parted = staged.repartition(
             *[F.col(c) for c in series], F.col("_blk")
         ).sortWithinPartitions(*series, "_blk", RANK_COL)
-
-    from pyspark.sql.types import BooleanType
 
     out_schema = StructType(
         [f for f in parted.schema.fields if f.name not in fcols]
@@ -894,12 +783,17 @@ def _affine_scan_arrow(
         if carry is not None and len(carry):
             yield process(carry)
 
-    prefixed = parted.mapInPandas(_prefix_batches, out_schema)
-    if persist_blocks:
-        # localCheckpoint, not .persist() — same rationale as the jvm
-        # path: compute the level-0 pass once for its two consumers
-        # without creating a cross-call cache entry
-        prefixed = prefixed.localCheckpoint(eager=False)
+    # localCheckpoint, not .persist(): the level-0 pass feeds both the
+    # block-entry branch and the final row join, so this computes it
+    # once (without it the whole rank+shuffle+Arrow pass executes
+    # twice — measured 17.3s → 13.0s at 4M rows) — but unlike a
+    # cache-manager entry it is NEVER matched by logical plan across
+    # separate calls (a repeated identical query re-executes, keeping
+    # benchmarks honest) and needs no unpersist bookkeeping (freed
+    # with the DataFrame)
+    prefixed = parted.mapInPandas(
+        _prefix_batches, out_schema
+    ).localCheckpoint(eager=False)
 
     # block summaries: the block total is compose(chunk_excl, w_incl)
     # of the block's LAST row (the arrow pass tags it) — exactly
@@ -968,74 +862,6 @@ def _affine_scan_arrow(
     )
 
 
-def _auto_big(df: DataFrame) -> bool:
-    """True when the optimizer's size estimate for ``df`` exceeds
-    :data:`AUTO_RANK_BYTES`. Unavailable stats (connect mode, exotic
-    plans) resolve True — the segmented rank is the scale-safe side
-    of the crossover, the window rank only the small-input fast
-    path."""
-    try:
-        raw = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        # py4j hands back a plain int for BigInt values that fit; only
-        # an actual scala.math.BigInt object needs the string hop
-        size = raw if isinstance(raw, int) else int(raw.toString())
-    except Exception:
-        return True
-    return size > AUTO_RANK_BYTES
-
-
-def _affine_scan(
-    df: DataFrame,
-    coeffs: dict[str, Column],
-    spec,
-    series: Sequence[str],
-    ts_col: str,
-    tiebreak: Sequence[str],
-    out: dict[str, str],
-    emit: Column | None = None,
-    rank: str = "auto",
-    persist_blocks: bool = True,
-    engine: str = "arrow",
-) -> DataFrame:
-    """Dispatch between the two bit-identical executions of the
-    pinned scan: ``engine="arrow"`` (default — vectorized numpy
-    level 0, the throughput path) and ``engine="jvm"`` (Catalyst HOF
-    folds end to end — the executable specification, used by the
-    equality tests; interpreted HOFs make it several times slower).
-
-    ``rank="auto"`` (default) resolves per input: the keyed-window
-    rank below :data:`AUTO_RANK_BYTES` of optimizer-estimated input
-    (fewest stage-jobs), the segmented rank above it (no single-task
-    per-series sort — the 100×-scale form). Rank VALUES are identical
-    either way, so the choice never changes output bits.
-
-    ``persist_blocks=True`` (default) materializes the level-0 pass
-    (MEMORY_AND_DISK): its output feeds both the block-entry branch
-    and the final row join, so without it the whole rank+shuffle+
-    Arrow pass executes twice — measured 17.3s → 13.0s at 4M rows.
-    Cached partitions are LRU-evicted to local disk, never dropped,
-    so the default is safe at any input size."""
-    series = list(series)
-    if rank == "auto":
-        rank = "segmented" if _auto_big(df) else "window"
-    for c in df.columns:
-        if (c in _RESERVED or c.startswith("_e_")
-                or c.startswith("_os_") or c.startswith("_f_")
-                or c.startswith("_w_") or c.startswith("_c_")):
-            raise ValueError(
-                f"column {c!r} collides with an affine-scan internal"
-            )
-    if engine == "arrow":
-        return _affine_scan_arrow(
-            df, coeffs, spec, series, ts_col, tiebreak, out,
-            emit, rank, persist_blocks,
-        )
-    return _affine_scan_jvm(
-        df, coeffs, spec, series, ts_col, tiebreak, out,
-        emit=emit, rank=rank, persist_blocks=persist_blocks,
-    )
-
-
 def scalar_affine_scan(
     df: DataFrame,
     a: Column,
@@ -1046,8 +872,6 @@ def scalar_affine_scan(
     alias: str = "y",
     emit: Column | None = None,
     rank: str = "auto",
-    persist_blocks: bool = True,
-    engine: str = "arrow",
 ) -> DataFrame:
     """y_t = a_t·y_{t−1} + b_t per series under the pinned
     hierarchical fold order; returns ``df`` + ``alias``. The scalar
@@ -1057,7 +881,6 @@ def scalar_affine_scan(
     return affine_n_scan(
         df, 1, {"a11": a, "c1": b}, series, ts_col, tiebreak,
         out={"v1": alias}, emit=emit, rank=rank,
-        persist_blocks=persist_blocks, engine=engine,
     )
 
 
@@ -1071,8 +894,6 @@ def affine_n_scan(
     out: dict[str, str] | None = None,
     emit: Column | None = None,
     rank: str = "auto",
-    persist_blocks: bool = True,
-    engine: str = "arrow",
 ) -> DataFrame:
     """v_t = M_t·v_{t−1} + c_t per series with d-dimensional state
     (Holt's coupled level+trend at d=2; the doubleEMA tower at d=2;
@@ -1085,5 +906,4 @@ def affine_n_scan(
     return _affine_scan(
         df, coeffs, spec, series, ts_col, tiebreak,
         dict(out or {}), emit=emit, rank=rank,
-        persist_blocks=persist_blocks, engine=engine,
     )

@@ -298,24 +298,6 @@ def _rowwise_signatures(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 64,
-) -> DataFrame:
-    """Per-doc MinHash signature: min over shingles of xxhash64(shingle,
-    seed_i) for each of ``num_hashes`` seeds. One explode + one hash
-    aggregate — all JVM expressions, map-side combinable."""
-    sh = doc_shingles(df, id_col, text_col, n)
-    mins = [
-        F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"mh_{i}")
-        for i in range(num_hashes)
-    ]
-    return sh.groupBy(id_col).agg(*mins)
-
-
 def _band_bucket_rows(
     sig: DataFrame,
     id_col: str,

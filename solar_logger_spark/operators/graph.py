@@ -310,118 +310,6 @@ def dedup_best_representatives(
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    damping: float = 0.85,
-    iters: int = 10,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
-    """PageRank (Brin & Page 1998 — public) over a DIRECTED edge list,
-    fixed ``iters`` power-iteration rounds with uniform teleport.
-
-    Spark shape per round: ranks join out-degrees (both keyed on the
-    node id — co-partitioned after the first shuffle), contributions
-    flow along edges with one join + one hash aggregate, and dangling
-    nodes' mass is ONE scalar (a 1-row driver collect — bounded by
-    construction, the same budget class as the CC fixpoint counter)
-    redistributed uniformly as a literal, which keeps the rank update
-    map-only. Each round's ranks are eagerly ``localCheckpoint``-ed —
-    the lineage cut (same iterative-plan lesson as connected
-    components) doubles as the materialization the scalar read then
-    reuses for free. Everything is bounded by |nodes| + |edges| per
-    round — the canonical 100 TB graph workload. Note the per-round
-    job overhead makes this a multi-second operator even on toy
-    graphs (local measurement ~2 s/round); it earns its keep on
-    graphs where a round does real work.
-
-    Ranks are doubles accumulated with ``sum`` — association-sensitive
-    across partitionings, so this operator has no cross-engine oracle
-    and is not in the declared-query registry; the invariant that IS
-    deterministic — total
-    rank mass == |nodes| to float tolerance — ships as a
-    ``mass_conserved`` self-check column, and pytest pins values
-    against a pure-python reference.
-
-    Output: ``(node, rank, mass_conserved)`` — ranks sum to |nodes|
-    (the "importance = expected visits" normalization).
-    """
-    if not 0.0 < damping < 1.0:
-        raise ValueError(f"damping must be in (0, 1): {damping}")
-    if iters < 1:
-        raise ValueError(f"iters must be >= 1: {iters}")
-    # the loop invariants are checkpointed ONCE: every round runs two
-    # actions (dm collect + rank checkpoint), and without the cut each
-    # would re-shuffle the distinct edge set from source per round
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct().localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        return nodes.select(
-            "node",
-            F.lit(None).cast("double").alias("rank"),
-            F.lit(None).cast("boolean").alias("mass_conserved"),
-        )
-    deg = (
-        e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        .withColumnRenamed("src", "node")
-        .localCheckpoint(eager=True)
-    )
-    out_edges = e.withColumnRenamed("src", "node")
-    ranks = nodes.select("node", F.lit(1.0).alias("rank")) \
-        .localCheckpoint(eager=True)
-    for _ in range(iters):
-        contrib = (
-            ranks.join(deg, "node")
-            .select("node", (F.col("rank") / F.col("deg")).alias("share"))
-            .join(out_edges, "node")
-            .groupBy("dst")
-            .agg(F.sum("share").alias("inflow"))
-            .withColumnRenamed("dst", "node")
-        )
-        # dangling mass: rank held by nodes with no outgoing edges —
-        # one scalar per round, collected (1 row, bounded) from the
-        # checkpointed ranks and folded in as a literal so the rank
-        # update stays map-only
-        dm = (
-            ranks.join(deg.select("node"), "node", "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm"))
-            .collect()[0]["_dm"]
-        )
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(1.0 - damping)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("inflow"), F.lit(0.0))
-                        + F.lit(float(dm) / n_nodes)
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    total = ranks.agg(F.sum("rank").alias("_t"))
-    return ranks.crossJoin(F.broadcast(total)).select(
-        "node",
-        "rank",
-        (
-            F.abs(F.col("_t") - F.lit(float(n_nodes)))
-            / F.lit(float(n_nodes))
-            < 1e-9
-        ).alias("mass_conserved"),
-    )
-
-
 def incremental_components(
     spark,
     comp_dir: str,

@@ -72,20 +72,20 @@ def dlit_s(vals) -> str:
         ) from exc
 
 
-# -- SQL-text twins of the pinned-fold Column builders ------------------------
-# Each helper renders EXACTLY the expression its Column sibling builds
-# (same functions, same literal types, same left-to-right association),
-# as a Python string: composing a whole scoring/assignment tree costs
-# ONE ``F.expr`` round trip instead of one per node. Lambda variables
-# use a leading-underscore namespace no engine frame ever declares, so
-# they can never shadow a real column referenced inside the body.
-# (Profiled: the per-node builders cost 1-3 ms of py4j latency PER
-# round trip on a loaded host — a 3k-node ANN build was pure driver
-# stall; the text form is plan- and bit-identical.)
+# -- SQL-text builders of the pinned folds -----------------------------------
+# These are the only builders of the cosine / dot / L2 folds: each
+# renders its expression (left-to-right association, double literals,
+# a ``0.0D`` seed) as a Python string, so composing a whole
+# scoring/assignment tree costs ONE ``F.expr`` round trip instead of
+# one per node. Lambda variables use a leading-underscore namespace no
+# engine frame ever declares, so they can never shadow a real column
+# referenced inside the body. (Profiled: per-node Column builders cost
+# 1-3 ms of py4j latency PER round trip on a loaded host — a 3k-node
+# ANN build was pure driver stall.)
 
 def cd_s(a: str) -> str:
-    """``transform(a, x -> CAST(x AS DOUBLE))`` — the text twin of
-    ``similarity._to_double``."""
+    """``transform(a, x -> CAST(x AS DOUBLE))`` — an array's elements
+    as doubles, the input every fold below takes."""
     return f"transform({a}, _cd -> CAST(_cd AS DOUBLE))"
 
 

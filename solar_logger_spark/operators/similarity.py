@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (``array<float>``).
 
-* ``cosine`` — JVM higher-order-function dot product (zip_with +
+* ``_cosine_expr`` — JVM higher-order-function cosine (zip_with +
   aggregate in double precision, left-to-right — bit-reproducible).
 * ``topk_bruteforce`` — broadcast the (small) query set against the
   corpus; one pass, no shuffle of the corpus, then a per-query top-k
@@ -23,35 +23,15 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
-def _to_double(col: Column) -> Column:
-    return F.transform(col, lambda x: x.cast("double"))
-
-
 def _cosine_expr(a: str, b: str) -> Column:
-    """``cosine`` over two float-array COLUMN NAMES, rendered as one
-    SQL expression (litfast text twins — bit-identical to the
-    :func:`cosine` Column builder, which costs ~100 py4j round trips
-    per call)."""
+    """Cosine over two float-array COLUMN NAMES: each array cast to
+    double, every dot product a left-to-right fold from ``0.0D``
+    (bit-reproducible against the SQL oracles), rendered as ONE SQL
+    expression by :mod:`litfast` — one py4j round trip instead of one
+    per expression node."""
     from solar_logger_spark.operators.litfast import cd_s, cosd_s
 
     return F.expr(cosd_s(cd_s(a), cd_s(b)))
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Σ a_i·b_i in double, accumulated left-to-right (deterministic)."""
-    return F.aggregate(
-        F.zip_with(_to_double(a), _to_double(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
 
 
 def topk_bruteforce(
@@ -444,11 +424,10 @@ def _table_buckets(
     dim: int,
     n_tables: int,
     seed: int,
-    exact_fold: bool = True,
 ) -> DataFrame:
     """(id, tbl, bucket) rows for ``n_tables`` independent sign-LSH
-    tables, computed in ONE scan: a single Arrow-batched matmul against
-    all tables' planes at once ((n, dim) @ (dim, T·b) — the HOF
+    tables, computed in ONE scan: a single Arrow-batched numpy kernel
+    against all tables' planes at once ((n, dim) × (dim, T·b) — the HOF
     expression route costs T·b interpreted array folds per row, which
     at 8 tables × 8 planes is ~100× slower than the fused kernel).
     Plane literals are the same seeded values as
@@ -475,21 +454,14 @@ def _table_buckets(
             a = np.array(
                 [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
             )
-            if exact_fold:
-                # dimension-order accumulation (NOT a BLAS matmul,
-                # whose association is unspecified): each sign bit's
-                # dot product is the same left-to-right 0+Σ v_d·w_d
-                # fold the SQL oracle's list_sum computes, so buckets —
-                # and therefore the candidate set — agree bit-for-bit
-                # across engines. Pay this ONLY where a hash-compared
-                # oracle needs it (the declared similarity_ann_lsh
-                # query); production recall does not depend on which
-                # side of zero a ~1-ulp-ambiguous dot product lands.
-                acc = np.zeros((len(a), planes.shape[0]))
-                for d in range(planes.shape[1]):
-                    acc += a[:, d, None] * planes[None, :, d]
-            else:
-                acc = a @ planes.T  # BLAS fast path
+            # dimension-order accumulation (NOT a BLAS matmul, whose
+            # association is unspecified): each sign bit's dot product
+            # is the same left-to-right 0+Σ v_d·w_d fold the SQL
+            # oracle's list_sum computes, so buckets — and therefore
+            # the candidate set — agree bit-for-bit across engines
+            acc = np.zeros((len(a), planes.shape[0]))
+            for d in range(planes.shape[1]):
+                acc += a[:, d, None] * planes[None, :, d]
             bits = acc >= 0  # (n, T·b)
             bits = bits.reshape(len(a), n_tables, n_planes)
             buckets = (bits * weights).sum(axis=2)  # (n, T)
@@ -520,7 +492,6 @@ def topk_lsh(
     n_tables: int = 1,
     multiprobe: int = 0,
     seed: int = 7,
-    exact_fold: bool = True,
 ) -> DataFrame:
     """Approximate top-k: score only corpus vectors that collide with
     the query in at least one LSH table. Same output shape as
@@ -536,25 +507,20 @@ def topk_lsh(
     radius 0 this is the classic single-bucket probe. Corpus buckets for
     all tables are computed in one scan; candidates dedupe before the
     exact-cosine re-score, so the output is exact ranking over the
-    candidate set.
-
-    ``exact_fold``: True keeps bucket dot products in dimension-order
-    accumulation so a SQL oracle re-derives identical buckets (the
-    declared hash-compared query's requirement); False takes the BLAS
-    matmul fast path — same recall contract (tests/test_ann_recall.py
-    covers both) — use it everywhere a bit-identical candidate set is
-    not being audited."""
+    candidate set. Bucket dot products accumulate in dimension order,
+    so a SQL oracle re-derives identical buckets (the declared
+    hash-compared query's requirement)."""
     from solar_logger_spark.operators.spread import spread_small
 
     corpus = spread_small(corpus)  # single-file scans bucketize and
     # re-score in ONE task otherwise; buckets/cosines are per-row math
     cb = _table_buckets(
         corpus, "neighbor_id", id_col, vec_col, n_planes, dim, n_tables,
-        seed, exact_fold,
+        seed,
     )
     qb = _table_buckets(
         queries, "query_id", id_col, vec_col, n_planes, dim, n_tables,
-        seed, exact_fold,
+        seed,
     )
     if multiprobe > 0:
         masks = [
@@ -744,7 +710,7 @@ def ivf_inertia(
     )
     row = (
         assigned.join(F.broadcast(cents_df), "cell")
-        .select((1 - cosine(F.col(vec_col), F.col("c_vec"))).alias("d"))
+        .select((1 - _cosine_expr(vec_col, "c_vec")).alias("d"))
         .agg(F.avg("d").alias("inertia"))
         .collect()[0]
     )
@@ -832,9 +798,9 @@ def topk_ivf_deterministic(
         # map-only nearest-cell: first index achieving the MAX cosine
         # == the (cos desc, cell asc) window selection — no
         # crossJoin, no window shuffle. Rendered as ONE SQL expression
-        # (litfast text twins — bit-identical folds): the per-node
-        # Column builders cost ~60 py4j trips per cosine and were the
-        # dominant DRIVER cost of this query on a loaded host.
+        # (litfast's pinned folds): per-node Column construction cost
+        # ~60 py4j trips per cosine and was the dominant DRIVER cost
+        # of this query on a loaded host.
         coss = (
             f"transform({dlit_s([c for _, c in cs])}, "
             f"_cc -> {cosd_s('v', '_cc')})"

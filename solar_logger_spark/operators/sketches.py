@@ -17,8 +17,8 @@ max), so a union of per-day sketches is byte-equivalent to sketching the
 whole range directly — pinned by test. Estimates carry the usual HLL
 error (~1.6% at lgConfigK=12 default).
 
-``percentile_approx`` (KLL-style quantiles) rounds out the family for
-numeric distributions.
+Grouped quantiles call ``percentile_approx`` directly (the
+``sketch_quantiles_events`` query); they need no wrapper here.
 """
 
 from __future__ import annotations
@@ -61,23 +61,6 @@ def union_estimate(
     return merged.select(
         *group_cols,
         F.hll_sketch_estimate(F.col("_merged")).cast("long").alias(alias),
-    )
-
-
-def approx_quantiles(
-    df: DataFrame,
-    value_col: str,
-    group_cols: Sequence[str],
-    probabilities: Sequence[float] = (0.5, 0.9, 0.99),
-    accuracy: int = 10_000,
-) -> DataFrame:
-    """Grouped approximate quantiles (``percentile_approx``): one
-    single-pass mergeable aggregation, output one array column."""
-    probs = F.array(*[F.lit(float(p)) for p in probabilities])
-    return df.groupBy(*group_cols).agg(
-        F.percentile_approx(F.col(value_col), probs, F.lit(accuracy)).alias(
-            "quantiles"
-        )
     )
 
 

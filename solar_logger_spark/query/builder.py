@@ -29,6 +29,7 @@ from datetime import datetime
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from solar_logger_spark.durations import parse_duration
+from solar_logger_spark.io import results
 from solar_logger_spark.operators.window_agg import AGG_FNS, agg_expr, aggregate_window
 
 _OPS = {
@@ -918,18 +919,17 @@ class QueryBuilder:
     def records(self) -> list[dict]:
         """"flux" mode: fully-parsed records (reference parse_flux,
         src/app/influx_query.py:35-54)."""
-        return [row.asDict() for row in self.to_df().collect()]
+        return results.records(self.to_df())
 
     def to_csv(self, path: str, mode: str = "overwrite", header: bool = True) -> None:
         """"csv" mode + CSV sink (reference write_results_to_csv,
         src/helpers/py_functions.py:13-35)."""
-        self.to_df().coalesce(1).write.mode(mode).option(
-            "header", str(header).lower()
-        ).csv(path)
+        results.write_results_to_csv(
+            self.to_df(), path, mode=mode, header=header
+        )
 
     def stream(self) -> Iterator[dict]:
         """"stream" mode — the reference's ``parse_stream`` raises
         NotImplementedError (src/app/influx_query.py:56-62); ours yields
         records incrementally without materializing the result."""
-        for row in self.to_df().toLocalIterator():
-            yield row.asDict()
+        return results.stream_records(self.to_df())

@@ -276,38 +276,13 @@ def parse_flux(text: str) -> FluxPipeline:
             # pipeline it is a no-op — accepted so real user strings
             # (which almost always end in yield) parse unchanged
             continue
-        elif name in _TRANSFORM_STAGES:
+        elif name in QueryBuilder.TRANSFORMS:
+            # group and hourSelection never get here: their own
+            # branches above handle them
             pipe.transforms.append(_parse_transform(name, body))
         else:
             raise ValueError(f"unsupported stage {name!r}")
     return pipe
-
-
-_BARE_AGGS = {
-    "mean", "median", "min", "max", "sum", "count", "stddev",
-    "first", "last", "spread",
-    "mode", "skew", "kurtosis",
-}
-
-_TRANSFORM_STAGES = {
-    "difference", "derivative", "cumulativeSum", "increase",
-    "movingAverage", "exponentialMovingAverage", "elapsed",
-    "timeShift", "fill", "stateCount", "stateDuration",
-    "stateChanges", "events.duration",
-    "top", "bottom", "distinct", "unique",
-    "keep", "drop", "rename",
-    "pivot", "map", "reduce", "truncateTimeColumn",
-    "histogram", "quantile", "duplicate", "window",
-    "tail", "sample",
-    "interpolate.linear", "holtWinters", "integral",
-    "timedMovingAverage", "relativeStrengthIndex",
-    "chandeMomentumOscillator", "kaufmansER", "kaufmansAMA",
-    "doubleEMA", "tripleEMA", "tripleExponentialDerivative",
-    "histogramQuantile", "timeWeightedAvg",
-    "toFloat", "toInt", "toString", "toBool", "set",
-    "highestMax", "highestAverage", "highestCurrent",
-    "lowestMin", "lowestAverage", "lowestCurrent",
-} | _BARE_AGGS
 
 
 def _unit_seconds(tok: str) -> float:

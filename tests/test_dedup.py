@@ -124,16 +124,6 @@ def test_minhash_lsh_agrees_with_exact(docs):
     assert lsh == exact  # high-sim pairs must survive banding + verify
 
 
-def test_minhash_signature_shape(docs):
-    sig = dedup.minhash_signatures(docs, num_hashes=16)
-    row = sig.filter("doc_id = 0").collect()[0]
-    assert len([c for c in sig.columns if c.startswith("mh_")]) == 16
-    # identical docs → identical signatures
-    sig01 = sig.filter("doc_id <= 1").collect()
-    a, b = sorted(sig01, key=lambda r: r.doc_id)
-    assert [a[f"mh_{i}"] for i in range(16)] == [b[f"mh_{i}"] for i in range(16)]
-
-
 def test_simhash_identical_docs_equal_fingerprints(docs):
     fp = {r.doc_id: r.simhash for r in dedup.simhash(docs).collect()}
     assert fp[0] == fp[1]

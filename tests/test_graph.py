@@ -168,56 +168,6 @@ def test_best_representatives_keeps_highest_quality(spark):
     assert out[9].keep and out[9].component == 9
 
 
-def test_pagerank_matches_python_reference(spark):
-    """PageRank values vs a pure-python power iteration on a seeded
-    random directed graph (same damping/iters/dangling handling),
-    plus the mass-conservation invariant and argument validation."""
-    import random
-    import pytest
-    from solar_logger_spark.operators.graph import pagerank
-
-    rng = random.Random(13)
-    n = 40
-    edges = {(rng.randrange(n), rng.randrange(n)) for _ in range(120)}
-    df = spark.createDataFrame(sorted(edges), "src long, dst long")
-
-    nodes = sorted({a for a, _ in edges} | {b for _, b in edges})
-    idx = {v: i for i, v in enumerate(nodes)}
-    out = {v: [] for v in nodes}
-    for a, b in edges:
-        out[a].append(b)
-    d, iters = 0.85, 10
-    r = {v: 1.0 for v in nodes}
-    for _ in range(iters):
-        inflow = {v: 0.0 for v in nodes}
-        dangling = 0.0
-        for v in nodes:
-            if out[v]:
-                share = r[v] / len(out[v])
-                for w in out[v]:
-                    inflow[w] += share
-            else:
-                dangling += r[v]
-        r = {
-            v: (1 - d) + d * (inflow[v] + dangling / len(nodes))
-            for v in nodes
-        }
-
-    got = {row.node: row for row in pagerank(df, damping=d, iters=iters).collect()}
-    assert set(got) == set(nodes)
-    for v in nodes:
-        assert abs(got[v].rank - r[v]) < 1e-9, (v, got[v].rank, r[v])
-    assert all(row.mass_conserved for row in got.values())
-    with pytest.raises(ValueError, match="damping"):
-        pagerank(df, damping=1.5)
-    with pytest.raises(ValueError, match="iters"):
-        pagerank(df, iters=0)
-    # empty graph: empty typed result, no ZeroDivisionError
-    empty = pagerank(spark.createDataFrame([], "src long, dst long"))
-    assert empty.count() == 0
-    assert empty.columns == ["node", "rank", "mass_conserved"]
-
-
 def test_incremental_components_equals_batch(spark, tmp_path):
     """Streaming label maintenance == one-shot CC over the union of all
     deliveries, including the hard cases: a later edge MERGING two

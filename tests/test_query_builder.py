@@ -105,6 +105,27 @@ def test_records_and_stream_modes(points):
     assert next(qb.stream()) == recs[0]
 
 
+def test_result_modes_flatten_struct_columns_like_io_results(points):
+    """The builder's result modes are io.results': a struct column comes
+    back as a plain nested dict, not as a pyspark Row."""
+    from pyspark.sql import functions as F
+
+    from solar_logger_spark.io import results
+
+    tagged = points.withColumn(
+        "tags", F.struct(F.col("measurement").alias("device"),
+                         F.lit("site-a").alias("site"))
+    )
+    qb = QueryBuilder(tagged).filter("field", "pv_current").sort("ts")
+    expected = results.records(qb.to_df())
+    assert expected[0]["tags"] == {"device": "mx-1", "site": "site-a"}
+    assert type(expected[0]["tags"]) is dict
+    assert qb.records() == expected
+    first = next(qb.stream())
+    assert first == expected[0]
+    assert type(first["tags"]) is dict
+
+
 def test_csv_mode(points, tmp_path):
     QueryBuilder(points).filter("measurement", "fx-1").to_csv(str(tmp_path / "out"))
     files = list((tmp_path / "out").glob("*.csv"))

@@ -29,9 +29,8 @@ def test_cosine_values(spark):
         [Row(a=[1.0, 0.0], b=[1.0, 0.0]), Row(a=[1.0, 0.0], b=[0.0, 1.0]),
          Row(a=[1.0, 0.0], b=[-1.0, 0.0])]
     )
-    from pyspark.sql import functions as F
     out = [r.c for r in df.select(
-        similarity.cosine(F.col("a"), F.col("b")).alias("c")).collect()]
+        similarity._cosine_expr("a", "b").alias("c")).collect()]
     assert out[0] == pytest.approx(1.0)
     assert out[1] == pytest.approx(0.0)
     assert out[2] == pytest.approx(-1.0)
@@ -75,31 +74,16 @@ def test_topk_lsh_recalls_close_neighbors(vectors):
     assert {1, 4} <= got
 
 
-def test_topk_lsh_blas_fast_path_same_contract(vectors):
-    """exact_fold=False (BLAS matmul bucketing — the production path)
-    must satisfy the same recall contract; on these well-separated
-    vectors the candidate sets are identical, so outputs match the
-    fold path row for row."""
-    queries = vectors.filter("vec_id = 0")
-    fold = similarity.topk_lsh(
-        vectors, queries, k=3, n_planes=4, dim=4
-    ).collect()
-    blas = similarity.topk_lsh(
-        vectors, queries, k=3, n_planes=4, dim=4, exact_fold=False
-    ).collect()
-    canon = lambda rows: sorted(
-        (r.query_id, r.neighbor_id, r.rank) for r in rows
-    )
-    assert canon(blas) == canon(fold)
-    assert {1, 4} <= {r.neighbor_id for r in blas}
-
-
 def test_dot_is_left_to_right_double(spark):
     """Accumulation order is deterministic (oracle reproducibility)."""
     from pyspark.sql import functions as F
+
+    from solar_logger_spark.operators import litfast
     vals = [1e16, 1.0, -1e16]
     df = spark.createDataFrame([Row(a=vals, b=[1.0, 1.0, 1.0])])
-    out = df.select(similarity.dot(F.col("a"), F.col("b")).alias("d")).collect()
+    out = df.select(F.expr(
+        litfast.dot_s(litfast.cd_s("a"), litfast.cd_s("b"))
+    ).alias("d")).collect()
     # (1e16 + 1) - 1e16 == 0 in double left-to-right
     assert out[0].d == 0.0
 

@@ -44,24 +44,6 @@ def test_union_of_partial_sketches_equals_direct(spark, sf_dir):
     assert via_union == direct  # register merge is exact, not approximate
 
 
-def test_approx_quantiles_bracket_exact_median(spark, sf_dir):
-    events = load_table(spark, sf_dir, "events")
-    q = {
-        r.event_type: r.quantiles
-        for r in sketches.approx_quantiles(
-            events, "value", ["event_type"], probabilities=(0.5,)
-        ).collect()
-    }
-    exact = {
-        r.event_type: r.m
-        for r in events.groupBy("event_type")
-        .agg(F.expr("percentile(value, 0.5)").alias("m"))
-        .collect()
-    }
-    for k, m in exact.items():
-        assert abs(q[k][0] - m) <= max(1.0, 0.05 * abs(m))
-
-
 def test_cms_never_undercounts_and_merges(spark, sf_dir):
     """CMS point estimates are >= exact counts (one-sided error), the
     per-day merge is identical to sketching the whole table directly,

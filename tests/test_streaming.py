@@ -652,55 +652,6 @@ def test_session_rollup_stream(spark, tmp_path):
     assert got[datetime(2024, 1, 1, 1, 10, 0)] == pytest.approx(40.0)
 
 
-def test_running_increase_carries_state_across_batches(spark, tmp_path):
-    """Streaming increase(): counter advances accumulate, resets
-    contribute zero, and state survives micro-batch boundaries."""
-    from solar_logger_spark.streaming.counters import running_increase
-
-    input_dir = tmp_path / "in"
-    input_dir.mkdir()
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    def mx_packet(epoch, kwh):
-        values = {f: 0.0 for f in D.MX_FIELDS}
-        values["kilowatt_hours"] = kwh
-        return D.encode_packet("mx-1", epoch, values)
-
-    base = 1704067200
-    # batch 1: 1.0 → 3.5 (adv 2.5); batch 2: reset to 0.5 (adv 0), → 2.0 (adv 1.5)
-    b1 = [("mate/mx-1/mx-status", mx_packet(base + i * 60, v), datetime(2024, 1, 1))
-          for i, v in [(0, 1.0), (1, 3.5)]]
-    b2 = [("mate/mx-1/mx-status", mx_packet(base + i * 60, v), datetime(2024, 1, 1))
-          for i, v in [(2, 0.5), (3, 2.0)]]
-    _raw_df(spark, b1).coalesce(1).write.parquet(str(input_dir / "f1"))
-    _raw_df(spark, b2).coalesce(1).write.parquet(str(input_dir / "f2"))
-
-    raw = (
-        spark.readStream.schema(I.RAW_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(input_dir) + "/*")
-    )
-    q = (
-        running_increase(I.data_points(raw))
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    rows = (
-        spark.read.parquet(out_dir)
-        .filter(F.col("field") == "kilowatt_hours")
-        .orderBy("ts")
-        .collect()
-    )
-    assert [r.value for r in rows] == [1.0, 3.5, 0.5, 2.0]
-    assert [r.increase for r in rows] == [0.0, 2.5, 2.5, 4.0]
-
-
 def test_watermark_drops_too_late_event(spark, tmp_path):
     """T4 pinned: an event arriving after the watermark passed its
     window is excluded from the rollup (the reference would happily
@@ -854,150 +805,6 @@ def test_windowed_rollup_streaming_approx_distinct(spark, tmp_path):
     q.stop()
     # HLL is exact at cardinality 2
     assert got[datetime(2024, 1, 1, 1, 0)] == 2
-
-
-def test_stream_stream_attribution_join(spark, tmp_path):
-    """Watermarked stream-stream interval join: purchases attribute to
-    the clicks they follow within 30 minutes, per user; pairs outside
-    the band never match."""
-    from solar_logger_spark.streaming.joins import stream_attribution_join
-
-    clicks_dir = str(tmp_path / "clicks")
-    buys_dir = str(tmp_path / "buys")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    t0 = datetime(2024, 1, 1)
-
-    def ts(minute):
-        return t0 + __import__("datetime").timedelta(minutes=minute)
-
-    clicks = [(1, ts(0), "c1"), (1, ts(60), "c2"), (2, ts(5), "c3")]
-    buys = [
-        (1, ts(10), "b1"),   # within 30m of c1
-        (1, ts(75), "b2"),   # within 30m of c2, NOT of c1
-        (2, ts(50), "b3"),   # 45m after c3 -> no match
-        # far-future row on each side drags both watermarks forward so
-        # append mode flushes the joined rows
-        (9, ts(6000), "bx"),
-    ]
-    spark.createDataFrame(
-        clicks + [(9, ts(6000), "cx")], "user_id long, ts timestamp, cid string"
-    ).write.parquet(clicks_dir)
-    spark.createDataFrame(
-        buys, "user_id long, ts timestamp, bid string"
-    ).write.parquet(buys_dir)
-
-    lc = spark.readStream.schema(
-        "user_id long, ts timestamp, cid string"
-    ).parquet(clicks_dir)
-    rb = spark.readStream.schema(
-        "user_id long, ts timestamp, bid string"
-    ).parquet(buys_dir)
-
-    joined = stream_attribution_join(
-        lc, rb, key="user_id", within="30 minutes", watermark="1 minute"
-    )
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    rows = spark.read.parquet(out_dir).collect()
-    got = {(r.l_cid, r.r_bid) for r in rows}
-    assert got == {("c1", "b1"), ("c2", "b2"), ("cx", "bx")}
-    # the join key comes back under its ORIGINAL name
-    assert {r.user_id for r in rows} == {1, 9}
-
-
-def test_attribution_join_rejects_prefix_collisions(spark):
-    """Inputs already carrying l_/r_-prefixed names (or a key that
-    collides with a generated name) must be rejected up front instead
-    of producing ambiguous duplicate output columns."""
-    from datetime import datetime
-    from solar_logger_spark.streaming.joins import stream_attribution_join
-
-    t = datetime(2024, 1, 1)
-    # left has both `ts`-named l_ts source and a literal l_ts? No —
-    # collision case: left_ts is `click_ts`, so `ts` maps to l_ts AND
-    # the fixed left_ts alias is also l_ts.
-    left = spark.createDataFrame([(1, t, t)], "user_id long, click_ts timestamp, ts timestamp")
-    right = spark.createDataFrame([(1, t)], "user_id long, ts timestamp")
-    with pytest.raises(ValueError, match="l_ts"):
-        stream_attribution_join(
-            left, right, key="user_id", within="10 minutes",
-            watermark="1 minute", left_ts="click_ts", right_ts="ts",
-        )
-
-
-def test_attribution_join_stream_equals_batch(spark, sf_dir, tmp_path):
-    """Batch-equivalence differential for the watermarked stream-stream
-    band join on REAL corpus data: replaying the events table through
-    stream_attribution_join yields exactly the pairs the equivalent
-    batch band join produces (a far-future sentinel on each side drags
-    the final watermark so append mode flushes the tail; sentinel rows
-    are excluded from the comparison)."""
-    from datetime import datetime
-    from pyspark.sql import functions as F
-    from solar_logger_spark.io.tables import load_table
-    from solar_logger_spark.streaming.joins import stream_attribution_join
-
-    events = load_table(spark, sf_dir, "events")
-    clicks = events.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", F.col("event_id").alias("cid")
-    )
-    buys = events.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", F.col("event_id").alias("bid")
-    )
-    far = datetime(2030, 1, 1)
-    sent_c = spark.createDataFrame(
-        [(-1, far, -1)], "user_id long, ts timestamp, cid long"
-    )
-    sent_b = spark.createDataFrame(
-        [(-1, far, -1)], "user_id long, ts timestamp, bid long"
-    )
-    cdir, bdir = str(tmp_path / "c"), str(tmp_path / "b")
-    clicks.unionByName(sent_c).coalesce(1).write.parquet(cdir)
-    buys.unionByName(sent_b).coalesce(1).write.parquet(bdir)
-
-    lc = spark.readStream.schema(
-        "user_id long, ts timestamp, cid long"
-    ).parquet(cdir)
-    rb = spark.readStream.schema(
-        "user_id long, ts timestamp, bid long"
-    ).parquet(bdir)
-    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = (
-        stream_attribution_join(
-            lc, rb, key="user_id", within="10 minutes",
-            watermark="1 minute",
-        )
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    streamed = {
-        (r.l_cid, r.r_bid)
-        for r in spark.read.parquet(out_dir).collect()
-        if r.user_id != -1
-    }
-
-    batch = clicks.alias("l").join(
-        buys.alias("r"),
-        (F.col("l.user_id") == F.col("r.user_id"))
-        & (F.col("r.ts") >= F.col("l.ts"))
-        & (F.col("r.ts") <= F.col("l.ts") + F.expr("INTERVAL 10 minutes")),
-    )
-    expected = {(r.cid, r.bid) for r in batch.select("cid", "bid").collect()}
-    assert streamed == expected
-    assert len(expected) > 0  # the corpus genuinely exercises the band
 
 
 # ---------------------------------------------------------------------------

@@ -70,10 +70,10 @@ def main() -> int:
     ).select("event_id", "ts", "event_type", "value")
     ev.count()  # warm the file scan
 
-    # a unique filter constant per run defeats the cache manager's
-    # logical-plan matching: persist_blocks=True would otherwise let
-    # rep 2+ silently reuse rep 1's cached level-0 pass and the
-    # min-of-3 would measure a warm cache, not the operator
+    # a unique filter constant per run keeps every rep a distinct
+    # plan: the level-0 pass is always checkpointed, and no rep may
+    # reuse an earlier rep's work, or the min-of-3 would measure a
+    # warm cache, not the operator
     _uniq = [0]
 
     def _fresh(df):
