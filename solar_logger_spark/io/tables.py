@@ -68,7 +68,18 @@ def _base_read(spark: SparkSession, path: str):
     0.1-0.4 s per call) that a production deployment pays once at
     catalog registration, not per query. Keyed by applicationId (a
     restarted session rebuilds — no dead-JVM handles), absolute path,
-    and the file/directory mtime (a rewritten fixture invalidates)."""
+    and the file/directory mtime (a rewritten fixture invalidates).
+
+    The memoized frame is the scan itself when it has more than one
+    split, and ``coalesce(1)`` of the scan when it has exactly one. The
+    split count is probed once per memo entry (one planning pass, no
+    job). A one-split scan already runs in one task; the coalesce only
+    declares its output ``SinglePartition``, so the aggregates, sorts,
+    windows and joins above it need no Exchange and a small query runs
+    as one stage instead of a shuffle-map job plus a result job.
+    Filters and column pruning still reach the scan (both push through
+    a Repartition). A CPU-heavy consumer that wants width asks for it
+    with ``operators.spread.spread_small``."""
     sc = spark.sparkContext
     try:
         mtime = os.path.getmtime(path)
@@ -82,7 +93,10 @@ def _base_read(spark: SparkSession, path: str):
         ns_cols = _ns_timestamp_cols(path)
         if ns_cols:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        hit = (spark.read.parquet(path), tuple(ns_cols))
+        df = spark.read.parquet(path)
+        if df.rdd.getNumPartitions() == 1:
+            df = df.coalesce(1)
+        hit = (df, tuple(ns_cols))
         _READER_MEMO[key] = hit
     return hit
 

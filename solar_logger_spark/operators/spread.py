@@ -2,18 +2,23 @@
 
 The bench fixtures (and any small reference table) are single-file,
 single-row-group parquet: Spark cannot split them, so every scan yields
-ONE partition and everything map-side downstream — normalization folds,
-codebook distance chains, Arrow kernels — runs in one task no matter
-how many cores the session has (guide §2.5 "input skew: one huge
-unsplittable file ... repartition immediately after the read").
+ONE partition. ``io.tables`` reads such a table as ``coalesce(1)`` of
+its scan, so a one-split read is one partition end to end: the plan
+declares ``SinglePartition``, the aggregates, sorts, windows and joins
+above it plan no Exchange, and the whole query runs as one stage in one
+task. That is the right shape for a small query, whose cost is
+scheduling, not compute.
 
-``spread_small`` repartitions only when the input's partitioning is
-NARROWER than the session's parallelism. At 100 TB the corpus scan
-already carries thousands of splits and the helper is a no-op — it
-never coalesces, so the scale path keeps its native parallelism and
-pays no extra exchange. Results are unaffected by construction: every
-caller's arithmetic is either per-row (map) or pinned to an explicit
-order (hash/window/fold), never partition-order-sensitive.
+``spread_small`` is how a CPU-heavy consumer of such a read
+(normalization folds, codebook distance chains, Arrow kernels) asks
+for width instead (guide §2.5 "input skew: one huge unsplittable file
+... repartition immediately after the read"). It repartitions only
+when the input's partitioning is NARROWER than the session's
+parallelism; at 100 TB the corpus scan already carries thousands of
+splits, ``io.tables`` leaves it uncoalesced, and the helper is a no-op
+that pays no extra exchange. Results are unaffected by construction:
+every caller's arithmetic is either per-row (map) or pinned to an
+explicit order (hash/window/fold), never partition-order-sensitive.
 """
 
 from __future__ import annotations

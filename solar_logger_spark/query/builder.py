@@ -137,6 +137,7 @@ class QueryBuilder:
         self._sorts: list[tuple[str, bool]] = []
         self._projection: list[str] | None = None
         self._limit: int | None = None
+        self._offset = 0
         self._hour_sel: tuple[int, int] | None = None
         self._bucket = source if isinstance(source, str) else "df"
 
@@ -821,10 +822,9 @@ class QueryBuilder:
             df = df.orderBy(F.col(fld).desc() if desc else F.col(fld).asc())
         if self._projection:
             df = df.select(*self._projection)
-        if getattr(self, "_limit", None) is not None:
-            offset = getattr(self, "_offset", 0)
-            if offset:
-                df = df.offset(offset)
+        if self._limit is not None:
+            if self._offset:
+                df = df.offset(self._offset)
             df = df.limit(self._limit)
         return df
 
@@ -854,12 +854,20 @@ class QueryBuilder:
                 f"hourSelection(start: {self._hour_sel[0]}, "
                 f"stop: {self._hour_sel[1]})"
             )
+        def _lit(v) -> str:
+            if isinstance(v, str):
+                return '"' + v.replace("\\", "\\\\").replace('"', '\\"') + '"'
+            return repr(v)
+
         for band in self._bands:
             terms = []
             for i, p in enumerate(band.predicates):
-                op = {"==": "==", "!=": "!=", ">": ">", ">=": ">=",
-                      "<": "<", "<=": "<=", "=~": "=~", "in": "in"}[p.op]
-                term = f'r["{p.field}"] {op} {p.value!r}'
+                if p.op == "in":
+                    vals = p.value if isinstance(p.value, (list, tuple, set)) else [p.value]
+                    items = ", ".join(_lit(v) for v in vals)
+                    term = f'contains(value: r["{p.field}"], set: [{items}])'
+                else:
+                    term = f'r["{p.field}"] {p.op} {_lit(p.value)}'
                 if i > 0:
                     term = f"{p.joiner} {term}"
                 terms.append(term)
@@ -909,7 +917,8 @@ class QueryBuilder:
         for fld, desc in self._sorts:
             parts.append(f'sort(columns: ["{fld}"], desc: {str(desc).lower()})')
         if self._limit is not None:
-            parts.append(f"limit(n: {self._limit})")
+            off = f", offset: {self._offset}" if self._offset else ""
+            parts.append(f"limit(n: {self._limit}{off})")
         return " |> ".join(parts)
 
     def __str__(self) -> str:  # parity with the reference's __str__

@@ -37,7 +37,17 @@ _PRED = re.compile(
     r"(?P<op>==|!=|=~|<=|>=|<|>)\s*"
     r"(?P<value>\"[^\"]*\"|'[^']*'|[^\s)]+)"
 )
-_JOINER = re.compile(r"^\s*(and|or)\s*", re.IGNORECASE)
+# Flux's membership test: contains(value: r["f"], set: ["a", "b"])
+_CONTAINS = re.compile(
+    r"contains\(\s*value:\s*r\[\"(?P<field>[^\"]+)\"\]\s*,\s*"
+    r"set:\s*\[(?P<set>[^\]]*)\]\s*\)"
+)
+_SET_ITEM = re.compile(r"\"[^\"]*\"|'[^']*'|[^,\s]+")
+_JOINER = re.compile(r"\s*(and|or)\b\s*", re.IGNORECASE)
+_FN_HEAD = re.compile(r"\s*fn:\s*\(\s*r\s*\)\s*=>\s*")
+# what may follow the last term: the stage's closing paren, or nothing
+# (the reference leaves filter parens unclosed)
+_BAND_END = re.compile(r"\s*\)?\s*$")
 # dotted record access (r._value > 50) — common in hand-written Flux
 _DOT_PRED = re.compile(
     r"r\.(?P<field>\w+)\s*"
@@ -178,6 +188,36 @@ def _parse_args(body: str) -> dict[str, str]:
     return out
 
 
+def _parse_band(stage: str, body: str) -> list[tuple[str, str, object, str]]:
+    """One ``filter(fn: (r) => ...)`` body → its band of
+    ``(field, op, value, joiner-to-previous)`` terms. Every term must
+    read as a comparison or a ``contains(value:, set:)`` membership
+    test: a term that reads as neither raises rather than being
+    dropped, since dropping it would widen the filter. A dangling
+    trailing joiner (reference bug) has no term after it and is
+    dropped, which is the documented intent."""
+    head = _FN_HEAD.match(body)
+    if not head:
+        raise ValueError(f"filter stage without fn: (r) =>: {stage!r}")
+    band: list[tuple[str, str, object, str]] = []
+    pos, joiner = head.end(), "and"
+    while m := _PRED.match(body, pos) or _CONTAINS.match(body, pos):
+        if m.re is _PRED:
+            value = _unquote(m.group("value").rstrip(")"))
+            band.append((m.group("field"), m.group("op"), value, joiner))
+        else:
+            values = [_unquote(t) for t in _SET_ITEM.findall(m.group("set"))]
+            band.append((m.group("field"), "in", values, joiner))
+        pos = m.end()
+        j = _JOINER.match(body, pos)
+        if not j:
+            break
+        joiner, pos = j.group(1).lower(), j.end()
+    if not band or not _BAND_END.match(body, pos):
+        raise ValueError(f"unreadable filter term {body[pos:]!r} in {stage!r}")
+    return band
+
+
 def parse_flux(text: str) -> FluxPipeline:
     """Parse pipeline text (well-formed or reference-broken) into a
     :class:`FluxPipeline`. Raises ``ValueError`` on stages outside the
@@ -203,23 +243,7 @@ def parse_flux(text: str) -> FluxPipeline:
             if "stop" in args:
                 pipe.stop = str(_unquote(args["stop"]))
         elif name == "filter":
-            band: list[tuple[str, str, object, str]] = []
-            pos, joiner = 0, "and"
-            while True:
-                m = _PRED.search(body, pos)
-                if not m:
-                    break
-                value = _unquote(m.group("value").rstrip(")"))
-                band.append((m.group("field"), m.group("op"), value, joiner))
-                pos = m.end()
-                j = _JOINER.match(body[pos:])
-                joiner = j.group(1).lower() if j else "and"
-                # a dangling trailing joiner (reference bug) simply has
-                # no following predicate — the loop ends and it is
-                # dropped, which is the documented intent
-            if not band:
-                raise ValueError(f"filter stage without predicates: {stage!r}")
-            pipe.bands.append(band)
+            pipe.bands.append(_parse_band(stage, body))
         elif name == "aggregateWindow":
             args = _parse_args(body)
             if "every" not in args or "fn" not in args:

@@ -1395,6 +1395,23 @@ def test_roundtrip_renderer_r11_stages(spark, sf_dir):
         .transform("timeWeightedAvg")
     )
 
+    def builder():
+        return QueryBuilder(
+            events, ts_col="ts", value_col="value",
+            series_cols=("event_type",),
+        ).range(datetime(2024, 1, 5), datetime(2024, 1, 25))
+
+    # filter_in renders as Flux's contains(value:, set:) and reads back
+    # as the same IN term, whether it shares its band or stands alone
+    roundtrip(builder().filter_in("event_type", ["click"]).filter(
+        "value", 50.0, op="<"))
+    roundtrip(builder().filter_in("event_type", ["click", "view"]))
+    # limit keeps its offset; string values render double-quoted
+    roundtrip(
+        builder().filter("event_type", "purchase")
+        .sort("event_id").limit(5, offset=3)
+    )
+
 
 def test_execute_text_state_changes_and_event_duration(spark, sf_dir):
     """r11: stateChanges(fn:) and events.duration(unit:) through TEXT

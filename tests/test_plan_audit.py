@@ -51,3 +51,27 @@ def test_plans_match_golden(spark, sf_dir):
         "basket_affinity_parts", "profile_columns_exact",
         "events_rfm_segments", "text_trigram_lm_quality",
     }
+
+
+def test_global_window_flagged_on_the_window(spark, sf_dir):
+    """A Window with no partition spec is flagged even where its input
+    is already one partition (a one-split scan), so no Exchange
+    SinglePartition sits under it; a partitioned Window is not."""
+    from pyspark.sql import Window, functions as F
+
+    from solar_logger_spark.io.tables import load_table
+    from tools.plan_audit import audit_frame
+
+    events = load_table(spark, sf_dir, "events")
+    flag = "single-partition global window"
+    glob = events.withColumn(
+        "rn", F.row_number().over(Window.orderBy("ts", "event_id"))
+    )
+    per_type = events.withColumn(
+        "rn",
+        F.row_number().over(
+            Window.partitionBy("event_type").orderBy("ts", "event_id")
+        ),
+    )
+    assert flag in audit_frame(glob)["flags"]
+    assert flag not in audit_frame(per_type)["flags"]

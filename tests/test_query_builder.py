@@ -169,9 +169,9 @@ def test_to_flux_renders_corrected_syntax(spark, sf_dir):
     flux = str(qb)
     assert flux == (
         'from(bucket: "df") |> range(start: -5m) |> '
-        "filter(fn: (r) => r[\"_measurement\"] == 'fx-1' "
-        "or r[\"_measurement\"] == 'mx-1') |> "
-        "filter(fn: (r) => r[\"_measurement\"] == 'dc-1') |> "
+        'filter(fn: (r) => r["_measurement"] == "fx-1" '
+        'or r["_measurement"] == "mx-1") |> '
+        'filter(fn: (r) => r["_measurement"] == "dc-1") |> '
         "aggregateWindow(every: 1h, fn: mean) |> "
         'sort(columns: ["ts"], desc: true) |> limit(n: 5)'
     )

@@ -5,8 +5,8 @@ Flags plan smells that matter at 100 TB:
   * CartesianProduct / BroadcastNestedLoopJoin — quadratic unless intended
   * BatchEvalPython — row-at-a-time Python in the plan (ArrowEvalPython /
     MapInPandas / MapInArrow are the sanctioned Python paths)
-  * a Window directly over an Exchange SinglePartition — a global
-    analytic that moves the whole dataset to one task
+  * a Window with no partition spec — a global analytic that runs the
+    whole dataset in one task
 
 Queries that intentionally trip the join flag (10):
 similarity_cosine_topk and contrastive_hard_negatives (brute-force
@@ -46,6 +46,23 @@ GOLDEN_PATH = os.path.join(
 )
 
 
+def _has_global_window(plan) -> bool:
+    """True when the logical plan holds a Window with an empty
+    partition spec: the "No Partition Defined" smell, a global
+    analytic that runs the whole dataset in one task. It is read on the
+    Window itself, not on an Exchange SinglePartition under it, because
+    over a one-split scan the input is already one partition and no
+    Exchange is planned."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Window" and node.partitionSpec().isEmpty():
+            return True
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return False
+
+
 def audit_frame(df) -> dict:
     """One query frame → {"flags": [...], "scans": n, "pushed": n}.
     Pure plan inspection (pre-execution explain) — deterministic for a
@@ -54,31 +71,14 @@ def audit_frame(df) -> dict:
     mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
-    simple_mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "simple"
-    )
     plan = df._jdf.queryExecution().explainString(mode)
     flags = []
     if "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan:
         flags.append("nested-loop/cartesian join")
     if "BatchEvalPython" in plan:
         flags.append("row-at-a-time Python UDF")
-    # a Window directly over an Exchange SinglePartition moves ALL
-    # data to one task — the "No Partition Defined" smell (global
-    # analytic over the whole dataset); 1-row scalar aggregates also
-    # use SinglePartition legitimately, so only the Window shape is
-    # flagged
-    simple = df._jdf.queryExecution().explainString(simple_mode)
-    lines = simple.splitlines()
-    for i, ln in enumerate(lines):
-        if "Exchange SinglePartition" in ln:
-            window_above = any(
-                re.search(r"\bWindow\b", lines[j])
-                for j in range(max(0, i - 3), i)
-            )
-            if window_above:
-                flags.append("single-partition global window")
-                break
+    if _has_global_window(df._jdf.queryExecution().optimizedPlan()):
+        flags.append("single-partition global window")
     # (no codegen check: AQE's pre-execution explain elides codegen
     # ids, so presence can only be observed on the executed plan)
     n_scans = plan.count("Scan parquet") // 2 or plan.count("Scan parquet")
