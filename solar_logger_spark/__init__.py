@@ -6,8 +6,8 @@ query-builder surface), re-expressed Spark-first:
 
 * the Flux pipeline surface (``from |> range |> filter |> aggregateWindow
   |> sort``) becomes a fluent :class:`~solar_logger_spark.query.builder.
-  QueryBuilder` that accumulates a *lazy DataFrame plan* — Catalyst is the
-  optimizer, parquet the store;
+  QueryBuilder` that renders the pipeline as one Spark SQL pipe statement
+  from the table scan up — Catalyst is the optimizer, parquet the store;
 * the streaming ingest (binary packet decode → unpivot → status-gate →
   point sink) becomes Structured Streaming with pandas-UDF decoders;
 * beyond the reference surface, large-scale training-data-pipeline

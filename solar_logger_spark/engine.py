@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from solar_logger_spark.io import results as _results
-from solar_logger_spark.io.tables import load_table, register_views
+from solar_logger_spark.io.tables import register_views, table_path
 from solar_logger_spark.query.builder import QueryBuilder
 from solar_logger_spark.streaming.ingest import ingest_query, windowed_rollup_query
 
@@ -46,7 +46,8 @@ class SolarEngine:
         """Start a fluent from→range→filter→aggregate→sort pipeline over
         one table (the reference's ``QueryBuilder``, corrected)."""
         return QueryBuilder(
-            load_table(self.spark, sf_dir, table),
+            table_path(sf_dir, table),
+            spark=self.spark,
             ts_col=ts_col,
             value_col=value_col,
             series_cols=series_cols,
@@ -74,7 +75,8 @@ class SolarEngine:
         from solar_logger_spark.query.flux_parser import parse_flux
 
         return parse_flux(text).to_builder(
-            load_table(self.spark, sf_dir, table),
+            table_path(sf_dir, table),
+            spark=self.spark,
             field_map=field_map,
             ts_col=ts_col,
             value_col=value_col,
@@ -113,8 +115,9 @@ class SolarEngine:
 
         script = parse_flux_script(text)
         return script.to_df(
-            lambda bucket: load_table(self.spark, sf_dir, bucket),
+            lambda bucket: table_path(sf_dir, bucket),
             field_map=field_map,
+            spark=self.spark,
             **builder_kwargs,
         )
 

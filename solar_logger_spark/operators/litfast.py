@@ -115,3 +115,10 @@ def d2_s(a: str, b: str) -> str:
     return fold_sum_s(
         f"zip_with({a}, {b}, (_zx, _zy) -> (_zx - _zy) * (_zx - _zy))"
     )
+
+
+def ident_s(name: str) -> str:
+    """A column or relation name as a backtick-quoted SQL identifier,
+    so any name (spaces, dots, backticks) reads as one identifier and
+    never as SQL text."""
+    return "`" + name.replace("`", "``") + "`"

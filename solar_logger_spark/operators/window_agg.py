@@ -26,12 +26,10 @@ from solar_logger_spark.durations import (
     epoch_seconds,
     parse_duration,
 )
+from solar_logger_spark.operators.litfast import ident_s
 
-# Flux's standard aggregate set (README of the reference names min/max;
-# `fn` is free-form, reference src/classes/query_classes.py:134-137).
-# first/last are time-ordered in Flux, hence min_by/max_by on the event
-# time — still a single-pass hash aggregate, no sort needed.
-def _power_sums(v):
+
+def _power_sums(v: str):
     """Exact integer power sums for the moment aggregates: the value
     quantizes to 2 decimals (the data's own precision — the same
     ``decimal(12,2)`` hop the momentum transforms use), scales to an
@@ -39,74 +37,89 @@ def _power_sums(v):
     with HUGEINT), so BOTH engines derive skew/kurtosis from identical
     integers and only the final mirrored float expression is IEEE.
     skew/kurtosis are scale-invariant, so the ×100 never cancels out
-    wrong."""
-    xi = (v.cast("decimal(12,2)") * 100).cast("bigint").cast("decimal(19,0)")
-    x2 = xi * xi              # decimal(38,0) — scale 0, values tiny: exact
-    n = F.count(xi).cast("double")
-    s1 = F.sum(xi).cast("double")
-    s2 = F.sum(x2).cast("double")
-    s3 = F.sum(x2 * xi).cast("double")
-    s4 = F.sum(x2 * x2).cast("double")
-    return n, s1, s2, s3, s4
+    wrong. SQL text; the ``D`` suffix keeps each constant a double."""
+    xi = f"CAST(CAST((CAST({v} AS DECIMAL(12,2)) * 100) AS BIGINT) AS DECIMAL(19,0))"
+    x2 = f"({xi} * {xi})"  # decimal(38,0) — scale 0, values tiny: exact
+
+    def total(e: str) -> str:
+        return f"CAST(sum({e}) AS DOUBLE)"
+
+    n = f"CAST(count({xi}) AS DOUBLE)"
+    s1, s2 = total(xi), total(x2)
+    s3, s4 = total(f"({x2} * {xi})"), total(f"({x2} * {x2})")
+    m1 = f"({s1} / {n})"
+    m2 = f"(({s2} / {n}) - ({m1} * {m1}))"
+    return n, s2, s3, s4, m1, m2
 
 
-def _skew_expr(v):
+def _skew_sql(v: str) -> str:
     """Population skewness m₃/m₂^(3/2) from exact power sums; null on
     a zero-variance group. Documented divergence from Flux's estimator
     (same trade as the quantile stage: exact + cross-engine
     hash-checkable beats replicating a streaming approximation)."""
-    n, s1, s2, s3, _ = _power_sums(v)
-    m1 = s1 / n
-    m2 = s2 / n - m1 * m1
-    m3 = s3 / n - F.lit(3.0) * m1 * (s2 / n) + F.lit(2.0) * m1 * m1 * m1
-    return F.when(m2 > 0, m3 / (m2 * F.sqrt(m2)))
+    n, s2, s3, _, m1, m2 = _power_sums(v)
+    m3 = (
+        f"((({s3} / {n}) - ((3.0D * {m1}) * ({s2} / {n})))"
+        f" + (((2.0D * {m1}) * {m1}) * {m1}))"
+    )
+    return f"CASE WHEN ({m2} > 0) THEN ({m3} / ({m2} * sqrt({m2}))) END"
 
 
-def _kurtosis_expr(v):
+def _kurtosis_sql(v: str) -> str:
     """Population EXCESS kurtosis m₄/m₂² − 3 from exact power sums;
     null on a zero-variance group."""
-    n, s1, s2, s3, s4 = _power_sums(v)
-    m1 = s1 / n
-    m2 = s2 / n - m1 * m1
+    n, s2, s3, s4, m1, m2 = _power_sums(v)
     m4 = (
-        s4 / n - F.lit(4.0) * m1 * (s3 / n)
-        + F.lit(6.0) * m1 * m1 * (s2 / n)
-        - F.lit(3.0) * m1 * m1 * m1 * m1
+        f"(((({s4} / {n}) - ((4.0D * {m1}) * ({s3} / {n})))"
+        f" + (((6.0D * {m1}) * {m1}) * ({s2} / {n})))"
+        f" - ((((3.0D * {m1}) * {m1}) * {m1}) * {m1}))"
     )
-    return F.when(m2 > 0, m4 / (m2 * m2) - F.lit(3.0))
+    return f"CASE WHEN ({m2} > 0) THEN (({m4} / ({m2} * {m2})) - 3.0D) END"
 
 
-AGG_FNS: dict[str, object] = {
-    "mean": lambda v, t: F.avg(v),
-    "median": lambda v, t: F.median(v),
-    "min": lambda v, t: F.min(v),
-    "max": lambda v, t: F.max(v),
-    "sum": lambda v, t: F.sum(v),
-    "count": lambda v, t: F.count(v),
-    "stddev": lambda v, t: F.stddev_samp(v),
-    "first": lambda v, t: F.min_by(v, t),
-    "last": lambda v, t: F.max_by(v, t),
-    "spread": lambda v, t: F.max(v) - F.min(v),  # Flux spread(): max - min
+# Flux's standard aggregate set (README of the reference names min/max;
+# `fn` is free-form, reference src/classes/query_classes.py:134-137),
+# each declared once as SQL text over ``{v}`` (value) and ``{t}``
+# (time). first/last are time-ordered in Flux, hence min_by/max_by on
+# the event time — still a single-pass hash aggregate, no sort needed.
+AGG_FNS: dict[str, str] = {
+    "mean": "avg({v})",
+    "median": "median({v})",
+    "min": "min({v})",
+    "max": "max({v})",
+    "sum": "sum({v})",
+    "count": "count({v})",
+    "stddev": "stddev_samp({v})",
+    "first": "min_by({v}, {t})",
+    "last": "max_by({v}, {t})",
+    "spread": "(max({v}) - min({v}))",  # Flux spread(): max - min
     # r11 Flux-stdlib tail. mode: most frequent value, ties to the
-    # LOWEST (deterministic=True), defined even when nothing repeats —
+    # LOWEST (deterministic), defined even when nothing repeats —
     # documented divergence from Flux's null-on-no-repeat. skew /
     # kurtosis: population formulas from exact integer power sums
     # (documented divergence from Flux's estimators).
-    "mode": lambda v, t: F.mode(v, True),
-    "skew": lambda v, t: _skew_expr(v),
-    "kurtosis": lambda v, t: _kurtosis_expr(v),
+    "mode": "mode({v}, true)",
+    "skew": _skew_sql("{v}"),
+    "kurtosis": _kurtosis_sql("{v}"),
 }
 
 
-def agg_expr(fn: str, value_col: str, ts_col: str) -> Column:
-    """Resolve a Flux aggregate-function name to a Spark Column."""
+def agg_sql(fn: str, value_col: str, ts_col: str) -> str:
+    """A Flux aggregate-function name as SQL text over the (quoted)
+    value and time columns."""
     try:
-        make = AGG_FNS[fn]
+        text = AGG_FNS[fn]
     except KeyError:
         raise ValueError(
             f"unknown aggregate fn {fn!r}; supported: {sorted(AGG_FNS)}"
         ) from None
-    return make(F.col(value_col), F.col(ts_col))
+    return text.format(v=ident_s(value_col), t=ident_s(ts_col))
+
+
+def agg_expr(fn: str, value_col: str, ts_col: str) -> Column:
+    """A Flux aggregate-function name as a Spark Column: its
+    :data:`AGG_FNS` text, parsed JVM-side in one round trip."""
+    return F.expr(agg_sql(fn, value_col, ts_col))
 
 
 def aggregate_window(

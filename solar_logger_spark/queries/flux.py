@@ -16,7 +16,7 @@ from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from solar_logger_spark.io.tables import load_table
+from solar_logger_spark.io.tables import load_table, table_path
 from solar_logger_spark.operators.asof import latest_per_key, status_gate
 from solar_logger_spark.operators.pivoting import pivot, unpivot
 from solar_logger_spark.operators.window_agg import aggregate_window
@@ -35,15 +35,13 @@ _RANGE = "ts >= TIMESTAMP '2024-01-05' AND ts < TIMESTAMP '2024-01-25'"
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
 
-def _events_qb(
-    spark: SparkSession, sf_dir: str, t_range: tuple | None = None
-) -> QueryBuilder:
-    """``t_range=(t0, t1)`` additionally pushes the range as a raw-int64
-    scan predicate (events.ts is stored as parquet TIMESTAMP(NANOS);
-    post-conversion filters can't reach the scan — io.tables.read_parquet)."""
-    ns_range = {"ts": t_range} if t_range else None
+def _events_qb(spark: SparkSession, sf_dir: str) -> QueryBuilder:
+    """A builder over the events table's path: its statement starts at
+    the scan, and the builder's own static ``range()`` is pushed there
+    as a raw-int64 predicate (io.tables.scan_sql)."""
     return QueryBuilder(
-        load_table(spark, sf_dir, "events", ns_range=ns_range),
+        table_path(sf_dir, "events"),
+        spark=spark,
         ts_col="ts",
         value_col="value",
         series_cols=("event_type",),
@@ -51,12 +49,12 @@ def _events_qb(
 
 
 def _flux_text_events(text: str, *keep: str):
-    """Builder for one Flux text over ``events``, range-pushed to
-    [T0, T1) at the scan. A pipeline (``from(...) |> ...``) binds to the
-    events table; a script (``name = from(...)`` assignments ending in
-    ``join()``/``union()``) loads each ``from(bucket:)`` as a table.
-    ``_measurement`` names the event_type column; ``keep`` projects the
-    result."""
+    """Builder for one Flux text over ``events``; each pipeline's own
+    static range reaches the scan. A pipeline (``from(...) |> ...``)
+    binds to the events table; a script (``name = from(...)``
+    assignments ending in ``join()``/``union()``) reads each
+    ``from(bucket:)`` as a table. ``_measurement`` names the event_type
+    column; ``keep`` projects the result."""
     kw = {
         "field_map": {"_measurement": "event_type"},
         "ts_col": "ts",
@@ -65,14 +63,13 @@ def _flux_text_events(text: str, *keep: str):
     }
 
     def _q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        def load(table: str) -> DataFrame:
-            return load_table(spark, sf_dir, table, ns_range={"ts": (T0, T1)})
+        def path(table: str) -> str:
+            return table_path(sf_dir, table)
 
         if text.startswith("from("):
-            events = load("events")
-            df = parse_flux(text).to_builder(events, **kw).to_df()
+            df = parse_flux(text).to_builder(path("events"), spark=spark, **kw).to_df()
         else:
-            df = parse_flux_script(text).to_df(load, **kw)
+            df = parse_flux_script(text).to_df(path, spark=spark, **kw)
         return df.select(*keep) if keep else df
 
     return _q
@@ -85,7 +82,7 @@ def _flux_text_events(text: str, *keep: str):
 def q_flux_range_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P1+P2+P3+P5: range + OR-joined equality filters + projection."""
     return (
-        _events_qb(spark, sf_dir, t_range=(T0, T1))
+        _events_qb(spark, sf_dir)
         .range(T0, T1)
         .filter("event_type", "click", joiner="or")
         .filter("event_type", "view", joiner="or")
@@ -97,7 +94,7 @@ def q_flux_range_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_flux_filter_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P4: conjunctive filter bands (chained Flux filter stages)."""
     return (
-        _events_qb(spark, sf_dir, t_range=(T0, None))
+        _events_qb(spark, sf_dir)
         .range(T0)
         .filter("event_type", "purchase")
         .filter("value", 50.0, op=">", new_band=True)
@@ -109,7 +106,7 @@ def q_flux_filter_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _agg_query(fn: str):
     def _q(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
-            _events_qb(spark, sf_dir, t_range=(T0, T1))
+            _events_qb(spark, sf_dir)
             .range(T0, T1)
             .aggregate_window("6h", fn)
             .to_df()
@@ -134,7 +131,7 @@ def q_flux_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship: range + isin filter + window mean + sort (the
     reference's run_example, src/app/influx_query.py:93-99)."""
     return (
-        _events_qb(spark, sf_dir, t_range=(T0, T1))
+        _events_qb(spark, sf_dir)
         .range(T0, T1)
         .filter_in("event_type", ["click", "view", "purchase"])
         .aggregate_window("1d", "mean")
@@ -225,7 +222,7 @@ def q_flux_agg_create_empty(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean over a sparse series — windows with no input rows are emitted
     with a null value, spine pinned to the builder's range() bounds."""
     return (
-        _events_qb(spark, sf_dir, t_range=(T0, T1))
+        _events_qb(spark, sf_dir)
         .range(T0, T1)
         .filter("event_type", "error")
         .aggregate_window("1h", "mean", create_empty=True)

@@ -3,11 +3,16 @@
 The reference accumulates Flux string fragments and concatenates them in
 the fixed pipeline order ``from → range → filter → aggregate → sort``
 (reference: ``src/classes/query_classes.py:14-148``, ``_build_string`` at
-``:73-84``). Ours accumulates the same *logical* pieces but materializes
-them as a lazy DataFrame plan — Catalyst's analyzed plan is the IR, so
-predicate pushdown / column pruning / filter collapsing are free (§4 of
-SURVEY.md: the reference delegates all of this to InfluxDB; we delegate
-to Catalyst + parquet).
+``:73-84``) and sends the whole pipeline to InfluxDB as one request.
+Ours accumulates the same *logical* pieces and renders them as one Spark
+SQL pipe statement (``query/pipe.py``, :meth:`QueryBuilder.to_sql`) from
+the table scan up: one ``spark.sql`` call hands Catalyst the whole
+pipeline, so predicate pushdown / column pruning / filter collapsing are
+free (§4 of SURVEY.md: the reference delegates all of this to InfluxDB;
+we delegate to Catalyst + parquet), with every user value a named
+parameter. Stages with no SQL rendering (createEmpty/integral windows,
+the ``_apply_transform`` analytics) run as DataFrame steps after the
+statement; a later renderable stage reads that frame as ``{src}``.
 
 Corrected semantics (reference bugs NOT replicated, SURVEY.md §2.11):
 unterminated parens and dangling joiners can't exist here because the
@@ -24,23 +29,52 @@ from __future__ import annotations
 
 from collections.abc import Iterator, Sequence
 from dataclasses import dataclass, field as dc_field
-from datetime import datetime
+from datetime import datetime, timedelta
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from solar_logger_spark.durations import parse_duration
+from solar_logger_spark.durations import duration_to_spark_window, parse_duration
 from solar_logger_spark.io import results
-from solar_logger_spark.operators.window_agg import AGG_FNS, agg_expr, aggregate_window
+from solar_logger_spark.io.tables import scan_columns, scan_sql
+from solar_logger_spark.operators.window_agg import AGG_FNS, agg_sql, aggregate_window
+from solar_logger_spark.query.pipe import OPS, Statement, esc, ident
 
-_OPS = {
-    "==": lambda c, v: c == v,
-    "!=": lambda c, v: c != v,
-    ">": lambda c, v: c > v,
-    ">=": lambda c, v: c >= v,
-    "<": lambda c, v: c < v,
-    "<=": lambda c, v: c <= v,
-    "=~": lambda c, v: c.rlike(v),
-    "in": lambda c, v: c.isin(*v) if isinstance(v, (list, tuple, set)) else c.isin(v),
+
+# Value-rewriting transforms: Flux name → (operators/timeseries function,
+# default n: or None when the stage takes none). Each replaces ``value``
+# in place. relativeStrengthIndex, chandeMomentumOscillator, kaufmansER
+# and kaufmansAMA leave warm-up rows (fewer than n deltas) and flat
+# windows null rather than Flux's row drop / 100-vs-0 edge (the
+# operators' documented, oracle-replayable semantics); the EMA tower
+# (doubleEMA, tripleEMA) runs in-sample from the first row, and TRIX is
+# null on each series head and on a zero previous e3, where Flux drops
+# warm-up rows / yields Inf.
+_VALUE_STAGES = {
+    "difference": ("difference", None),
+    "derivative": ("derivative", None),
+    "cumulativeSum": ("cumulative_sum", None),
+    "increase": ("increase", None),
+    "movingAverage": ("moving_average", 5),
+    "exponentialMovingAverage": ("exponential_moving_average", 5),
+    "relativeStrengthIndex": ("rsi", 14),
+    "chandeMomentumOscillator": ("cmo", 10),
+    "kaufmansER": ("kaufmans_er", 10),
+    "kaufmansAMA": ("kaufmans_ama", 10),
+    "doubleEMA": ("double_ema", 10),
+    "tripleEMA": ("triple_ema", 10),
+    "tripleExponentialDerivative": ("trix", 10),
+}
+
+# Flux type conversions of the value column. toInt truncates toward zero
+# (Flux/Go semantics — Spark's double->long cast already does); toString
+# uses Spark's native cast rendering (documented divergence from Go
+# strconv); toBool accepts only exact 0/1 numerics, else null (Flux
+# errors — null is filterable and hash-stable).
+_CONVERSIONS = {
+    "toFloat": "CAST({v} AS DOUBLE)",
+    "toInt": "CAST({v} AS BIGINT)",
+    "toString": "CAST({v} AS STRING)",
+    "toBool": "CASE WHEN ({v} = 1) THEN true WHEN ({v} = 0) THEN false END",
 }
 
 
@@ -51,41 +85,18 @@ class _Predicate:
     op: str = "=="
     joiner: str = "and"  # combiner with the PREVIOUS predicate in the band
 
-    def column(self) -> Column:
-        return _OPS[self.op](F.col(self.field), self.value)
-
 
 @dataclass
 class _Band:
     predicates: list[_Predicate] = dc_field(default_factory=list)
 
-    def column(self) -> Column:
-        out = self.predicates[0].column()
-        for pred in self.predicates[1:]:
-            out = (out | pred.column()) if pred.joiner == "or" else (out & pred.column())
-        return out
-
-
-def _time_bound(bound: str | datetime, now: datetime | None) -> Column:
-    """A range bound: Flux duration literal (relative to now) or datetime."""
-    if isinstance(bound, datetime):
-        return F.lit(bound)
-    try:
-        dur = parse_duration(bound)
-    except ValueError:
-        # absolute timestamp string
-        return F.to_timestamp(F.lit(bound))
-    if now is not None:
-        return F.lit(dur.add_to(now))
-    anchor = F.current_timestamp()
-    if dur.months:
-        anchor = F.add_months(anchor, dur.months)
-    return anchor + F.expr(f"INTERVAL '{int(dur.seconds)}' SECOND")
-
 
 class QueryBuilder:
     """Compose ``from → range → filter → aggregateWindow → sort`` over a
-    DataFrame (or parquet path / table name) and execute it.
+    parquet path, a table name or a DataFrame, and execute it as one
+    SQL pipe statement. A parquet path is the source to prefer: the
+    statement then starts at the table scan, and a static ``range()``
+    also becomes the scan's raw-int64 predicate (``io.tables.scan_sql``).
 
     >>> q = (QueryBuilder(points, start_range="-5m")
     ...      .filter("measurement", "fx-1", joiner="or")
@@ -107,18 +118,18 @@ class QueryBuilder:
         now: datetime | None = None,
         tiebreak_cols: Sequence[str] = ("event_id",),
     ) -> None:
+        self._df = self._path = self._table = None
         if isinstance(source, str):
             spark = spark or SparkSession.getActiveSession()
             if spark is None:
                 raise ValueError("pass spark= when source is a path/table name")
             if source.endswith(".parquet") or "/" in source:
-                from solar_logger_spark.io.tables import read_parquet
-
-                self._df = read_parquet(spark, source)
+                self._path = source
             else:
-                self._df = spark.table(source)
+                self._table = source
         else:
-            self._df = source
+            self._df, spark = source, source.sparkSession
+        self._spark = spark
         self.ts_col = ts_col
         self.value_col = value_col
         self.series_cols = list(series_cols)
@@ -153,19 +164,14 @@ class QueryBuilder:
         keep raw rows whose naive hour-of-day lies in ``[start, stop]``
         (both inclusive, Flux semantics); ``start > stop`` wraps
         midnight. A native ``hour(ts)`` conjunct next to the range
-        filter — stays inside the scan's codegen stage, no UDF."""
+        filter — stays inside the scan's codegen stage, no UDF. After
+        the aggregate, ``transform("hourSelection", start=, stop=)``
+        filters the windowed rows the same way."""
         start, stop = int(start), int(stop)
         if not (0 <= start <= 23 and 0 <= stop <= 23):
             raise ValueError(f"hours must be in 0..23: {start}, {stop}")
         self._hour_sel = (start, stop)
         return self
-
-    @staticmethod
-    def _hour_pred(col: Column, start: int, stop: int) -> Column:
-        h = F.hour(col)
-        if start <= stop:
-            return (h >= start) & (h <= stop)
-        return (h >= start) | (h <= stop)
 
     # -- filter ------------------------------------------------------
     def filter(
@@ -183,8 +189,8 @@ class QueryBuilder:
         the band — corrected from the reference's trailing-joiner bug.
         ``new_band=True`` starts a new conjunctive filter stage.
         """
-        if op not in _OPS:
-            raise ValueError(f"unsupported op {op!r}; one of {sorted(_OPS)}")
+        if op not in OPS:
+            raise ValueError(f"unsupported op {op!r}; one of {sorted(OPS)}")
         pred = _Predicate(field, value, op, (joiner or "and").lower())
         if new_band or not self._bands:
             self._bands.append(_Band([pred]))
@@ -295,29 +301,6 @@ class QueryBuilder:
                 .filter(F.col("_rk") <= n)
                 .drop("_rk")
             )
-        if name == "set":
-            # Flux set(key:, value:): add/overwrite a STRING column —
-            # the tag-before-union idiom. A literal column, no shuffle.
-            return df.withColumn(
-                str(params["key"]), F.lit(str(params["value"]))
-            )
-        if name in ("toFloat", "toInt", "toString", "toBool"):
-            # Flux type-conversion stages over the value column.
-            # toInt truncates toward zero (Flux/Go semantics — Spark's
-            # double->long cast already does); toString uses Spark's
-            # native cast rendering (documented divergence from Go
-            # strconv); toBool accepts only exact 0/1 numerics, else
-            # null (Flux errors — null is filterable and hash-stable).
-            v = F.col(val)
-            conv = {
-                "toFloat": v.cast("double"),
-                "toInt": v.cast("bigint"),
-                "toString": v.cast("string"),
-                "toBool": F.when(v == 1, F.lit(True)).when(
-                    v == 0, F.lit(False)
-                ),
-            }[name]
-            return df.withColumn(val, conv)
         if name == "timeWeightedAvg":
             # bare Flux timeWeightedAvg(unit:): whole-table trapezoid
             # mean per series; unit cancels out of the quotient, so it
@@ -342,31 +325,12 @@ class QueryBuilder:
                 df, int(params.get("n", 10)), stat, lowest, series,
                 ts_col=ts, value_col=val, tiebreak=tiebreak,
             )
-        if name == "hourSelection":
-            # post-aggregate hourSelection: filter the CURRENT rows by
-            # their (possibly window-labeled) time's hour-of-day
-            return df.filter(
-                self._hour_pred(
-                    F.col(ts), int(params["start"]), int(params["stop"])
-                )
-            )
         if name == "fill":
-            if "value" in params:
-                # Flux fill(value:) — nulls become the constant
-                return df.withColumn(
-                    val, F.coalesce(F.col(val), F.lit(params["value"]))
-                )
             out = T.forward_fill(
                 df, series, ts_col=ts, value_col=val,
                 tiebreak=tiebreak, alias="_t",
             )
             return out.withColumn(val, F.col("_t")).drop("_t")
-        if name in AGG_FNS:
-            # Bare Flux aggregate (``|> mean()``, ``|> last()``, …):
-            # collapse each series table to one row; Flux drops the time
-            # column on the way. Single hash aggregate with map-side
-            # partial combine — shuffle volume is |series|, not rows.
-            return df.groupBy(*series).agg(agg_expr(name, val, ts).alias(val))
         if name == "integral":
             # Bare Flux ``integral(unit:)``: per series, the trapezoid
             # area under consecutive points over the WHOLE table, in
@@ -447,16 +411,6 @@ class QueryBuilder:
             # running-extreme accumulator updates — flux_parser.
             # _reduce_aggs); one hash aggregate, map-side combinable.
             return df.groupBy(*series).agg(*params["aggs"])
-        if name == "quantile":
-            # Flux quantile(q:) as a bare aggregate. Flux's default
-            # method is a t-digest estimate; ours is the EXACT linearly-
-            # interpolated quantile (documented divergence — exact is
-            # reproducible and oracle-checkable; use the HLL/quantile
-            # sketches in operators/sketches.py for the estimating path)
-            q = float(params.get("q", 0.5))
-            return df.groupBy(*series).agg(
-                F.expr(f"percentile({val}, {q!r})").alias(val)
-            )
         if name == "histogram":
             # Flux histogram(bins:): per series, CUMULATIVE count of
             # values <= each bin upper bound, one row per bound in an
@@ -531,16 +485,6 @@ class QueryBuilder:
             # record-rewrite idiom, restricted to arithmetic over record
             # fields (parsed by flux_parser) or a caller-supplied Column.
             return df.withColumn(params["target"], params["column"])
-        if name == "truncateTimeColumn":
-            # Flux truncateTimeColumn(unit:) — floor the time column to
-            # the unit boundary; pure column arithmetic, no shuffle
-            sec = int(params["unit_seconds"])
-            return df.withColumn(
-                ts,
-                F.timestamp_seconds(
-                    F.floor(F.unix_timestamp(F.col(ts)) / sec) * sec
-                ),
-            )
         if name == "tail":
             # Flux tail(n:): the LAST n records per series by event time
             # — one ranked window on a descending sort, no global sort
@@ -572,10 +516,6 @@ class QueryBuilder:
                 .filter((F.col("_rk") - 1) % n == pos)
                 .drop("_rk")
             )
-        if name == "duplicate":
-            # Flux duplicate(column:, as:) — copy a column under a new
-            # name; pure projection, no shuffle
-            return df.withColumn(params["as"], F.col(params["column"]))
         if name == "window":
             # Flux window(every:[, offset:]) — assign each record to its
             # tumbling window by adding _start/_stop bound columns
@@ -598,16 +538,6 @@ class QueryBuilder:
                 .withColumn("window_stop", F.col("_w.end"))
                 .drop("_w")
             )
-        if name == "keep":
-            # Flux keep(columns:) — project to the listed columns
-            cols = [c for c in params["columns"] if c in df.columns]
-            return df.select(*cols)
-        if name == "drop":
-            return df.drop(*params["columns"])
-        if name == "rename":
-            for old, new in params["columns"].items():
-                df = df.withColumnRenamed(old, new)
-            return df
         if name == "distinct":
             # Flux distinct(): the distinct values of the column per
             # series group; non-group columns are dropped (Flux keeps
@@ -655,79 +585,15 @@ class QueryBuilder:
                 unit_seconds=params.get("unit_seconds", 1.0),
                 alias="duration",
             )
-        fn = {
-            "difference": lambda d: T.difference(
-                d, series, ts_col=ts, value_col=val,
-                tiebreak=tiebreak, alias="_t",
-            ),
-            "derivative": lambda d: T.derivative(
-                d, series, ts_col=ts, value_col=val,
-                tiebreak=tiebreak, alias="_t",
-                non_negative=bool(params.get("non_negative", False)),
-            ),
-            "cumulativeSum": lambda d: T.cumulative_sum(
-                d, series, ts_col=ts, value_col=val,
-                tiebreak=tiebreak, alias="_t",
-            ),
-            "increase": lambda d: T.increase(
-                d, series, ts_col=ts, value_col=val,
-                tiebreak=tiebreak, alias="_t",
-            ),
-            "movingAverage": lambda d: T.moving_average(
-                d, int(params.get("n", 5)), series, ts_col=ts,
-                value_col=val, tiebreak=tiebreak, alias="_t",
-            ),
-            "exponentialMovingAverage": lambda d: T.exponential_moving_average(
-                d, n=int(params.get("n", 5)), series=series, ts_col=ts,
-                value_col=val, tiebreak=tiebreak, alias="_t",
-            ),
-            # Flux relativeStrengthIndex(n:): value replaced in place;
-            # warm-up rows (fewer than n deltas) and flat windows stay
-            # null rather than Flux's row drop / 100-vs-0 edge — the
-            # ts_rsi_events operator's documented, oracle-replayable
-            # semantics (operators/timeseries.rsi)
-            "relativeStrengthIndex": lambda d: T.rsi(
-                d, n=int(params.get("n", 14)), series=series, ts_col=ts,
-                value_col=val, tiebreak=tiebreak, alias="_t",
-            ),
-            # CMO/ER share rsi's in-place-replace, null-on-warm-up
-            # contract (operators/timeseries.cmo / kaufmans_er)
-            "chandeMomentumOscillator": lambda d: T.cmo(
-                d, n=int(params.get("n", 10)), series=series, ts_col=ts,
-                value_col=val, tiebreak=tiebreak, alias="_t",
-            ),
-            "kaufmansER": lambda d: T.kaufmans_er(
-                d, n=int(params.get("n", 10)), series=series, ts_col=ts,
-                value_col=val, tiebreak=tiebreak, alias="_t",
-            ),
-            # KAMA (operators/timeseries.kaufmans_ama): the ER-adaptive
-            # EMA; null warm-up, first full-window row seeds with its
-            # own value, flat windows use ER = 0
-            "kaufmansAMA": lambda d: T.kaufmans_ama(
-                d, n=int(params.get("n", 10)), series=series, ts_col=ts,
-                value_col=val, tiebreak=tiebreak, alias="_t",
-            ),
-            # EMA tower (operators/timeseries.double_ema/triple_ema):
-            # in-sample from the first row, the ts_ema family's
-            # documented divergence from Flux's warm-up drop
-            "doubleEMA": lambda d: T.double_ema(
-                d, n=int(params.get("n", 10)), series=series, ts_col=ts,
-                value_col=val, tiebreak=tiebreak, alias="_t",
-            ),
-            "tripleEMA": lambda d: T.triple_ema(
-                d, n=int(params.get("n", 10)), series=series, ts_col=ts,
-                value_col=val, tiebreak=tiebreak, alias="_t",
-            ),
-            # TRIX (operators/timeseries.trix): 1-lag percent change
-            # of the triple-smoothed EMA; null on each series head and
-            # on a zero previous e3 (documented divergence from Flux's
-            # warm-up drop / Inf)
-            "tripleExponentialDerivative": lambda d: T.trix(
-                d, n=int(params.get("n", 10)), series=series, ts_col=ts,
-                value_col=val, tiebreak=tiebreak, alias="_t",
-            ),
-        }[name]
-        out = fn(df).withColumn(val, F.col("_t")).drop("_t")
+        fname, n_default = _VALUE_STAGES[name]
+        kw = {} if n_default is None else {"n": int(params.get("n", n_default))}
+        if name == "derivative":
+            kw["non_negative"] = bool(params.get("non_negative", False))
+        out = getattr(T, fname)(
+            df, series=series, ts_col=ts, value_col=val,
+            tiebreak=tiebreak, alias="_t", **kw,
+        )
+        out = out.withColumn(val, F.col("_t")).drop("_t")
         # Flux drops rows where the stage is undefined (first row per
         # series for difference/derivative; movingAverage's first n-1
         # rows keep the partial mean — Flux emits those when
@@ -759,53 +625,106 @@ class QueryBuilder:
         self._offset = offset
         return self
 
-    def _resolved_bounds(self) -> tuple[datetime, datetime] | None:
-        """This builder's range as concrete datetimes, when both bounds
-        are statically resolvable (datetime literals, or durations with
-        a pinned ``now``). None → callers fall back to data extent."""
-
-        def _one(bound):
-            if isinstance(bound, datetime):
-                return bound
+    def _static(self, bound):
+        """A range bound as a datetime when it resolves without running
+        anything (a datetime, an ISO timestamp string, or a duration with
+        a pinned ``now``), else None."""
+        if bound is None or isinstance(bound, datetime):
+            return bound
+        try:
+            dur = parse_duration(bound)
+        except (ValueError, TypeError):
             try:
-                dur = parse_duration(bound)
-            except (ValueError, TypeError):
-                try:
-                    return datetime.fromisoformat(str(bound))
-                except ValueError:
-                    return None
-            return dur.add_to(self._now) if self._now is not None else None
+                return datetime.fromisoformat(str(bound))
+            except ValueError:
+                return None
+        return dur.add_to(self._now) if self._now is not None else None
 
-        if self._start is None or self._end is None:
-            return None
-        start, end = _one(self._start), _one(self._end)
-        if start is None or end is None:
-            return None
-        return (start, end)
+    def _bound_sql(self, st: Statement, bound) -> str:
+        """A range bound as SQL: a datetime, an absolute timestamp
+        string, or a Flux duration relative to now (the pinned ``now``
+        when given, else the statement's ``current_timestamp()``)."""
+        if isinstance(bound, datetime):
+            return st.param(bound)
+        try:
+            dur = parse_duration(bound)
+        except ValueError:
+            return f"to_timestamp({st.param(bound)})"
+        if self._now is not None:
+            return st.param(dur.add_to(self._now))
+        anchor = "current_timestamp()"
+        if dur.months:
+            anchor = f"add_months({anchor}, {st.param(dur.months)})"
+        return f"({anchor} + {st.param(timedelta(seconds=int(dur.seconds)))})"
 
     # -- build -------------------------------------------------------
-    def to_df(self) -> DataFrame:
-        """Materialize the plan in the reference's fixed pipeline order:
-        from → range → filter → aggregate → sort."""
-        df = self._df
-        ts = F.col(self.ts_col)
+    def _build(self, prefix: str = "", render_only: bool = False) -> Statement:
+        """Render the pipeline in the reference's fixed order (from →
+        range → filter → aggregate → transforms → sort → limit). The
+        source is the table scan (this builder's static range pushed to
+        it as raw int64), a catalog table, or a DataFrame read as
+        ``{src}``. A stage without a SQL rendering runs the statement so
+        far, applies itself as a DataFrame step, and the next stage
+        starts a new statement over its frame; with ``render_only`` it
+        raises instead."""
+        lo, hi = self._static(self._start), self._static(self._end)
+        if self._df is not None:
+            st = Statement.over(self._df, prefix)
+        elif self._path is not None:
+            # the statement reads a timestamp string in the session time
+            # zone, up to a day off UTC, so its scan bound is widened by
+            # a day: the pushed predicate only has to be a superset
+            day = timedelta(days=1)
+            scan_lo = lo - day if lo and isinstance(self._start, str) else lo
+            scan_hi = hi + day if hi and isinstance(self._end, str) else hi
+            st = Statement(self._spark, prefix)
+            text, st.args = scan_sql(
+                self._spark, self._path,
+                {self.ts_col: (scan_lo, scan_hi)} if lo or hi else None,
+            )
+            st.text, st.columns = esc(text), list(scan_columns(self._spark, self._path))
+        else:
+            st = Statement(self._spark, prefix)
+            st.text = f"FROM IDENTIFIER({st.param(self._table)})"
+            st.columns = list(self._spark.table(self._table).columns)
+
+        def step(name: str, apply) -> None:
+            nonlocal st
+            if render_only:
+                raise ValueError(f"stage {name!r} has no SQL rendering")
+            st = Statement.over(apply(st.frame()), prefix)
+
+        ts, v = ident(self.ts_col), ident(self.value_col)
         if self._start is not None:
-            df = df.filter(ts >= _time_bound(self._start, self._now))
+            st.pipe(f"WHERE {ts} >= {self._bound_sql(st, self._start)}")
         if self._end is not None:
-            df = df.filter(ts < _time_bound(self._end, self._now))
+            st.pipe(f"WHERE {ts} < {self._bound_sql(st, self._end)}")
         if self._hour_sel is not None:
-            df = df.filter(self._hour_pred(ts, *self._hour_sel))
+            st.where_hours(self.ts_col, *self._hour_sel)
         for band in self._bands:
-            df = df.filter(band.column())
+            st.where_band(band.predicates)
         if self._agg is not None:
             every, fn, create_empty = self._agg
-            by = [c for c in self.series_cols if c in df.columns]
-            df = aggregate_window(
-                df, every, fn, by=by, ts_col=self.ts_col,
-                value_col=self.value_col,
-                create_empty=create_empty,
-                bounds=self._resolved_bounds() if create_empty else None,
-            )
+            by = [c for c in self.series_cols if c in st.columns]
+            if create_empty or fn not in AGG_FNS:
+                # the createEmpty spine covers range() when both bounds
+                # resolve, else the data extent
+                step("aggregateWindow", lambda df: aggregate_window(
+                    df, every, fn, by=by, ts_col=self.ts_col,
+                    value_col=self.value_col, create_empty=create_empty,
+                    bounds=(lo, hi) if create_empty and lo and hi else None,
+                ))
+            else:
+                # a plain tumbling window: aggregate_window's plan, one
+                # hash aggregate on (window, series), labeled by stop
+                keys = "".join(f", {ident(c)}" for c in by)
+                width = st.param(duration_to_spark_window(every))
+                st.pipe(
+                    f"AGGREGATE {esc(agg_sql(fn, self.value_col, self.ts_col))}"
+                    f" AS `value` GROUP BY window({ts}, {width}) AS `window`{keys}"
+                )
+                st.pipe(f"SELECT `window`.`end` AS {ts}{keys}, `value`")
+                st.columns = [self.ts_col, *by, "value"]
         run_series = list(self.series_cols)
         for name, params in self._transforms:
             if name == "group":
@@ -813,20 +732,84 @@ class QueryBuilder:
                 # grouping for every stage that follows — pure plan
                 # metadata, no job of its own
                 run_series = list(params.get("columns") or [])
-                continue
-            df = self._apply_transform(df, name, params, run_series)
-            if name == "window":
-                # window() re-keys every later stage per (series, window)
-                run_series = run_series + ["window_start"]
+            elif name == "hourSelection":
+                # post-aggregate: filter the CURRENT rows by their
+                # (possibly window-labeled) time's hour-of-day
+                st.where_hours(self.ts_col, int(params["start"]), int(params["stop"]))
+            elif name in _CONVERSIONS:
+                st.with_column(self.value_col, _CONVERSIONS[name].format(v=v))
+            elif name == "set":
+                # Flux set(key:, value:): add/overwrite a STRING column —
+                # the tag-before-union idiom
+                st.with_column(str(params["key"]), st.param(str(params["value"])))
+            elif name == "duplicate":
+                st.with_column(params["as"], ident(params["column"]))
+            elif name == "fill" and "value" in params:
+                # Flux fill(value:) — nulls become the constant
+                st.with_column(self.value_col, f"coalesce({v}, {st.param(params['value'])})")
+            elif name == "truncateTimeColumn":
+                # floor the time column to the unit boundary
+                sec = st.param(int(params["unit_seconds"]))
+                st.with_column(
+                    self.ts_col,
+                    f"timestamp_seconds((FLOOR((unix_timestamp({ts}) / {sec})) * {sec}))",
+                )
+            elif name in AGG_FNS or name == "quantile":
+                # Bare Flux aggregate (``|> mean()``, ``|> last()``, …):
+                # collapse each series table to one row; Flux drops the
+                # time column on the way. One hash aggregate with
+                # map-side partial combine — shuffle volume is |series|.
+                # quantile(q:) is the EXACT linearly-interpolated
+                # quantile, not Flux's t-digest estimate (documented
+                # divergence — exact is reproducible and oracle-checkable)
+                series = [c for c in run_series if c in st.columns]
+                agg = (
+                    f"percentile({v}, {st.param(float(params.get('q', 0.5)))})"
+                    if name == "quantile"
+                    else esc(agg_sql(name, self.value_col, self.ts_col))
+                )
+                st.pipe(f"AGGREGATE {agg} AS {v}" + (
+                    f" GROUP BY {', '.join(map(ident, series))}" if series else ""
+                ))
+                st.columns = [*series, self.value_col]
+            elif name == "keep":
+                # Flux keep(columns:) — project to the listed columns
+                st.select([(c, c) for c in params["columns"] if c in st.columns])
+            elif name == "drop":
+                st.select([(c, c) for c in st.columns if c not in params["columns"]])
+            elif name == "rename":
+                st.select([(c, params["columns"].get(c, c)) for c in st.columns])
+            else:
+                step(name, lambda df, name=name, params=params, series=run_series:
+                     self._apply_transform(df, name, params, series))
+                if name == "window":
+                    # window() re-keys every later stage per (series, window)
+                    run_series = run_series + ["window_start"]
         for fld, desc in self._sorts:
-            df = df.orderBy(F.col(fld).desc() if desc else F.col(fld).asc())
+            st.pipe(f"ORDER BY {ident(fld)} {'DESC' if desc else 'ASC'}")
         if self._projection:
-            df = df.select(*self._projection)
+            st.select([(c, c) for c in self._projection])
         if self._limit is not None:
-            if self._offset:
-                df = df.offset(self._offset)
-            df = df.limit(self._limit)
-        return df
+            off = f" OFFSET {st.param(self._offset)}" if self._offset else ""
+            st.pipe(f"LIMIT {st.param(self._limit)}{off}")
+        return st
+
+    def to_sql(self) -> tuple[str, dict]:
+        """The pipeline as one Spark SQL pipe statement: ``(text, args)``
+        for ``spark.sql(text, args)``. Every user value is a named
+        parameter in ``args``; the text holds only SQL, parameter
+        markers and quoted identifiers. A DataFrame source appears as
+        ``{src}`` (pass it as ``spark.sql(text, args, src=df)``). Raises
+        ``ValueError`` when a stage has no SQL rendering."""
+        st = self._build(render_only=True)
+        return st.sql(), dict(st.args)
+
+    def to_df(self) -> DataFrame:
+        """Materialize the plan in the reference's fixed pipeline order:
+        from → range → filter → aggregate → sort — one ``spark.sql``
+        statement from the scan up to the first stage without a SQL
+        rendering (see the module docstring)."""
+        return self._build().frame()
 
     # -- rendering ----------------------------------------------------
     def to_flux(self) -> str:
@@ -855,6 +838,8 @@ class QueryBuilder:
                 f"stop: {self._hour_sel[1]})"
             )
         def _lit(v) -> str:
+            if isinstance(v, bool):
+                return "true" if v else "false"
             if isinstance(v, str):
                 return '"' + v.replace("\\", "\\\\").replace('"', '\\"') + '"'
             return repr(v)
@@ -866,6 +851,10 @@ class QueryBuilder:
                     vals = p.value if isinstance(p.value, (list, tuple, set)) else [p.value]
                     items = ", ".join(_lit(v) for v in vals)
                     term = f'contains(value: r["{p.field}"], set: [{items}])'
+                elif p.op == "=~":
+                    # Flux's regex literal: /pattern/, its slashes escaped
+                    pattern = str(p.value).replace("/", "\\/")
+                    term = f'r["{p.field}"] =~ /{pattern}/'
                 else:
                     term = f'r["{p.field}"] {p.op} {_lit(p.value)}'
                 if i > 0:

@@ -32,10 +32,12 @@ from pyspark.sql import DataFrame
 
 from solar_logger_spark.query.builder import QueryBuilder
 
+# a term's value: a quoted string, a regex literal /…/ (which may hold
+# ")" and "|"; "\/" escapes a slash), or a bare number/bool
 _PRED = re.compile(
     r"r\[\"(?P<field>[^\"]+)\"\]\s*"
     r"(?P<op>==|!=|=~|<=|>=|<|>)\s*"
-    r"(?P<value>\"[^\"]*\"|'[^']*'|[^\s)]+)"
+    r"(?P<value>\"[^\"]*\"|'[^']*'|/(?:\\.|[^/\\])*/|[^\s)]+)"
 )
 # Flux's membership test: contains(value: r["f"], set: ["a", "b"])
 _CONTAINS = re.compile(
@@ -74,14 +76,16 @@ class FluxPipeline:
 
     def to_builder(
         self,
-        df: DataFrame,
+        source: DataFrame | str,
         field_map: dict[str, str] | None = None,
         **builder_kwargs,
     ) -> QueryBuilder:
-        """Bind to a DataFrame as a QueryBuilder (corrected semantics).
-        Flux's canonical record fields ``_value``/``_time`` map to the
-        builder's value/ts columns unless ``field_map`` overrides."""
-        qb = QueryBuilder(df, **builder_kwargs)
+        """Bind to a source — a parquet path, a table name or a
+        DataFrame, as :class:`QueryBuilder` takes it — as a QueryBuilder
+        (corrected semantics). Flux's canonical record fields
+        ``_value``/``_time`` map to the builder's value/ts columns unless
+        ``field_map`` overrides."""
+        qb = QueryBuilder(source, **builder_kwargs)
         fmap = {"_value": qb.value_col, "_time": qb.ts_col}
         fmap.update(field_map or {})
         if self.group_cols is not None:
@@ -164,6 +168,17 @@ def _unquote(tok: str):
         return tok
 
 
+def _term_value(tok: str):
+    """A filter term's value: a regex literal ``/…/`` reads as its
+    pattern, ``true``/``false`` as bools, anything else as
+    :func:`_unquote` reads it."""
+    if len(tok) >= 2 and tok[0] == tok[-1] == "/":
+        return tok[1:-1].replace("\\/", "/")
+    if tok.lower() in ("true", "false"):
+        return tok.lower() == "true"
+    return _unquote(tok)
+
+
 def _strarg(tok: str) -> str:
     """A string argument from a ``_parse_args`` token: quoted tokens
     already exclude the call's closing paren (the regex's quoted
@@ -203,10 +218,10 @@ def _parse_band(stage: str, body: str) -> list[tuple[str, str, object, str]]:
     pos, joiner = head.end(), "and"
     while m := _PRED.match(body, pos) or _CONTAINS.match(body, pos):
         if m.re is _PRED:
-            value = _unquote(m.group("value").rstrip(")"))
+            value = _term_value(m.group("value").rstrip(")"))
             band.append((m.group("field"), m.group("op"), value, joiner))
         else:
-            values = [_unquote(t) for t in _SET_ITEM.findall(m.group("set"))]
+            values = [_term_value(t) for t in _SET_ITEM.findall(m.group("set"))]
             band.append((m.group("field"), "in", values, joiner))
         pos = m.end()
         j = _JOINER.match(body, pos)
@@ -964,54 +979,55 @@ class FluxScript:
         field_map: dict[str, str] | None = None,
         **builder_kwargs,
     ) -> DataFrame:
-        """Bind and execute. ``resolve(bucket_name) -> DataFrame`` maps
-        each ``from(bucket:)`` to its source table.
+        """Bind and execute. ``resolve(bucket_name)`` maps each
+        ``from(bucket:)`` to its source: a parquet path (preferred: the
+        pipeline then starts at the table scan) or a DataFrame.
 
         Join semantics follow Flux ``join()``: inner equi-join on the
         ``on`` columns; non-key columns present on both sides get a
-        ``_<table>`` suffix. The join keys shuffle both sides once —
-        with a small side, Spark's planner broadcasts it (AQE) — and
-        trailing stages run on the combined stream.
+        ``_<table>`` suffix. The two pipelines are the CTEs of one SQL
+        statement that joins them ``USING`` the keys — with a small
+        side, Spark's planner broadcasts it (AQE) — and trailing stages
+        run on the combined stream.
         """
-        from pyspark.sql import functions as F
-
         if self.combine is None:
             raise ValueError("script has no join()/union() result statement")
         qb_kwargs = dict(builder_kwargs)
         fmap = {"_value": qb_kwargs.get("value_col", "value"),
                 "_time": qb_kwargs.get("ts_col", "ts")}
         fmap.update(field_map or {})
-        bound: dict[str, DataFrame] = {}
-        for name in self.tables:
-            pipe = self.pipelines[name]
-            df = resolve(pipe.bucket)
-            bound[name] = pipe.to_builder(
-                df, field_map=field_map, **builder_kwargs
-            ).to_df()
+        bound = {
+            name: self.pipelines[name].to_builder(
+                resolve(self.pipelines[name].bucket),
+                field_map=field_map, **builder_kwargs,
+            )
+            for name in self.tables
+        }
         kind, arg = self.combine
         names = list(self.tables)
         if kind == "union":
-            out = bound[names[0]]
+            out = bound[names[0]].to_df()
             for name in names[1:]:
-                out = out.unionByName(bound[name], allowMissingColumns=True)
+                out = out.unionByName(bound[name].to_df(), allowMissingColumns=True)
         else:
             keys = [fmap.get(k, k) for k in arg["on"]]
             how = {
-                "inner": "inner",
-                "left": "left_outer",
-                "right": "right_outer",
-                "full": "full_outer",
+                "inner": "JOIN",
+                "left": "LEFT OUTER JOIN",
+                "right": "RIGHT OUTER JOIN",
+                "full": "FULL OUTER JOIN",
             }.get(arg.get("method", "inner"))
             if how is None:
                 raise ValueError(f"unsupported join method {arg['method']!r}")
-            left_name, right_name = names[0], names[1]
-            left, right = bound[left_name], bound[right_name]
+            left = bound[names[0]]._build(prefix="l_")
+            right = bound[names[1]]._build(prefix="r_")
             # Flux suffixes colliding non-key columns with _<table>
             shared = (set(left.columns) & set(right.columns)) - set(keys)
-            for c in sorted(shared):
-                left = left.withColumnRenamed(c, f"{c}_{left_name}")
-                right = right.withColumnRenamed(c, f"{c}_{right_name}")
-            out = left.join(right, keys, how)
+            if shared:
+                for st, name in ((left, names[0]), (right, names[1])):
+                    st.select([(c, f"{c}_{name}" if c in shared else c)
+                               for c in st.columns])
+            out = left.join(right, keys, how).frame()
         if self.post is not None:
             qb = self.post.to_builder(out, field_map=field_map, **qb_kwargs)
             return qb.to_df()

@@ -1080,12 +1080,12 @@ def test_timed_moving_average_rejects_period_below_every():
 def test_execute_text_mode_skew_kurtosis(spark, sf_dir):
     """r11: mode()/skew()/kurtosis() through TEXT — both as the
     aggregateWindow fn and as a bare per-series collapse — equal the
-    native aggregate_window / AGG_FNS paths bitwise."""
+    native aggregate_window / agg_expr paths bitwise."""
     from pyspark.sql import functions as F
 
     from solar_logger_spark.io.tables import load_table
     from solar_logger_spark.operators.window_agg import (
-        AGG_FNS, aggregate_window,
+        agg_expr, aggregate_window,
     )
 
     events = load_table(spark, sf_dir, "events")
@@ -1121,7 +1121,7 @@ def test_execute_text_mode_skew_kurtosis(spark, sf_dir):
     )
     assert "ts" not in bare.columns
     want = base.groupBy("event_type").agg(
-        AGG_FNS["mode"](F.col("value"), F.col("ts")).alias("value"))
+        agg_expr("mode", "value", "ts").alias("value"))
     assert sorted((r.event_type, r.value) for r in bare.collect()) == sorted(
         (r.event_type, r.value) for r in want.collect())
 
@@ -1350,20 +1350,32 @@ def test_roundtrip_renderer_r11_stages(spark, sf_dir):
     second."""
     from datetime import datetime
 
+    from pyspark.sql import functions as F
+
     from solar_logger_spark.io.tables import load_table
     from solar_logger_spark.query.builder import QueryBuilder
 
     events = load_table(spark, sf_dir, "events")
 
-    def roundtrip(qb):
+    def roundtrip(qb, source=events):
         text = qb.to_flux()
-        reparsed = parse_flux(text).to_builder(
-            events, ts_col="ts", value_col="value",
+        parsed = parse_flux(text)
+        # every filter term reads back as the same (field, op, value)
+        assert [
+            [(f, op, v, type(v)) for f, op, v, _ in band]
+            for band in parsed.bands
+        ] == [
+            [(p.field, p.op, p.value, type(p.value)) for p in band.predicates]
+            for band in qb._bands
+        ], text
+        reparsed = parsed.to_builder(
+            source, ts_col="ts", value_col="value",
             series_cols=("event_type",),
         )
         want = sorted(map(tuple, qb.to_df().collect()))
         got = sorted(map(tuple, reparsed.to_df().collect()))
         assert got == want and len(got) > 0, text
+        return text
 
     roundtrip(
         QueryBuilder(
@@ -1411,6 +1423,19 @@ def test_roundtrip_renderer_r11_stages(spark, sf_dir):
         builder().filter("event_type", "purchase")
         .sort("event_id").limit(5, offset=3)
     )
+    # a regex renders as Flux's /…/ literal, which may hold ")" and "|",
+    # and a bool as true/false; both read back as the same term
+    text = roundtrip(builder().filter("event_type", "^(cl|vi)", op="=~"))
+    assert 'r["event_type"] =~ /^(cl|vi)/' in text
+    flagged = events.withColumn("ok", F.col("value") > 50)
+    text = roundtrip(
+        QueryBuilder(
+            flagged, ts_col="ts", value_col="value",
+            series_cols=("event_type",),
+        ).filter("ok", True).filter("event_type", "view", op="!="),
+        flagged,
+    )
+    assert 'r["ok"] == true' in text
 
 
 def test_execute_text_state_changes_and_event_duration(spark, sf_dir):
