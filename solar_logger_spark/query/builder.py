@@ -27,6 +27,7 @@ left ``NotImplemented`` — ours works).
 
 from __future__ import annotations
 
+import re
 from collections.abc import Iterator, Sequence
 from dataclasses import dataclass, field as dc_field
 from datetime import datetime, timedelta
@@ -76,6 +77,10 @@ _CONVERSIONS = {
     "toString": "CAST({v} AS STRING)",
     "toBool": "CASE WHEN ({v} = 1) THEN true WHEN ({v} = 0) THEN false END",
 }
+
+
+# in a regex, a backslash pair ("\d", "\/", "\\") or a bare slash
+_REGEX_SLASH = re.compile(r"\\.|/", re.S)
 
 
 @dataclass
@@ -711,7 +716,8 @@ class QueryBuilder:
                 # resolve, else the data extent
                 step("aggregateWindow", lambda df: aggregate_window(
                     df, every, fn, by=by, ts_col=self.ts_col,
-                    value_col=self.value_col, create_empty=create_empty,
+                    value_col=self.value_col, alias=self.value_col,
+                    create_empty=create_empty,
                     bounds=(lo, hi) if create_empty and lo and hi else None,
                 ))
             else:
@@ -721,10 +727,10 @@ class QueryBuilder:
                 width = st.param(duration_to_spark_window(every))
                 st.pipe(
                     f"AGGREGATE {esc(agg_sql(fn, self.value_col, self.ts_col))}"
-                    f" AS `value` GROUP BY window({ts}, {width}) AS `window`{keys}"
+                    f" AS {v} GROUP BY window({ts}, {width}) AS `window`{keys}"
                 )
-                st.pipe(f"SELECT `window`.`end` AS {ts}{keys}, `value`")
-                st.columns = [self.ts_col, *by, "value"]
+                st.pipe(f"SELECT `window`.`end` AS {ts}{keys}, {v}")
+                st.columns = [self.ts_col, *by, self.value_col]
         run_series = list(self.series_cols)
         for name, params in self._transforms:
             if name == "group":
@@ -852,8 +858,11 @@ class QueryBuilder:
                     items = ", ".join(_lit(v) for v in vals)
                     term = f'contains(value: r["{p.field}"], set: [{items}])'
                 elif p.op == "=~":
-                    # Flux's regex literal: /pattern/, its slashes escaped
-                    pattern = str(p.value).replace("/", "\\/")
+                    # Flux's regex literal: /pattern/, a bare slash
+                    # escaped as \/ and every backslash pair kept as written
+                    pattern = _REGEX_SLASH.sub(
+                        lambda m: "\\/" if m.group() == "/" else m.group(), str(p.value)
+                    )
                     term = f'r["{p.field}"] =~ /{pattern}/'
                 else:
                     term = f'r["{p.field}"] {p.op} {_lit(p.value)}'

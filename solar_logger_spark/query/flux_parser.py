@@ -44,6 +44,9 @@ _CONTAINS = re.compile(
     r"contains\(\s*value:\s*r\[\"(?P<field>[^\"]+)\"\]\s*,\s*"
     r"set:\s*\[(?P<set>[^\]]*)\]\s*\)"
 )
+# inside a regex literal "\/" is a slash; every other backslash pair
+# ("\d", "\\") is kept as written, so "\\\/" reads as "\\/"
+_REGEX_PAIR = re.compile(r"\\.", re.S)
 _SET_ITEM = re.compile(r"\"[^\"]*\"|'[^']*'|[^,\s]+")
 _JOINER = re.compile(r"\s*(and|or)\b\s*", re.IGNORECASE)
 _FN_HEAD = re.compile(r"\s*fn:\s*\(\s*r\s*\)\s*=>\s*")
@@ -173,7 +176,9 @@ def _term_value(tok: str):
     pattern, ``true``/``false`` as bools, anything else as
     :func:`_unquote` reads it."""
     if len(tok) >= 2 and tok[0] == tok[-1] == "/":
-        return tok[1:-1].replace("\\/", "/")
+        return _REGEX_PAIR.sub(
+            lambda m: "/" if m.group() == "\\/" else m.group(), tok[1:-1]
+        )
     if tok.lower() in ("true", "false"):
         return tok.lower() == "true"
     return _unquote(tok)

@@ -4,6 +4,24 @@ Local testing runs ``local[N]``; the same conf block is what we would ship
 to a 1000-executor cluster — AQE (runtime re-planning, skew-join
 splitting, partition coalescing), Arrow for the few pandas-UDF paths, and
 shuffle-partition counts sized to the environment.
+
+Python workers. Every Python task (a decode ``mapInArrow``, a pandas
+UDF, a Python RDD) pays the worker hand-off, and on a small micro-batch
+that hand-off was most of the batch. ``spark.python.daemon.module`` is
+:mod:`solar_logger_spark.worker_daemon`, PySpark's daemon with
+``zipimporter.invalidate_caches`` made to re-read an archive only when it
+changed. On CPython 3.11 the worker's per-task
+``importlib.invalidate_caches()`` re-parsed ``pyspark.zip`` and the
+``spark-core`` jar through 14 importers, 110–200 ms a task.
+
+Measured on 4 vCPUs, min of 12, two runs a side: a ``mapInArrow``
+identity over 1,000 rows took 173–204 ms before and 98–107 ms after (a
+JVM-only ``collect`` of the same rows: 21–26 ms); a Python RDD ``count``
+127–146 → 68–74 ms. PySpark's Unix-domain-socket hand-off
+(``spark.python.unix.domain.socket.enabled``) took about 35 ms more off
+a task in process, but the ingest benchmark read the same with and
+without it (5 of 10 alternating pairs, SCALING.md), so the workers keep
+loopback TCP.
 """
 
 from __future__ import annotations
@@ -87,6 +105,14 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # Python workers (see the module docstring): a daemon that reads
+        # each zip archive on sys.path once, not before every task
+        .config("spark.python.daemon.module", "solar_logger_spark.worker_daemon")
+        # the workers import that module from this checkout or install
+        .config("spark.executorEnv.PYTHONPATH", os.pathsep.join(filter(None, [
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            os.environ.get("PYTHONPATH"),
+        ])))
     )
     # Optional conf overrides/extensions: "k1=v1;k2=v2". Lets the bench
     # A/B candidate configs without code edits, and lets a cluster

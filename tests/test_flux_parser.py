@@ -1348,6 +1348,7 @@ def test_roundtrip_renderer_r11_stages(spark, sf_dir):
     (pre-agg builder form), a selector, a conversion, and the
     mode aggregate in one pipeline; timeWeightedAvg+kaufmansAMA in a
     second."""
+    import re
     from datetime import datetime
 
     from pyspark.sql import functions as F
@@ -1357,15 +1358,23 @@ def test_roundtrip_renderer_r11_stages(spark, sf_dir):
 
     events = load_table(spark, sf_dir, "events")
 
+    # a regex term compares by what it matches, not by its text
+    probes = ["cl", "vi/ab/12", "cl\\/", "view/x", "vi12/3", "click"]
+
+    def term(field, op, value):
+        if op == "=~":
+            value = [bool(re.search(value, s)) for s in probes]
+        return field, op, value, type(value)
+
     def roundtrip(qb, source=events):
         text = qb.to_flux()
         parsed = parse_flux(text)
         # every filter term reads back as the same (field, op, value)
         assert [
-            [(f, op, v, type(v)) for f, op, v, _ in band]
+            [term(f, op, v) for f, op, v, _ in band]
             for band in parsed.bands
         ] == [
-            [(p.field, p.op, p.value, type(p.value)) for p in band.predicates]
+            [term(p.field, p.op, p.value) for p in band.predicates]
             for band in qb._bands
         ], text
         reparsed = parsed.to_builder(
@@ -1427,6 +1436,10 @@ def test_roundtrip_renderer_r11_stages(spark, sf_dir):
     # and a bool as true/false; both read back as the same term
     text = roundtrip(builder().filter("event_type", "^(cl|vi)", op="=~"))
     assert 'r["event_type"] =~ /^(cl|vi)/' in text
+    # a bare slash renders as \/, every backslash pair (\/, \w) as
+    # written, and the reparsed regex matches what the original does
+    text = roundtrip(builder().filter("event_type", r"^(cl|vi)\/?\w*(/\d+)?$", op="=~"))
+    assert r'r["event_type"] =~ /^(cl|vi)\/?\w*(\/\d+)?$/' in text
     flagged = events.withColumn("ok", F.col("value") > 50)
     text = roundtrip(
         QueryBuilder(

@@ -149,3 +149,21 @@ def test_flux_text_pipeline_pushes_raw_int64_range(spark, sf_dir, tmp_path):
     assert f"GreaterThanOrEqual(ts,{lo})" in plan
     assert f"LessThan(ts,{hi})" in plan
     assert _rows(df) == _rows(q(spark, sf_dir)) and len(_rows(df)) > 0
+
+
+@pytest.mark.parametrize("create_empty", [False, True])
+def test_aggregate_window_output_is_named_value_col(spark, sf_dir, create_empty):
+    events = load_table(spark, sf_dir, "events")
+
+    def build(df, value_col):
+        return (
+            QueryBuilder(df, value_col=value_col, series_cols=("event_type",))
+            .range(T0, T1)
+            .aggregate_window("1d", "mean", create_empty=create_empty)
+            .transform("difference")
+        )
+
+    got = build(events.withColumnRenamed("value", "v"), "v").to_df()
+    want = build(events, "value").to_df()
+    assert got.columns == [("v" if c == "value" else c) for c in want.columns]
+    assert _rows(got) == _rows(want) and len(_rows(want)) > 0

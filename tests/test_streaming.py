@@ -230,6 +230,105 @@ def test_data_points_decodes_once_below_device_gate(spark, tmp_path):
     assert gate and gate[0] > python_nodes[0], plan
 
 
+def test_topic_routing_keeps_device_names_out_of_sql_text(spark, monkeypatch):
+    """A device name holding quotes, a backtick and ``) OR (1=1`` is
+    routed as the Column form routed it, gates as a parameter, and never
+    enters a statement's text."""
+    odd = "x'`) OR (1=1"
+    ts = datetime(2024, 1, 1)
+    fx_pkt, _ = _packet("fx-1", 1704067200, 1.0)
+    raw = _raw_df(spark, [
+        (f"mate/{odd}/status", b"online", ts),
+        (f"mate/{odd}/{odd[:2]}-status", b"\x00" * 8, ts),
+        ("mate/status", b"online", ts),
+        ("mate/fx-1/fx-status", fx_pkt, ts),
+        ("mate/fx-1/status/extra", b"x", ts),
+    ])
+    texts = []
+    sql = type(spark).sql
+
+    def recorded(self, text, *args, **kwargs):
+        texts.append(text)
+        return sql(self, text, *args, **kwargs)
+
+    monkeypatch.setattr(type(spark), "sql", recorded)
+    routed = I.split_topic(raw)
+    got = sorted(map(tuple, routed.select("topic", "device", "kind").collect()))
+    statuses = sorted(map(tuple, I.status_updates(raw).select("device", "status").collect()))
+    gated = I.data_points(raw, devices=[odd]).collect()
+    kept = I.data_points(raw, devices=[odd, "fx-1"]).collect()
+    monkeypatch.undo()
+
+    # the Column form this rendering replaced
+    parts = F.split(F.col("topic"), "/")
+    is_mate = F.col("topic") == I.MATE_STATUS_TOPIC
+    leaf = parts.getItem(2)
+    want = raw.select(
+        "topic",
+        F.when(is_mate, F.lit("mate")).otherwise(parts.getItem(1)).alias("device"),
+        F.when(is_mate, F.lit("status"))
+        .when(leaf == "status", F.lit("status"))
+        .when(leaf == F.concat(parts.getItem(1).substr(1, 2), F.lit("-status")), F.lit("data"))
+        .otherwise(F.lit("other")).alias("kind"),
+    )
+    assert got == sorted(map(tuple, want.collect()))
+    assert (odd, "status") in {(d, k) for _, d, k in got}
+    assert statuses == sorted([(odd, "online"), ("mate", "online"), ("fx-1", "x")])
+    assert gated == []  # no fx-1 point slips through the IN list
+    assert {r.measurement for r in kept} == {"fx-1"}
+    assert texts and not any(odd in t or "OR (1=1" in t for t in texts)
+
+
+def test_committing_batch_makes_few_py4j_calls(spark, tmp_path, monkeypatch):
+    """A warm micro-batch of 1,000 packets whose statuses commit a new
+    dimension snapshot makes at most 300 py4j calls: each branch is one
+    SQL statement over the batch and the dimension one Arrow table."""
+    import py4j.clientserver as cs
+    from py4j import protocol
+
+    from solar_logger_spark.io import merge as M
+
+    devices = list(D.MEASUREMENT_FIELDS)
+    packets = {d: _packet(d, 1704067200, 1.0)[0] for d in devices}
+    proc = I.IngestBatchProcessor(str(tmp_path / "out"))
+
+    def batch(epoch):
+        ts = datetime(2024, 1, 1, 0, epoch)
+        rows = [(f"mate/{d}/status", b"online", ts) for d in devices]
+        rows += [
+            (f"mate/{d}/{d[:2]}-status", packets[d], ts)
+            for d in (devices[j % len(devices)] for j in range(1000))
+        ]
+        path = str(tmp_path / f"in-{epoch}")
+        _raw_df(spark, rows).coalesce(1).write.parquet(path)
+        return spark.read.schema(I.RAW_SCHEMA).parquet(path)
+
+    proc(batch(0), 0)  # cold: bootstraps the dimension
+    df = batch(1)
+    dim_path = str(tmp_path / "out" / "_status_dim")
+    before = M.current_snapshot(dim_path)
+    calls = [0]
+    send = cs.ClientServerConnection.send_command
+
+    # py4j's finalizer thread sends a proxy delete whenever Python frees
+    # a Java object, freed by this call or by any earlier work; only the
+    # commands the batch itself asks for are counted
+    delete = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+
+    def counted(self, command, *args, **kwargs):
+        calls[0] += not command.startswith(delete)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counted)
+    proc(df, 1)
+    monkeypatch.undo()
+    assert M.current_snapshot(dim_path) != before  # the dimension committed
+    assert calls[0] <= 300, calls[0]
+    points = spark.read.parquet(str(tmp_path / "out" / "points"))
+    per_batch = sum(len(D.MEASUREMENT_FIELDS[devices[j % len(devices)]]) for j in range(1000))
+    assert points.count() == 2 * per_batch
+
+
 # ---------------------------------------------------------------------------
 # end-to-end streaming: file replay → decode → gate → partitioned sink
 # ---------------------------------------------------------------------------
